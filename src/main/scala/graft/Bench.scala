@@ -70,6 +70,33 @@ object Bench {
       .map { case (n, m) => "\"" + n + "\":" + f"$m%.3f" }
       .mkString("{", ",", "}")
 
+  /** One timed trial: wall seconds, and whether the query threw. */
+  private[graft] final case class Trial(seconds: Double, failed: Boolean)
+
+  /** Time `body`. A throw is logged and recorded as a failed trial —
+    * never as a fast success. */
+  private[graft] def timed(name: String)(body: => Unit): Trial = {
+    val t0 = System.nanoTime()
+    val failed =
+      try { body; false }
+      catch { case e: Throwable => System.err.println(s"[bench] $name: $e"); true }
+    Trial((System.nanoTime() - t0) / 1e9, failed)
+  }
+
+  /** The short line's `failed` value: how many queries threw in at
+    * least one trial, and the first `k` of their names in name order
+    * (capped so the line stays under the tail cap however many fail). */
+  private[graft] def failedJson(failed: Seq[String], k: Int = 10): String =
+    failed.sorted.take(k).map("\"" + _ + "\"")
+      .mkString(s"""{"n":${failed.size},"queries":[""", ",", "]}")
+
+  /** The one short stdout line a bench reader parses; `failed` is
+    * added after the original keys, which keep their order. */
+  private[graft] def shortLine(total: Double, topQs: String, queriesN: Int,
+      sf: String, detail: String, stealDelta: Long, loadEnd: Double,
+      membw: Double, trials: Int, failed: String): String =
+    s"""{"metric":"total","value":$total,"unit":"sec","total_sec":$total,"queries":$topQs,"queries_n":$queriesN,"sf":"$sf","detail":"$detail","steal_delta":$stealDelta,"load_end":$loadEnd,"membw_gbps":$membw,"trials":$trials,"failed":$failed}"""
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
@@ -114,40 +141,42 @@ object Bench {
     }
 
     def trial(name: String,
-        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
+        fn: (SparkSession, String) => org.apache.spark.sql.DataFrame): Trial = {
       // Each trial runs from a clean cache: operators persist
       // intermediate frames (signature/bucket tables) that would
       // otherwise accumulate across all queries and evict each other
       // under memory pressure, charging later queries for earlier ones.
       spark.catalog.clearCache()
-      val t0 = System.nanoTime()
       // noop-format write forces full evaluation of every column
       // (count() would let Catalyst prune projection-only plans).
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable => System.err.println(s"[bench] $name: $e") }
-      (System.nanoTime() - t0) / 1e9
+      timed(name)(fn(spark, sfDir).write.format("noop").mode("overwrite").save())
     }
 
     val results = wanted.map { case (name, fn) =>
-      var times = (0 until trials).map(_ => trial(name, fn)).sorted
+      var runs = (0 until trials).map(_ => trial(name, fn))
+      def times = runs.map(_.seconds).sorted
+      def failedN = runs.count(_.failed)
       var rerunsLeft = retries
       def median = times(times.length / 2)
       // contention gate only engages above 200 ms: below it the spread
-      // is JIT/GC noise on trivial work, not machine contention
-      while (rerunsLeft > 0 && median > spreadGate * times.head &&
+      // is JIT/GC noise on trivial work, not machine contention; a
+      // query that threw is not rerun — its times measure the crash
+      while (rerunsLeft > 0 && failedN == 0 && median > spreadGate * times.head &&
           median > 0.2) {
-        times = (times ++ (0 until trials).map(_ => trial(name, fn))).sorted
+        runs = runs ++ (0 until trials).map(_ => trial(name, fn))
         rerunsLeft -= 1
       }
-      name -> (median, times.head, times.last, times.length)
+      name -> (median, times.head, times.last, times.length, failedN)
     }
     val loadEnd = loadAvg()
     val stealEnd = stealTicks()
-    val qs = results.map { case (k, (med, _, _, _)) => s"\"" + k + "\":" + med }
+    val qs = results.map { case (k, (med, _, _, _, _)) => s"\"" + k + "\":" + med }
       .mkString("{", ",", "}")
-    val spreads = results.map { case (k, (med, mn, mx, n)) =>
+    // `failed` flags a median taken over trials that threw: it times
+    // the crash, not the query
+    val spreads = results.map { case (k, (med, mn, mx, n, f)) =>
       val contended = if (med > spreadGate * mn && med > 0.2) "true" else "false"
-      s""""$k":{"min":$mn,"med":$med,"max":$mx,"n":$n,"contended":$contended}"""
+      s""""$k":{"min":$mn,"med":$med,"max":$mx,"n":$n,"contended":$contended,"failed":$f}"""
     }.mkString("{", ",", "}")
     val total = if (results.nonEmpty) results.values.map(_._1).sum else 0.0
     val line = s"""{"metric":"total","value":$total,"unit":"sec","queries":$qs,"sf":"$sfDir","spreads":$spreads,"load":{"start":$loadStart,"end":$loadEnd,"cpus":$cpus,"trials":$trials,"steal_start":$stealStart,"steal_end":$stealEnd,"membw_gbps":$membw,"membw_gbps_end":${membwGbps()}}}"""
@@ -187,8 +216,11 @@ object Bench {
     // the full count the r16 line carried.
     val stealDelta = if (stealStart >= 0 && stealEnd >= 0) stealEnd - stealStart else -1L
     val topQs = shortQueriesJson(
-      results.map { case (k, (med, _, _, _)) => k -> med }.toSeq)
-    val short = s"""{"metric":"total","value":$total,"unit":"sec","total_sec":$total,"queries":$topQs,"queries_n":${results.size},"sf":"$sfDir","detail":"$out","steal_delta":$stealDelta,"load_end":$loadEnd,"membw_gbps":$membw,"trials":$trials}"""
+      results.map { case (k, (med, _, _, _, _)) => k -> med }.toSeq)
+    val failed = failedJson(
+      results.collect { case (k, (_, _, _, _, f)) if f > 0 => k }.toSeq)
+    val short = shortLine(total, topQs, results.size, sfDir, out, stealDelta,
+      loadEnd, membw, trials, failed)
     println(short)
     spark.stop()
   }

@@ -13,6 +13,7 @@ import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
 import org.locationtech.jts.geom.Geometry
+import org.locationtech.jts.geom.prep.{PreparedGeometry, PreparedGeometryFactory}
 import org.locationtech.jts.operation.union.UnaryUnionOp
 
 import graft.geom.Wkb
@@ -38,7 +39,8 @@ abstract class GeomExpression extends Expression with CodegenFallback {
   /** Eval with all child values non-null. */
   protected def evalNotNull(vs: Seq[Any]): Any
 
-  protected def geom(v: Any): Geometry = Wkb.read(v.asInstanceOf[Array[Byte]])
+  protected def wkb(v: Any): Array[Byte] = v.asInstanceOf[Array[Byte]]
+  protected def geom(v: Any): Geometry = Wkb.read(wkb(v))
   protected def dbl(v: Any): Double = v.asInstanceOf[Double]
 }
 
@@ -76,32 +78,96 @@ case class STPolygon(children: Seq[Expression]) extends GeomExpression {
   override def prettyName: String = "st_polygon"
 }
 
-/** st_within(a, b) — true iff a ⊆ b (G4; ref wrf_voronoi.py:144). */
+/** st_within(a, b) — true iff a ⊆ b (G4; ref wrf_voronoi.py:144).
+  * JTS defines `a.within(b)` as `b.contains(a)`, so a repeating `b`
+  * (a bbox literal, a broadcast region) is prepared once and asked
+  * `contains(a)` — the same answer. */
 case class STWithin(children: Seq[Expression]) extends GeomExpression {
+  @transient private[this] lazy val outer = new RepeatedArg
   override def dataType: DataType = BooleanType
-  override protected def evalNotNull(vs: Seq[Any]): Any =
-    geom(vs(0)).within(geom(vs(1)))
+  override protected def evalNotNull(vs: Seq[Any]): Any = {
+    val b = outer(wkb(vs(1)))
+    if (b.prepared != null) b.prepared.contains(geom(vs(0))) else geom(vs(0)).within(b.geom)
+  }
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c)
   override def prettyName: String = "st_within"
 }
 
 /** st_contains(a, b) — true iff b ⊆ a with interior contact (J3's sjoin
-  * predicate family; ref delphine/regrid.py:167-177). */
+  * predicate family; ref delphine/regrid.py:167-177). A repeating `a`
+  * is prepared once. */
 case class STContains(children: Seq[Expression]) extends GeomExpression {
+  @transient private[this] lazy val outer = new RepeatedArg
   override def dataType: DataType = BooleanType
-  override protected def evalNotNull(vs: Seq[Any]): Any =
-    geom(vs(0)).contains(geom(vs(1)))
+  override protected def evalNotNull(vs: Seq[Any]): Any = {
+    val a = outer(wkb(vs(0)))
+    if (a.prepared != null) a.prepared.contains(geom(vs(1))) else a.geom.contains(geom(vs(1)))
+  }
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c)
   override def prettyName: String = "st_contains"
 }
 
-/** st_intersects(a, b) (G5; ref wrf_voronoi.py:188). */
+/** st_intersects(a, b) (G5; ref wrf_voronoi.py:188). Symmetric, so
+  * whichever argument repeats is prepared — `b` checked first: the
+  * stage-9 clip's broadcast boundary union sits there. */
 case class STIntersects(children: Seq[Expression]) extends GeomExpression {
+  @transient private[this] lazy val left = new RepeatedArg
+  @transient private[this] lazy val right = new RepeatedArg
   override def dataType: DataType = BooleanType
-  override protected def evalNotNull(vs: Seq[Any]): Any =
-    geom(vs(0)).intersects(geom(vs(1)))
+  override protected def evalNotNull(vs: Seq[Any]): Any = {
+    val b = right(wkb(vs(1)))
+    if (b.prepared != null) b.prepared.intersects(geom(vs(0)))
+    else {
+      val a = left(wkb(vs(0)))
+      if (a.prepared != null) a.prepared.intersects(b.geom) else a.geom.intersects(b.geom)
+    }
+  }
   override protected def withNewChildrenInternal(c: IndexedSeq[Expression]) = copy(c)
   override def prettyName: String = "st_intersects"
+}
+
+/** One predicate argument's last value, parsed, plus its JTS
+  * `PreparedGeometry` once that value repeats row after row (a
+  * literal, a broadcast cross-join column, a streamed row meeting its
+  * join candidates). Spark's `RegExpReplace.lastRegex` idiom: the
+  * owning expression holds it in a `@transient` field, so every task
+  * deserializes a fresh one. Prepared predicates answer exactly as the
+  * plain ones; they skip the per-row parse of the repeated side and
+  * index its segments once instead of per relate.
+  *
+  * The row's byte array is kept by reference, not copied: `getBinary`
+  * hands out a fresh array per row and a literal's never changes.
+  *
+  * The state is one immutable slot replaced whole, so an instance that
+  * happens to be shared between threads can never pair one row's
+  * bytes with another geometry's parsed or prepared form. */
+private[graft] final class RepeatedArg {
+  private[this] var slot: RepeatedArg.Slot = null
+
+  /** `wkb` parsed; `prepared` is set when the bytes equal the previous
+    * call's, else null and the caller uses `geom` on the plain path.
+    * A new value is parsed once, as the plain path would; a repeat
+    * reuses that parse, so even a run of two reads the value once. */
+  def apply(wkb: Array[Byte]): RepeatedArg.Slot = {
+    val s = slot
+    if (s != null && java.util.Arrays.equals(s.wkb, wkb)) {
+      if (s.prepared != null) s
+      else {
+        val next = new RepeatedArg.Slot(s.wkb, s.geom, PreparedGeometryFactory.prepare(s.geom))
+        slot = next
+        next
+      }
+    } else {
+      val next = new RepeatedArg.Slot(wkb, Wkb.read(wkb), null)
+      slot = next
+      next
+    }
+  }
+}
+
+private[graft] object RepeatedArg {
+  final class Slot(val wkb: Array[Byte], val geom: Geometry,
+      val prepared: PreparedGeometry)
 }
 
 /** st_intersection(a, b) → WKB of a ∩ b (G6; ref

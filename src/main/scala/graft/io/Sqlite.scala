@@ -13,8 +13,8 @@ import scala.collection.mutable.ArrayBuffer
   * Scope (all the GeoPackage layer needs, checked with `require`):
   *  - table b-trees only (no indexes — DDL written by [[GeoPackage]]
   *    avoids constraints that imply auto-indexes);
-  *  - single-page `sqlite_master`, one interior level per table
-  *    (≈ 500 leaf pages ≈ a few hundred thousand small rows);
+  *  - single-page `sqlite_master`; table b-trees of any depth (interior
+  *    levels are built bottom-up until one root page remains);
   *  - WRITER cell payloads of any size: payloads over the spec's X
   *    threshold (usable−35) spill into overflow-page chains with the
   *    local portion sized by the X/M/K formula (spec §"B-tree Pages"),
@@ -237,18 +237,32 @@ object Sqlite {
     page
   }
 
+  /** Split one b-tree level's (page, max rowid) entries into interior
+    * pages: as few as fit, filled evenly, so every page holds at least
+    * two children (one cell plus its right-most pointer). A cell is a
+    * 4-byte child pointer, the key varint and a 2-byte pointer slot. */
+  private def packInterior(children: Seq[(Int, Long)]): Seq[Seq[(Int, Long)]] = {
+    val cell = 6 + children.map(c => varint(c._2).length).max
+    val fanout = (PageSize - 12) / cell + 1 // + the right-most child
+    val pages = (children.size + fanout - 1) / fanout
+    val bounds = (0 to pages).map(i => (i.toLong * children.size / pages).toInt)
+    bounds.zip(bounds.tail).map { case (from, until) => children.slice(from, until) }
+  }
+
   private def renderInterior(children: Seq[(Int, Long)], rightMost: Int): Array[Byte] = {
+    val cells = children.map { case (child, key) =>
+      val kb = varint(key)
+      ByteBuffer.allocate(4 + kb.length).putInt(child).put(kb).array()
+    }
+    require(12 + cells.map(_.length + 2).sum <= PageSize, "interior page overflow")
     val page = new Array[Byte](PageSize)
     val buf = ByteBuffer.wrap(page)
     var content = PageSize
-    val ptrs = children.map { case (child, key) =>
-      val kb = varint(key)
-      val cell = ByteBuffer.allocate(4 + kb.length).putInt(child).put(kb).array()
+    val ptrs = cells.map { cell =>
       content -= cell.length
       System.arraycopy(cell, 0, page, content, cell.length)
       content
     }
-    require(12 + 2 * children.size <= content, "interior page overflow")
     buf.put(0x05.toByte)
     buf.putShort(0)
     buf.putShort(children.size.toShort)
@@ -262,8 +276,8 @@ object Sqlite {
   /** Write the database. Tables' rows must be pre-sorted by rowid. */
   def write(path: String, tables: Seq[TableDef]): Unit = {
     // layout pass: leaves per table (cell sizes don't depend on page
-    // numbers), then assign page numbers: 1 = sqlite_master root,
-    // then per table [interior?][leaves...]
+    // numbers), then assign page numbers: 1 = sqlite_master root, then
+    // per table [leaves + overflow...][interior levels...][root]
     val tableLeaves = tables.map { t =>
       packLeaves(t.rows.map { case (rid, vs) => leafCell(rid, vs) })
     }
@@ -295,24 +309,25 @@ object Sqlite {
     def resolve(cells: Seq[Cell]): Seq[(Cell, Int)] =
       cells.map(c => (c, if (c.tail.isEmpty) 0 else allocOverflow(c.tail)))
 
-    tables.zip(tableLeaves).foreach { case (t, leaves) =>
-      if (leaves.size == 1) {
-        val rootNo = next
-        rootPages += rootNo
-        next += 1
-        pageImages += rootNo -> renderLeaf(resolve(leaves.head), 0)
-      } else {
-        val rootNo = next
-        rootPages += rootNo
-        val leafNos = (next + 1) until (next + 1 + leaves.size)
-        next += 1 + leaves.size
-        val withKeys = leafNos.zip(leaves.map(_.last.rowid))
-        pageImages += rootNo -> renderInterior(
-          withKeys.init.map { case (p, k) => (p, k) }, leafNos.last)
-        leafNos.zip(leaves).foreach { case (no, ls) =>
-          pageImages += no -> renderLeaf(resolve(ls), 0)
+    // leaves first, then their overflow pages, then interior levels
+    // bottom-up until one page remains: the table's root
+    tableLeaves.foreach { leaves =>
+      val leafNos = next until next + leaves.size
+      next += leaves.size
+      leafNos.zip(leaves).foreach { case (no, ls) =>
+        pageImages += no -> renderLeaf(resolve(ls), 0)
+      }
+      var level: Seq[(Int, Long)] =
+        leafNos.zip(leaves.map(ls => ls.lastOption.fold(0L)(_.rowid)))
+      while (level.size > 1) {
+        level = packInterior(level).map { kids =>
+          val no = next
+          next += 1
+          pageImages += no -> renderInterior(kids.init, kids.last._1)
+          (no, kids.last._2)
         }
       }
+      rootPages += level.head._1
     }
 
     // sqlite_master (single leaf on page 1); master payloads are DDL

@@ -100,4 +100,54 @@ class SqliteInteropSpec extends AnyFunSuite {
       assert(dig == want, s"blob $n digest mismatch via stock sqlite3")
     }
   }
+
+  test("a table past one interior page gets a multi-level b-tree " +
+      "that stock sqlite3 validates") {
+    val python = new java.io.File("/usr/bin/python3")
+    assume(python.exists, "python3 not available")
+    val path = Files.createTempDirectory("sq_deep").resolve("deep.db").toString
+    // ~1 KB rows: four per leaf, so 2,400 rows fill 600 leaves — more
+    // than one interior page can point at (~500), which forces a second
+    // interior level above the first
+    val n = 2400
+    def blob(i: Int) = Array.tabulate(1000)(j => ((i * 7 + j) % 251).toByte)
+    val rows = (1 to n).map { i =>
+      i.toLong -> Seq[SqlValue](SqlInt(i * 3L), SqlBlob(blob(i)))
+    }
+    Sqlite.write(path, Seq(TableDef("t", "CREATE TABLE t (v INTEGER, b BLOB)", rows)))
+
+    val back = Sqlite.readTable(path, "t")
+    assert(back.map(_._1) == (1L to n.toLong))
+    assert(back.forall { case (rid, vs) =>
+      vs(0) == SqlInt(rid * 3) && vs(1).asInstanceOf[SqlBlob].v.sameElements(blob(rid.toInt))
+    })
+
+    val script =
+      s"""import sqlite3
+         |con = sqlite3.connect("$path")
+         |print(con.execute("PRAGMA integrity_check").fetchone()[0])
+         |print(con.execute("SELECT count(*), sum(v), sum(length(b)) FROM t").fetchone())
+         |print(con.execute("SELECT rootpage FROM sqlite_master WHERE name = 't'").fetchone()[0])
+         |con.close()
+         |""".stripMargin
+    val p = new ProcessBuilder("/usr/bin/python3", "-c", script)
+      .redirectErrorStream(true).start()
+    val out = scala.io.Source.fromInputStream(p.getInputStream).mkString
+    assert(p.waitFor() == 0, s"stock sqlite3 failed to read our file:\n$out")
+    val Array(integrity, counts, rootLine) = out.trim.split("\n")
+    assert(integrity == "ok")
+    assert(counts == s"($n, ${3L * n * (n + 1) / 2}, ${1000L * n})")
+
+    // the root is an interior page whose first child is interior too
+    val bytes = Files.readAllBytes(java.nio.file.Paths.get(path))
+    def pageType(no: Int) = bytes((no - 1) * 4096) & 0xff
+    def firstChild(no: Int) = {
+      val base = (no - 1) * 4096
+      val cell = ((bytes(base + 12) & 0xff) << 8) | (bytes(base + 13) & 0xff)
+      java.nio.ByteBuffer.wrap(bytes, base + cell, 4).getInt
+    }
+    val root = rootLine.trim.toInt
+    assert(pageType(root) == 0x05 && pageType(firstChild(root)) == 0x05)
+    assert(pageType(firstChild(firstChild(root))) == 0x0d)
+  }
 }

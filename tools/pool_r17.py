@@ -23,7 +23,7 @@ Changed set (fresh-only), derived from the 4e48f6a..HEAD diff:
 
 Usage: pool_r17.py out.json prev_pool.json sweep1.json [sweep2.json ...]
 """
-import json, sys, re, subprocess, math
+import json, sys
 
 out_path, prev_path = sys.argv[1], sys.argv[2]
 sweep_paths = sys.argv[3:]
@@ -45,6 +45,12 @@ CHANGED_NAMES = {"dedup_simhash"}
 names = set()
 for s in sweeps:
     names.update(s["queries"].keys())
+
+# a prior-pool query absent from every fresh sweep (crashed, renamed or
+# filtered out) would silently leave the pool; say so
+for n in sorted(set(prev) - names):
+    print("WARN: %s is in the prior pool but in no fresh sweep; "
+          "left out of this pool" % n, file=sys.stderr)
 
 pool, fresh_only = {}, []
 for n in sorted(names):
