@@ -14,7 +14,7 @@ import org.apache.spark.sql.types._
   * (precision > 18 never takes Decimal's compact-long form), so the
   * stock sum allocated and added java.math.BigDecimal objects per row —
   * measured ~134 ns/row, +1.5 s on geo_distance_join's 11.15 M refined
-  * pairs alone (r16, tools/DistAttr).
+  * pairs alone (r16).
   *
   * Value contract: identical to the decimal sum for every input whose
   * per-value magnitude fits a long (|v| < 2^63 — the fixed-point

@@ -276,16 +276,9 @@ object Dedup {
     // same pre-partitioned+pre-sorted cache layout as
     // jaccardPairsIndexed: both refine joins key on id, so the refine
     // pays zero sets-side exchanges/sorts; the prefix and full-index
-    // consumers are map-side explodes, unaffected. Kill switch
-    // (`-Dgraft.containCachePartitioned=false` / env
-    // GRAFT_CONTAIN_CACHE_PARTITIONED) reverts to the plain unhinted
-    // persist for same-JVM A/B sizing runs (tools/ContainAb).
-    // tolerant parse: anything other than case-insensitive "false"
-    // (including malformed values) keeps the default — a bad env var
-    // must not crash query construction (ADVICE r16)
-    val partitionedCache = sys.props.get("graft.containCachePartitioned")
-      .orElse(sys.env.get("GRAFT_CONTAIN_CACHE_PARTITIONED"))
-      .forall(!_.equalsIgnoreCase("false"))
+    // consumers are map-side explodes, unaffected. Against a plain
+    // unhinted persist, same-JVM interleaved at sf0.1 (r16), this
+    // layout ran dedup_containment in 1.47 s min vs 2.21 s.
     val setsP = org.apache.spark.sql.graftbridge.Bridge
       .numShufflePartitions(df.sparkSession)
     // like jaccardPairsIndexed the cache carries BOTH the string
@@ -302,11 +295,8 @@ object Dedup {
             org.apache.spark.sql.graftbridge.Bridge.expression(col("sh"))))
           .as("shh"))
     val sets = persistBounded(
-      if (partitionedCache)
-        shaped.repartition(setsP, col("id")).sortWithinPartitions("id")
-      else shaped)
-    if (partitionedCache && eagerShingleCacheDefault(df.sparkSession))
-      sets.count()
+      shaped.repartition(setsP, col("id")).sortWithinPartitions("id"))
+    if (eagerShingleCacheDefault(df.sparkSession)) sets.count()
     // A's prefix comes from the broadcast sampled order (map-side); the
     // B side needs no rank at all — only token membership and size
     val aPrefix = prefixIndex(sets, threshold)
@@ -458,18 +448,10 @@ object Dedup {
     // materialize BEFORE the self-join is planned: an unmaterialized
     // AQE-cached plan reports unknown partitioning and the join would
     // re-shuffle + re-sort both sides of the full membership stream.
-    // Gated (ADVICE r15) behind the same prop/env switch as the
-    // shingle-cache stage split — `-Dgraft.eagerBucketCache=false` /
-    // env GRAFT_EAGER_BUCKET_CACHE=false skips the arming pass for
-    // callers that know their membership frame is trivially small and
-    // would rather let the self-join re-shuffle it. Default stays ON:
-    // the exchange-free self-join was the measured r15 win at every
+    // The exchange-free self-join was the measured r15 win at every
     // scale tried (sf0.1 bench and 10M-doc Prep10M), and the arming
     // pass reads the just-built cache, not the input.
-    val eagerBucket = sys.props.get("graft.eagerBucketCache")
-      .orElse(sys.env.get("GRAFT_EAGER_BUCKET_CACHE"))
-      .forall(_.toBoolean)
-    if (eagerBucket) mf.count()
+    mf.count()
     mf
   }
 
@@ -618,11 +600,13 @@ object Dedup {
     * Override per-pipeline via `-Dgraft.eagerShingleCache=true|false`
     * / env `GRAFT_EAGER_SHINGLE_CACHE` (Prep10M sets it true: at a
     * 4 GiB heap even the bypass writer's map stage benefits from not
-    * sharing its working set with the cache unroll). */
+    * sharing its working set with the cache unroll). Only `true` or
+    * `false` (any case) override; any other value falls back to the
+    * gate, so a malformed setting cannot crash query construction. */
   private[graft] def eagerShingleCacheDefault(spark: SparkSession): Boolean =
     sys.props.get("graft.eagerShingleCache")
       .orElse(sys.env.get("GRAFT_EAGER_SHINGLE_CACHE"))
-      .map(_.toBoolean)
+      .flatMap(_.toBooleanOption)
       .getOrElse {
         // unparsable conf values (both accept only ints today, but the
         // safe default for a protective split is ON) → eager
@@ -677,54 +661,43 @@ object Dedup {
     // stream replaces distinct's exchange PLUS the candidate exchange
     // the refine used to add on top.
     val cand = raw.repartition(setsP, col("id_a")).distinct()
-    if (bitmapPrefilterEnabled) {
-      // EXACT bitmap prescreen (r16): the refine's dominant cost at 10M
-      // docs was the mid-join exchange carrying full shingle arrays for
-      // EVERY candidate (~190 B/row at 25-word docs, two thirds of them
-      // false candidates that exact Jaccard rejects). Screen each pair
-      // first with a 32-byte bitmap summary + true set size pulled from
-      // the same cache (map-side compute over the cached shh, both
-      // joins exchange-free on the sets side), discarding a pair only
-      // when [[graft.expressions.BitmapIntersectUpperBound]]'s sound
-      // intersection bound cannot reach the threshold — output is
-      // bit-identical, survivors alone pay the full-array joins.
-      import org.apache.spark.sql.graftbridge.Bridge
-      def bm(c: Column) = Bridge.column(graft.expressions.ShingleBitmap(
-        Bridge.expression(c), bitmapWords))
-      val bmA = sets.select(col("id").as("id_a"), bm(col("shh")).as("bm_a"),
-        size(col("shh")).as("sz_a"))
-      val bmB = sets.select(col("id").as("id_b"), bm(col("shh")).as("bm_b"),
-        size(col("shh")).as("sz_b"))
-      val ub = Bridge.column(graft.expressions.BitmapIntersectUpperBound(Seq(
-        Bridge.expression(col("bm_a")), Bridge.expression(col("sz_a")),
-        Bridge.expression(col("bm_b")), Bridge.expression(col("sz_b")))))
-      // keep iff the intersection BOUND could still reach threshold:
-      // j ≥ t ⟺ I(1+t) ≥ t(|A|+|B|); 1e-9 guards the float compare in
-      // the KEEP direction (borderline pairs go to the exact refine)
-      val screened = cand.join(bmA, "id_a").join(bmB, "id_b")
-        .filter(ub.cast("double") * lit(1.0 + threshold) >=
-          lit(threshold) * (col("sz_a") + col("sz_b")).cast("double")
-            - lit(1e-9))
-        .select("id_a", "id_b")
-      refineJaccardHashed(screened, sets, threshold)
-    } else refineJaccardHashed(cand, sets, threshold)
+    // EXACT bitmap prescreen (r16): the refine's dominant cost at 10M
+    // docs was the mid-join exchange carrying full shingle arrays for
+    // EVERY candidate (~190 B/row at 25-word docs, two thirds of them
+    // false candidates that exact Jaccard rejects). Screen each pair
+    // first with a 32-byte bitmap summary + true set size pulled from
+    // the same cache (map-side compute over the cached shh, both
+    // joins exchange-free on the sets side), discarding a pair only
+    // when [[graft.expressions.BitmapIntersectUpperBound]]'s sound
+    // intersection bound cannot reach the threshold — output is
+    // bit-identical, survivors alone pay the full-array joins.
+    import org.apache.spark.sql.graftbridge.Bridge
+    def bm(c: Column) = Bridge.column(graft.expressions.ShingleBitmap(
+      Bridge.expression(c), BitmapWords))
+    val bmA = sets.select(col("id").as("id_a"), bm(col("shh")).as("bm_a"),
+      size(col("shh")).as("sz_a"))
+    val bmB = sets.select(col("id").as("id_b"), bm(col("shh")).as("bm_b"),
+      size(col("shh")).as("sz_b"))
+    val ub = Bridge.column(graft.expressions.BitmapIntersectUpperBound(Seq(
+      Bridge.expression(col("bm_a")), Bridge.expression(col("sz_a")),
+      Bridge.expression(col("bm_b")), Bridge.expression(col("sz_b")))))
+    // keep iff the intersection BOUND could still reach threshold:
+    // j ≥ t ⟺ I(1+t) ≥ t(|A|+|B|); 1e-9 guards the float compare in
+    // the KEEP direction (borderline pairs go to the exact refine)
+    val screened = cand.join(bmA, "id_a").join(bmB, "id_b")
+      .filter(ub.cast("double") * lit(1.0 + threshold) >=
+        lit(threshold) * (col("sz_a") + col("sz_b")).cast("double")
+          - lit(1e-9))
+      .select("id_a", "id_b")
+    refineJaccardHashed(screened, sets, threshold)
   }
 
   /** Bitmap width (in 64-bit words) for [[minhashNearDups]]'s exact
     * prescreen — 4 words = 256 bits, sized for short-document shingle
-    * sets (tens of shingles). Larger documents keep correctness at any
-    * width (the bound only loosens); raise via
-    * `-Dgraft.bitmapWords=N` when typical sets outgrow ~bits/8
-    * elements and the screen stops discarding. `-Dgraft.
-    * bitmapPrefilter=false` / env GRAFT_BITMAP_PREFILTER=false drops
-    * the prescreen entirely (the pre-r16 two-join refine plan). */
-  private[graft] def bitmapWords: Int =
-    sys.props.get("graft.bitmapWords")
-      .orElse(sys.env.get("GRAFT_BITMAP_WORDS")).map(_.toInt).getOrElse(4)
-  private[graft] def bitmapPrefilterEnabled: Boolean =
-    sys.props.get("graft.bitmapPrefilter")
-      .orElse(sys.env.get("GRAFT_BITMAP_PREFILTER"))
-      .forall(_.toBoolean)
+    * sets (tens of shingles). Larger documents keep correctness (the
+    * bound only loosens toward keeping pairs, never dropping them);
+    * they just screen out fewer false candidates. */
+  private[graft] val BitmapWords = 4
 
   /** Exact-Jaccard refine over PRE-HASHED sets: `sets` is (id, shh) with
     * [[hashedShingles]]'s sorted long arrays, consumed by the joins
@@ -871,7 +844,6 @@ object Dedup {
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
       .select(col("e.src").as("src"), col("e.dst").as("dst"))
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val debug = sys.env.contains("GRAFT_CC_DEBUG")
     // ---- regime 1: SMALL GRAPHS finish on the driver -------------
     // Below `driverFinishEdges` directed edges the whole component
     // structure is driver-trivial: one collect + union-find with path
@@ -880,11 +852,8 @@ object Dedup {
     // common shape of the per-query near-dup graphs (thousands of
     // edges at testdata scale); the count also pre-materializes the
     // edge cache the iterative path would warm anyway.
-    val tCount0 = System.nanoTime()
     val nDirected = edgesRaw.count()
-    if (debug) println(f"[cc] edges.count ${(System.nanoTime() - tCount0) / 1e9}%.2f s")
     if (nDirected <= driverFinishEdges) {
-      val tColl0 = System.nanoTime()
       val spark = ids.sparkSession
       import spark.implicits._
       val parent = new scala.collection.mutable.HashMap[Long, Long]()
@@ -912,9 +881,6 @@ object Dedup {
       val lbls = touched.iterator.map(v => (v, minOf(find(v)))).toSeq
         .toDF("id", "__lbl")
       edgesRaw.unpersist(false)
-      if (debug) println(f"[cc] driver union-find: $nDirected directed " +
-        f"edges, ${touched.size} touched vertices, " +
-        f"${(System.nanoTime() - tColl0) / 1e9}%.2f s after count")
       return ids.select(col("id"))
         .join(broadcast(lbls), Seq("id"), "left")
         .select(col("id"), coalesce(col("__lbl"), col("id")).as("cluster_rep"))
@@ -937,7 +903,6 @@ object Dedup {
     // the edges⋈frontier join, and the labels left join the generic
     // round would run (the edge list itself enumerates every touched
     // vertex as src).
-    val t1 = System.nanoTime()
     var labels = edges.groupBy(col("src")).agg(min("dst").as("nbr"))
       .select(col("src").as("id"), col("src").as("prev"),
         least(col("src"), col("nbr")).as("lbl"))
@@ -959,8 +924,6 @@ object Dedup {
     var changed = labels.filter(col("lbl") =!= col("prev")).count()
     var frontier = labels.filter(col("lbl") =!= col("prev")).select("id", "lbl")
     var iter = 1
-    if (debug) println(f"[cc] round 1 (fused) changed=$changed " +
-      f"${(System.nanoTime() - t1) / 1e9}%.2f s")
     labels = labels.select("id", "lbl")
     // once the previous round reported a small `changed`, the frontier
     // (exactly those rows) is driver-safe to broadcast — late rounds
@@ -989,7 +952,6 @@ object Dedup {
     var deltaBailed = false
     while (changed > 0 && iter < maxIters) {
       if (changed >= deltaBelow || deltaBailed) {
-      val tRound = System.nanoTime()
       // jump early when the frontier is LARGE: a big changed-count
       // after the fused round means long chains are still propagating
       // one hop per round (dense near-dup graphs converge with small
@@ -1027,8 +989,6 @@ object Dedup {
         nbrMin.unpersist(false)
         changed = 0
         iter += 1
-        if (debug) println(f"[cc] round $iter convergence probe: " +
-          "no neighbor-min undercuts — converged without a frame build")
       } else {
       val joined = labels.join(nbrMin, col("id") === col("src"), "left")
       // pointer-jump hop table: label(lbl(v)) over the FULL label frame.
@@ -1077,8 +1037,6 @@ object Dedup {
       frontier = next.filter(col("lbl") =!= col("prev")).select("id", "lbl")
       labelsCheckpointed = truncate
       iter += 1
-      if (debug) println(f"[cc] round $iter changed=$changed jump=$jump " +
-        f"${(System.nanoTime() - tRound) / 1e9}%.2f s")
       }
       } else {
         // ---- driver-delta finish --------------------------------
@@ -1107,7 +1065,6 @@ object Dedup {
         val delta = scala.collection.mutable.HashMap[Long, Long]() ++= fMap
         var bail = false
         while (fMap.nonEmpty && !bail && iter < maxIters) {
-          val tRound = System.nanoTime()
           val fDf = broadcast(fMap.toSeq.toDF("fid", "flbl"))
           // N(F) with the min frontier contribution AND the frozen
           // label of each candidate, in one cached-probe job
@@ -1175,9 +1132,6 @@ object Dedup {
             fMap = newF.toMap
             iter += 1
             changed = fMap.size
-            if (debug) println(f"[cc] round $iter (delta) " +
-              f"changed=$changed cand=${cand.size} " +
-              f"${(System.nanoTime() - tRound) / 1e9}%.2f s")
             if (delta.size > capRows) bail = true
           }
         }
@@ -1196,8 +1150,6 @@ object Dedup {
         if (bail) {
           deltaBailed = true // stay in DataFrame rounds from here on
           frontier = fMap.toSeq.toDF("id", "lbl")
-          if (debug) println(s"[cc] delta phase bailed: $changed " +
-            s"changing / ${delta.size} delta rows — resuming DataFrame rounds")
         }
       }
     }

@@ -22,25 +22,16 @@ object Exact {
     * rounds exactly as the former `sum(decimal(38,0))` did. The stock
     * decimal sum allocated a BigDecimal per row (precision 38 never
     * takes Decimal's compact form) and cost ~134 ns/row — +1.5 s on
-    * geo_distance_join's 11 M refined pairs (r16, tools/DistAttr); the
-    * 128-bit form is ~8 codegen'd long ops. Non-finite units (NaN/±Inf,
+    * geo_distance_join's 11 M refined pairs; the 128-bit form is ~8
+    * codegen'd long ops, and its sums equal the decimal form's
+    * (Int128SumSpec compares the two). Non-finite units (NaN/±Inf,
     * which the decimal cast nulled and the sum skipped) are nulled
     * explicitly so the skip semantics survive the long cast. Per-VALUE
     * domain is |round(c·10^dec)| < 2^63 (the helpers' stated
     * fixed-point contract); the SUM is exact to 2^127 vs the decimal
     * form's 10^38 — the same order of overflow headroom at 1e10+ rows. */
-  /** A/B-only kill switch (tools/ExactSumAb): `-Dgraft.exactDecimalSum
-    * =true` reverts [[unitSum]]/[[int128Sum]] to the pre-r16
-    * decimal(38,0) sum so a regression suspected on an Int128Sum
-    * consumer can be attributed same-JVM, interleaved (the ContainAb
-    * pattern — the only trustworthy evidence on a membw-drifting box).
-    * Value-identical (Int128SumSpec pins it); never set outside A/B. */
-  private def decimalAb: Boolean =
-    sys.props.get("graft.exactDecimalSum").exists(_.equalsIgnoreCase("true"))
-
   private[graft] def unitSum(c: Column, unit: Double): Column = {
     val u = round(c * unit)
-    if (decimalAb) return sum(u.cast("decimal(38,0)"))
     // Null out non-finite units AND finite units outside the long
     // domain (|u| >= 2^63): the old decimal(38,0) cast skipped the
     // former, and the double→long cast would silently saturate the
@@ -75,7 +66,6 @@ object Exact {
     * `sum(cast(v as decimal(38,0)))` when the input is already a long
     * ([[unitSum]] is the fixed-point-double front end). */
   def int128Sum(c: Column): Column = {
-    if (decimalAb) return sum(c.cast("decimal(38,0)"))
     import org.apache.spark.sql.graftbridge.Bridge
     Bridge.column(graft.expressions.Int128Sum(Bridge.expression(c))
       .toAggregateExpression())

@@ -22,19 +22,28 @@ class DedupSpec extends SparkSpec {
       7L -> "short doc")
   }
 
-  private def naiveJaccardPairs(n: Int, t: Double): Set[(Long, Long)] = {
-    def sh(s: String): Set[String] = {
-      val toks = s.trim.toLowerCase.split("\\s+")
-      (0 until math.max(toks.length - n + 1, 1))
-        .map(i => toks.slice(i, i + n).mkString(" ")).toSet
-    }
-    (for {
-      (ia, ta) <- docs; (ib, tb) <- docs if ia < ib
-      j = sh(ta).intersect(sh(tb)).size.toDouble /
-        math.max(sh(ta).union(sh(tb)).size, 1)
-      if j >= t
-    } yield (ia, ib)).toSet
+  private def naiveShingles(s: String, n: Int): Set[String] = {
+    val toks = s.trim.toLowerCase.split("\\s+")
+    (0 until math.max(toks.length - n + 1, 1))
+      .map(i => toks.slice(i, i + n).mkString(" ")).toSet
   }
+
+  private def naiveJaccardPairs(n: Int, t: Double,
+      corpus: Seq[(Long, String)] = docs): Set[(Long, Long)] =
+    (for {
+      (ia, ta) <- corpus; (ib, tb) <- corpus if ia < ib
+      sa = naiveShingles(ta, n); sb = naiveShingles(tb, n)
+      if sa.intersect(sb).size.toDouble / math.max(sa.union(sb).size, 1) >= t
+    } yield (ia, ib)).toSet
+
+  /** Ordered pairs (a, b) with |A∩B| / |A| ≥ t. */
+  private def naiveContainmentPairs(n: Int, t: Double,
+      corpus: Seq[(Long, String)] = docs): Set[(Long, Long)] =
+    (for {
+      (ia, ta) <- corpus; (ib, tb) <- corpus if ia != ib
+      sa = naiveShingles(ta, n); sb = naiveShingles(tb, n)
+      if sa.intersect(sb).size.toDouble / math.max(sa.size, 1) >= t
+    } yield (ia, ib)).toSet
 
   test("jaccardPairsIndexed (prefix-filter) equals brute force") {
     val df = docs.toDF("doc_id", "text")
@@ -53,6 +62,8 @@ class DedupSpec extends SparkSpec {
     // (no Exchange, no Sort above the InMemoryTableScan). AQE off for
     // a deterministic static tree; broadcast off so the refine takes
     // the shuffle-family path the 10M-doc corpus takes.
+    // containmentPairsIndexed persists the same layout for its two
+    // id-keyed refine joins and is held to the same contract.
     import org.apache.spark.sql.execution.SortExec
     import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
     import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -63,25 +74,32 @@ class DedupSpec extends SparkSpec {
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try {
       val df = docs.toDF("doc_id", "text")
-      val out = Dedup.jaccardPairsIndexed(df, "doc_id", "text", 3, 0.5)
-      val plan = out.queryExecution.executedPlan
-      val refineJoins = plan.collect {
-        case j: SortMergeJoinExec if j.leftKeys.exists(k =>
-            k.toString.contains("id_a") || k.toString.contains("id_b")) => j
-      }
-      assert(refineJoins.size == 2, s"expected 2 refine joins in:\n$plan")
-      refineJoins.foreach { j =>
-        val cleanSide = Seq(j.left, j.right).exists { side =>
-          side.collect { case e: ShuffleExchangeExec => e }.isEmpty &&
-          side.collect { case s: SortExec => s }.isEmpty &&
-          side.collect { case c: InMemoryTableScanExec => c }.nonEmpty
+      val cases = Seq(
+        (Dedup.jaccardPairsIndexed(df, "doc_id", "text", 3, 0.5),
+          naiveJaccardPairs(3, 0.5)),
+        (Dedup.containmentPairsIndexed(df, "doc_id", "text", 3, 0.8),
+          naiveContainmentPairs(3, 0.8)))
+      cases.foreach { case (out, expect) =>
+        val plan = out.queryExecution.executedPlan
+        val refineJoins = plan.collect {
+          case j: SortMergeJoinExec if j.leftKeys.exists(k =>
+              k.toString.contains("id_a") || k.toString.contains("id_b")) => j
         }
-        assert(cleanSide,
-          s"refine join has no exchange-free, sort-free cache side:\n$j")
+        assert(refineJoins.size == 2, s"expected 2 refine joins in:\n$plan")
+        refineJoins.foreach { j =>
+          val cleanSide = Seq(j.left, j.right).exists { side =>
+            side.collect { case e: ShuffleExchangeExec => e }.isEmpty &&
+            side.collect { case s: SortExec => s }.isEmpty &&
+            side.collect { case c: InMemoryTableScanExec => c }.nonEmpty
+          }
+          assert(cleanSide,
+            s"refine join has no exchange-free, sort-free cache side:\n$j")
+        }
+        // layout restructure must not perturb the result
+        val got = out.select("id_a", "id_b").as[(Long, Long)].collect().toSet
+        assert(got == expect)
+        assert(got.nonEmpty)
       }
-      // layout restructure must not perturb the result
-      val got = out.select("id_a", "id_b").as[(Long, Long)].collect().toSet
-      assert(got == naiveJaccardPairs(3, 0.5))
     } finally {
       spark.conf.set("spark.sql.adaptive.enabled", aqe)
       spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abt)
@@ -113,28 +131,13 @@ class DedupSpec extends SparkSpec {
         } else words
       i -> doc.mkString(" ")
     }
-    def sh(s: String, n: Int): Set[String] = {
-      val toks = s.trim.toLowerCase.split("\\s+")
-      (0 until math.max(toks.length - n + 1, 1))
-        .map(i => toks.slice(i, i + n).mkString(" ")).toSet
-    }
-    val expect = (for {
-      (ia, ta) <- big; (ib, tb) <- big if ia < ib
-      j = sh(ta, 3).intersect(sh(tb, 3)).size.toDouble /
-        math.max(sh(ta, 3).union(sh(tb, 3)).size, 1)
-      if j >= 0.5
-    } yield (ia, ib)).toSet
+    val expect = naiveJaccardPairs(3, 0.5, big)
     val got = Dedup.jaccardPairsIndexed(big.toDF("doc_id", "text"),
         "doc_id", "text", 3, 0.5)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
     assert(got == expect)
     assert(expect.size > 10, s"corpus should be near-dup rich: ${expect.size}")
-    val expectC = (for {
-      (ia, ta) <- big; (ib, tb) <- big if ia != ib
-      c = sh(ta, 3).intersect(sh(tb, 3)).size.toDouble /
-        math.max(sh(ta, 3).size, 1)
-      if c >= 0.8
-    } yield (ia, ib)).toSet
+    val expectC = naiveContainmentPairs(3, 0.8, big)
     val gotC = Dedup.containmentPairsIndexed(big.toDF("doc_id", "text"),
         "doc_id", "text", 3, 0.8)
       .select("id_a", "id_b").as[(Long, Long)].collect().toSet
@@ -212,22 +215,47 @@ class DedupSpec extends SparkSpec {
   }
 
   test("minhashNearDups stays exact under maximal bitmap collision stress") {
-    // 64-bit maps over ~16-shingle docs: within-set collisions abound,
+    // 256-bit maps over ~300-shingle docs: within-set collisions abound,
     // so the screen's bound is loose — it must degrade toward keeping
     // pairs (exactness preserved), never toward dropping true pairs.
-    val prev = sys.props.get("graft.bitmapWords")
-    sys.props("graft.bitmapWords") = "1"
-    try {
-      val df = docs.toDF("doc_id", "text")
-      val got = Dedup.minhashNearDups(df, "doc_id", "text", 3, 0.5)
-        .select("id_a", "id_b").as[(Long, Long)].collect().toSet
-      assert(got == naiveJaccardPairs(3, 0.5))
-    } finally {
-      prev match {
-        case Some(v) => sys.props("graft.bitmapWords") = v
-        case None => sys.props.remove("graft.bitmapWords")
+    // Four 300-word bases over a 5k-word vocabulary; each has variants
+    // with a few swapped words (near-dups, J ≈ 0.9) and many (J ≈ 0.3,
+    // LSH candidates the refine must reject).
+    import org.apache.spark.sql.graftbridge.Bridge
+    val rnd = new scala.util.Random(4317)
+    def word() = s"w${rnd.nextInt(5000)}"
+    val corpus: Seq[(Long, String)] = (0 until 4).flatMap { b =>
+      val base = Vector.fill(300)(word())
+      Seq(0, 4, 8, 60).zipWithIndex.map { case (swaps, v) =>
+        val doc = (0 until swaps).foldLeft(base) { (d, _) =>
+          d.updated(rnd.nextInt(d.length), word())
+        }
+        (b * 10 + v).toLong -> doc.mkString(" ")
       }
     }
+    val df = corpus.toDF("doc_id", "text")
+    val got = Dedup.minhashNearDups(df, "doc_id", "text", 3, 0.5)
+      .select("id_a", "id_b").as[(Long, Long)].collect().toSet
+    assert(got == naiveJaccardPairs(3, 0.5, corpus))
+    assert(got.size >= 4, s"corpus should be near-dup rich: $got")
+    // every output pair passed the screen; the stress is real only if
+    // the bound there overshoots the true |A∩B|
+    def bm(c: org.apache.spark.sql.Column) = Bridge.column(
+      graft.expressions.ShingleBitmap(Bridge.expression(c),
+        Dedup.BitmapWords))
+    val ub = Bridge.column(graft.expressions.BitmapIntersectUpperBound(Seq(
+      Bridge.expression(bm(col("sh_a"))), Bridge.expression(size(col("sh_a"))),
+      Bridge.expression(bm(col("sh_b"))), Bridge.expression(size(col("sh_b"))))))
+    val sets = df.select(col("doc_id").cast("long").as("id"),
+      Dedup.hashedShingles(col("text"), 3).as("sh"))
+    val bounds = got.toSeq.toDF("id_a", "id_b")
+      .join(sets.select(col("id").as("id_a"), col("sh").as("sh_a")), "id_a")
+      .join(sets.select(col("id").as("id_b"), col("sh").as("sh_b")), "id_b")
+      .select(ub.as("ub"), size(array_intersect(col("sh_a"), col("sh_b"))))
+      .as[(Int, Int)].collect()
+    assert(bounds.length == got.size)
+    assert(bounds.exists { case (u, i) => u > i },
+      s"bound never exceeds |A∩B| — the maps are not saturated: ${bounds.toSeq}")
   }
 
   test("minhashNearDups fuses the pair dedup into the refine clustering") {
@@ -536,6 +564,11 @@ class DedupSpec extends SparkSpec {
       assert(!Dedup.eagerShingleCacheDefault(spark))
       sys.props("graft.eagerShingleCache") = "true"
       spark.conf.set("spark.sql.shuffle.partitions", "2")
+      assert(Dedup.eagerShingleCacheDefault(spark))
+      // a malformed knob is ignored, not thrown: the gate decides
+      sys.props("graft.eagerShingleCache") = "yes"
+      assert(!Dedup.eagerShingleCacheDefault(spark))
+      spark.conf.set("spark.sql.shuffle.partitions", "201")
       assert(Dedup.eagerShingleCacheDefault(spark))
     } finally {
       sys.props.remove("graft.eagerShingleCache")
