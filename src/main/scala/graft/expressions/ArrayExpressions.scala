@@ -88,7 +88,8 @@ case class SortedIntersectCount(children: Seq[Expression])
     val na = a.numElements(); val nb = b.numElements()
     var i = 0; var j = 0; var n = 0
     while (i < na && j < nb) {
-      val c = a.getUTF8String(i).compareTo(b.getUTF8String(j))
+      // binaryCompare, not compareTo (see Utf8BinaryOrder)
+      val c = a.getUTF8String(i).binaryCompare(b.getUTF8String(j))
       if (c == 0) { n += 1; i += 1; j += 1 }
       else if (c < 0) i += 1
       else j += 1

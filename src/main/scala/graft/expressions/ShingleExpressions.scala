@@ -9,6 +9,14 @@ import org.apache.spark.sql.catalyst.util.GenericArrayData
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+/** UTF8String binary order, the order `array_sort` gives strings.
+  * `UTF8String.compareTo` returns the same order, but it looks up an
+  * environment variable on every call and throws when `spark.testing`
+  * is set. */
+private[expressions] object Utf8BinaryOrder extends java.util.Comparator[UTF8String] {
+  override def compare(a: UTF8String, b: UTF8String): Int = a.binaryCompare(b)
+}
+
 /** word_shingles(text, n) — sorted distinct word n-grams of a document,
   * in one pass.
   *
@@ -57,7 +65,7 @@ case class WordShingles(children: Seq[Expression], n: Int)
     // except it KEEPS trailing empties; after trim there are none.
     val toks = ws.split(text, -1)
     val nToks = toks.length
-    val out = new java.util.TreeSet[UTF8String]()
+    val out = new java.util.TreeSet[UTF8String](Utf8BinaryOrder)
     if (nToks <= n) {
       out.add(UTF8String.fromString(toks.mkString(" ")))
     } else {

@@ -20,27 +20,41 @@ object Dedup {
     * Each operator call persists 1–2 frames that the RETURNED lazy
     * DataFrame still reads, so they cannot be unpersisted at return —
     * but a long-lived session calling operators repeatedly must not
-    * accumulate MEMORY_AND_DISK blocks forever (ADVICE r15: disk
-    * blocks are not LRU-reclaimed the way memory blocks are). The
-    * registry keeps the most recent `maxRetainedCaches` frames per
-    * session and unpersists the eldest beyond that — unpersisting a
-    * frame a still-pending DataFrame references is SAFE (Spark
-    * recomputes), it only costs the recompute. Sized so one composed
-    * pipeline stage (near-dup = shingle cache + bucket membership)
-    * never evicts its own caches mid-flight. */
+    * accumulate MEMORY_AND_DISK blocks forever (disk blocks are not
+    * LRU-reclaimed the way memory blocks are). The registry keeps the
+    * most recent `maxRetainedCaches` frames per session and unpersists
+    * the eldest beyond that. Sized so one composed pipeline stage
+    * (near-dup = shingle cache + bucket membership) never evicts its
+    * own caches mid-flight.
+    *
+    * One handle per plan: Spark's CacheManager keys an entry by
+    * `sameResult` on the plan, so a handle persisted by an earlier
+    * call on the same input names the SAME entry as the new one, and
+    * unpersisting it would uncache the frame the current call just
+    * persisted. Such a handle leaves the queue without an unpersist.
+    * Losing the cache is not just a recompute: the refine and bucket
+    * self-joins lose their exchange-free cache side, and a repeated
+    * `minhashNearDups` on the 25k-doc benchmark corpus ran 5 extra
+    * jobs and wrote 4× the shuffle (41.9 MB against 10.9 MB) per call. */
   private val retainedCaches = scala.collection.mutable
     .Map.empty[SparkSession, scala.collection.mutable.Queue[DataFrame]]
-  private val maxRetainedCaches = 6
+  private[graft] val maxRetainedCaches = 6
 
   private def persistBounded(df: DataFrame): DataFrame = synchronized {
     val q = retainedCaches.getOrElseUpdate(df.sparkSession,
       scala.collection.mutable.Queue.empty[DataFrame])
     df.persist(StorageLevel.MEMORY_AND_DISK)
+    val plan = df.queryExecution.analyzed
+    q.dequeueAll(_.queryExecution.analyzed.sameResult(plan))
     q.enqueue(df)
     while (q.size > maxRetainedCaches)
       scala.util.Try(q.dequeue().unpersist(blocking = false))
     df
   }
+
+  /** The frames the registry holds for `session`, eldest first. */
+  private[graft] def retainedFrames(session: SparkSession): Seq[DataFrame] =
+    synchronized { retainedCaches.get(session).toSeq.flatten }
 
   /** Exact dedup: keep the smallest id per content digest.
     * One hash-shuffle on md5(text) — the text column itself never

@@ -28,6 +28,12 @@ object Packing {
       .withColumn("bk", expr(s"id div ${bucketSize}L"))
     val bucketTotals = rows.groupBy("bk")
       .agg(sum("n_tokens").as("btot"))
+    // Bound of the one single-partition window: it orders one row per
+    // non-empty bucket, B ≤ min(docs, id span / bucketSize). With dense
+    // ids and the default bucketSize of 65,536 that is 15,259 rows at
+    // 1e9 documents and 15,258,790 rows (two longs each, ~244 MB of
+    // values) at 1e12. Past ~1e11 documents this window wants a second
+    // level of buckets.
     val bucketOffsets = bucketTotals
       .withColumn("boff",
         coalesce(sum("btot").over(

@@ -1,5 +1,10 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{SortExec, SparkPlan}
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+import org.apache.spark.sql.execution.joins.SortMergeJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.operators.Dedup
@@ -45,6 +50,35 @@ class DedupSpec extends SparkSpec {
       if sa.intersect(sb).size.toDouble / math.max(sa.size, 1) >= t
     } yield (ia, ib)).toSet
 
+  /** (a, b, hamming) with a < b and hamming ≤ maxDist, brute force over
+    * fingerprints computed by the same expression. */
+  private def naiveSimhashPairs(maxDist: Int, bits: Int): Set[(Long, Long, Int)] = {
+    val fps = docs.toDF("doc_id", "text").select($"doc_id",
+      Dedup.simhash($"text", bits).as("fp")).as[(Long, Long)].collect().toMap
+    (for {
+      (ia, _) <- docs; (ib, _) <- docs if ia < ib
+      h = java.lang.Long.bitCount(fps(ia) ^ fps(ib))
+      if h <= maxDist
+    } yield (ia, ib, h)).toSet
+  }
+
+  /** Sort-merge joins with a left key naming one of `keys`. */
+  private def joinsOn(plan: SparkPlan, keys: String*): Seq[SortMergeJoinExec] =
+    plan.collect {
+      case j: SortMergeJoinExec
+          if j.leftKeys.exists(k => keys.exists(k.toString.contains)) => j
+    }
+
+  /** The layout contract of a join on a cache persisted pre-partitioned
+    * and pre-sorted on the key: one side is the bare cache scan, with
+    * no Exchange and no Sort above the InMemoryTableScan. */
+  private def hasCleanCacheSide(j: SortMergeJoinExec): Boolean =
+    Seq(j.left, j.right).exists { side =>
+      side.collect { case e: ShuffleExchangeExec => e }.isEmpty &&
+      side.collect { case s: SortExec => s }.isEmpty &&
+      side.collect { case c: InMemoryTableScanExec => c }.nonEmpty
+    }
+
   test("jaccardPairsIndexed (prefix-filter) equals brute force") {
     val df = docs.toDF("doc_id", "text")
     val got = Dedup.jaccardPairsIndexed(df, "doc_id", "text", 3, 0.5)
@@ -64,10 +98,6 @@ class DedupSpec extends SparkSpec {
     // the shuffle-family path the 10M-doc corpus takes.
     // containmentPairsIndexed persists the same layout for its two
     // id-keyed refine joins and is held to the same contract.
-    import org.apache.spark.sql.execution.SortExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     val abt = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -81,18 +111,10 @@ class DedupSpec extends SparkSpec {
           naiveContainmentPairs(3, 0.8)))
       cases.foreach { case (out, expect) =>
         val plan = out.queryExecution.executedPlan
-        val refineJoins = plan.collect {
-          case j: SortMergeJoinExec if j.leftKeys.exists(k =>
-              k.toString.contains("id_a") || k.toString.contains("id_b")) => j
-        }
+        val refineJoins = joinsOn(plan, "id_a", "id_b")
         assert(refineJoins.size == 2, s"expected 2 refine joins in:\n$plan")
         refineJoins.foreach { j =>
-          val cleanSide = Seq(j.left, j.right).exists { side =>
-            side.collect { case e: ShuffleExchangeExec => e }.isEmpty &&
-            side.collect { case s: SortExec => s }.isEmpty &&
-            side.collect { case c: InMemoryTableScanExec => c }.nonEmpty
-          }
-          assert(cleanSide,
+          assert(hasCleanCacheSide(j),
             s"refine join has no exchange-free, sort-free cache side:\n$j")
         }
         // layout restructure must not perturb the result
@@ -265,10 +287,6 @@ class DedupSpec extends SparkSpec {
     // anyway; (2) every refine-family SMJ still has an exchange-free,
     // sort-free cache side (the r15 layout contract, now across the
     // bitmap-prescreen joins too).
-    import org.apache.spark.sql.execution.SortExec
-    import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
-    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
-    import org.apache.spark.sql.execution.joins.SortMergeJoinExec
     import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     val abt = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -288,19 +306,11 @@ class DedupSpec extends SparkSpec {
       }
       assert(pairKeyExchanges.isEmpty,
         s"standalone pair-distinct exchange survived:\n$plan")
-      val refineJoins = plan.collect {
-        case j: SortMergeJoinExec if j.leftKeys.exists(k =>
-            k.toString.contains("id_a") || k.toString.contains("id_b")) => j
-      }
+      val refineJoins = joinsOn(plan, "id_a", "id_b")
       assert(refineJoins.size == 4,
         s"expected 2 prescreen + 2 refine joins in:\n$plan")
       refineJoins.foreach { j =>
-        val cleanSide = Seq(j.left, j.right).exists { side =>
-          side.collect { case e: ShuffleExchangeExec => e }.isEmpty &&
-          side.collect { case s: SortExec => s }.isEmpty &&
-          side.collect { case c: InMemoryTableScanExec => c }.nonEmpty
-        }
-        assert(cleanSide,
+        assert(hasCleanCacheSide(j),
           s"join has no exchange-free, sort-free cache side:\n$j")
       }
       val got = out.select("id_a", "id_b").as[(Long, Long)].collect().toSet
@@ -465,14 +475,7 @@ class DedupSpec extends SparkSpec {
     val df = docs.toDF("doc_id", "text")
     val banded = Dedup.simhashNearDups(df, "doc_id", "text", maxDist = 6, bits = 48)
       .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect().toSet
-    // brute force over fingerprints computed by the same expression
-    val fps = df.select($"doc_id",
-      Dedup.simhash($"text", 48).as("fp")).as[(Long, Long)].collect().toMap
-    val brute = (for {
-      (ia, _) <- docs; (ib, _) <- docs if ia < ib
-      h = java.lang.Long.bitCount(fps(ia) ^ fps(ib))
-      if h <= 6
-    } yield (ia, ib, h)).toSet
+    val brute = naiveSimhashPairs(maxDist = 6, bits = 48)
     assert(banded == brute)
     assert(banded.exists(_._3 == 0)) // identical docs collapse to distance 0
   }
@@ -574,5 +577,97 @@ class DedupSpec extends SparkSpec {
       sys.props.remove("graft.eagerShingleCache")
       spark.conf.set("spark.sql.shuffle.partitions", prev)
     }
+  }
+
+  test("repeated identical calls keep their exchange-free cache layout") {
+    // A session that repeats a call on the same input (every benchmark
+    // pass does) persists frames whose plans equal the earlier calls'.
+    // The cache registry must not evict an earlier handle by
+    // unpersisting it: CacheManager matches by plan, so that would
+    // uncache the frame the current call just persisted, and from then
+    // on every id-keyed refine join and bucket self-join would
+    // re-shuffle and re-sort its cache side. Eight calls cover the
+    // registry's six slots for the one- and two-frame callers. Same
+    // AQE-off, broadcast-off contract as the layout tests above.
+    val aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    val abt = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
+    spark.conf.set("spark.sql.adaptive.enabled", "false")
+    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    try {
+      val df = docs.toDF("doc_id", "text")
+      val jaccard = naiveJaccardPairs(3, 0.5)
+      val simhash = naiveSimhashPairs(maxDist = 6, bits = 48)
+      // (name, call, expected pairs, id-keyed joins, bucket self-join key)
+      val callers = Seq[(String, () => DataFrame,
+          Set[(Long, Long)], Int, Option[String])](
+        ("minhashNearDups",
+          () => Dedup.minhashNearDups(df, "doc_id", "text", 3, 0.5),
+          jaccard, 4, Some("band_hash")),
+        ("jaccardPairsIndexed",
+          () => Dedup.jaccardPairsIndexed(df, "doc_id", "text", 3, 0.5),
+          jaccard, 2, None),
+        ("containmentPairsIndexed",
+          () => Dedup.containmentPairsIndexed(df, "doc_id", "text", 3, 0.8),
+          naiveContainmentPairs(3, 0.8), 2, None),
+        ("simhashNearDups",
+          () => Dedup.simhashNearDups(df, "doc_id", "text", maxDist = 6, bits = 48),
+          simhash.map { case (a, b, _) => (a, b) }, 0, Some("bval")))
+      callers.foreach { case (name, call, expect, nIdJoins, bucketKey) =>
+        (1 to 8).foreach { i =>
+          spark.catalog.clearCache()
+          val out = call()
+          val plan = out.queryExecution.executedPlan
+          val idJoins = joinsOn(plan, "id_a", "id_b")
+          assert(idJoins.size == nIdJoins, s"$name call $i:\n$plan")
+          val bucketJoins = joinsOn(plan, bucketKey.toSeq: _*)
+          assert(bucketJoins.size == bucketKey.size, s"$name call $i:\n$plan")
+          (idJoins ++ bucketJoins).foreach { j =>
+            assert(hasCleanCacheSide(j),
+              s"$name call $i: join has no exchange-free, sort-free cache side:\n$j")
+          }
+          val got = out.select("id_a", "id_b").as[(Long, Long)].collect().toSet
+          assert(got == expect, s"$name call $i")
+        }
+      }
+    } finally {
+      spark.conf.set("spark.sql.adaptive.enabled", aqe)
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", abt)
+    }
+  }
+
+  test("the cache registry stays bounded and keeps one handle per plan") {
+    val cm = spark.sharedState.cacheManager
+    def cached(f: DataFrame) =
+      cm.lookupCachedData(f.asInstanceOf[org.apache.spark.sql.classic.DataFrame]).isDefined
+    def samePlan(a: DataFrame, b: DataFrame) =
+      a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed)
+    spark.catalog.clearCache()
+    // seven calls on distinct inputs (ids shifted per call), two
+    // registry frames each: more than the registry may keep
+    def input(k: Int) = docs.map { case (id, t) => (id + 100L * k, t) }
+      .toDF("doc_id", "text")
+    val seen = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+    var newest = Seq.empty[DataFrame]
+    (0 until 7).foreach { k =>
+      val before = Dedup.retainedFrames(spark)
+      Dedup.minhashNearDups(input(k), "doc_id", "text", 3, 0.5)
+      newest = Dedup.retainedFrames(spark).filterNot(f => before.exists(_ eq f))
+      seen ++= newest
+    }
+    assert(newest.size == 2)
+    assert(seen.size == 14)
+    val retained = Dedup.retainedFrames(spark)
+    assert(retained.size <= Dedup.maxRetainedCaches)
+    assert(seen.count(cached) <= Dedup.maxRetainedCaches)
+    assert(newest.forall(f => retained.exists(_ eq f) && cached(f)))
+    // a repeated call replaces its handles: one per plan, still cached
+    Dedup.minhashNearDups(input(6), "doc_id", "text", 3, 0.5)
+    val again = Dedup.retainedFrames(spark)
+    assert(again.size == retained.size)
+    newest.foreach { f =>
+      assert(again.count(samePlan(_, f)) == 1)
+      assert(cached(f))
+    }
+    assert(seen.count(cached) <= Dedup.maxRetainedCaches)
   }
 }

@@ -56,6 +56,34 @@ class PropertiesSpec extends SparkSpec {
     }
   }
 
+  test("WordShingles and SortedIntersectCount order strings without UTF8String.compareTo") {
+    // compareTo throws when spark.testing is set (and looks the flag up
+    // on every call otherwise); both expressions must use binary order.
+    // "é" is 0xC3A9 in UTF-8, so binary order puts it after "z".
+    import graft.expressions.SortedIntersectCount
+    def strs(xs: String*) = Literal.create(
+      new org.apache.spark.sql.catalyst.util.GenericArrayData(
+        xs.map(UTF8String.fromString).toArray[Any]),
+      org.apache.spark.sql.types.ArrayType(StringType, containsNull = false))
+    val prev = sys.props.get("spark.testing")
+    sys.props("spark.testing") = "true"
+    try {
+      val sh = WordShingles(Seq(Literal.create(
+        UTF8String.fromString("b a c a b é z"), StringType)), 1)
+      val got = sh.eval(null).asInstanceOf[ArrayData]
+        .toObjectArray(StringType).map(_.toString).toSeq
+      assert(got == Seq("a", "b", "c", "z", "é"))
+      val n = SortedIntersectCount(Seq(strs("a", "b", "z", "é"),
+        strs("b", "c", "z", "é"))).eval(null)
+      assert(n == 3)
+    } finally {
+      prev match {
+        case Some(v) => sys.props("spark.testing") = v
+        case None => sys.props.remove("spark.testing")
+      }
+    }
+  }
+
   // ---------------------------------------------------------- pigeonhole
 
   test("hamming bands are recall-complete for d <= maxDist (pigeonhole)") {
