@@ -465,24 +465,21 @@ case class STDistance(children: Seq[Expression]) extends GeomExpression {
 }
 
 /** st_envelope_cells(g) — all (bx, by) grid cells of size `cellSize`
-  * that g's envelope covers, as one compiled pass: ONE WKB parse per
-  * row where the former `bucketIds` Column chain paid four (st_xmin /
-  * st_xmax / st_ymin / st_ymax each re-parsed the geometry) plus an
+  * that g's envelope covers (floor of the envelope bounds over
+  * cellSize, x-major order, pinned by SpatialJoinSpec), as one compiled
+  * pass: ONE WKB parse per row where a Column chain pays four (st_xmin /
+  * st_xmax / st_ymin / st_ymax each re-parse the geometry) plus an
   * interpreted `transform`/`flatten` lambda per cell (r16 opt, guide
-  * §1.2 per-task work). Value-identical to that chain — floor of
-  * envelope bounds over cellSize, x-major order — pinned by
-  * SpatialJoinSpec. */
+  * §1.2 per-task work). The candidate generator of
+  * [[graft.plans.SpatialJoinRewrite]], which validates `cellSize`. */
 case class STEnvelopeCells(children: Seq[Expression], cellSize: Double)
     extends GeomExpression {
   override def dataType: DataType = ArrayType(
     StructType(Seq(StructField("bx", LongType), StructField("by", LongType))))
   override protected def evalNotNull(vs: Seq[Any]): Any = {
-    // EMPTY geometry (null JTS envelope, minX=0 > maxX=-1): no cells.
-    // The old 4-parse chain emitted two phantom buckets here (Spark's
-    // `sequence(0, -1)` steps DOWN) — harmless-but-wasted rows that the
-    // refine predicate always rejected (contains/intersects with an
-    // empty geometry is false), pinned by SpatialJoinSpec; the loops
-    // below simply produce none.
+    // EMPTY geometry (null JTS envelope, minX=0 > maxX=-1): the loops
+    // below produce no cells, and an empty geometry joins nothing
+    // (contains/intersects with it is false), pinned by SpatialJoinSpec.
     val e = geom(vs(0)).getEnvelopeInternal
     val bx0 = math.floor(e.getMinX / cellSize).toLong
     val bx1 = math.floor(e.getMaxX / cellSize).toLong
@@ -507,13 +504,14 @@ case class STEnvelopeCells(children: Seq[Expression], cellSize: Double)
   * refine predicate fused into one expression: reference-point dedup
   * (the candidate bucket must hold the min corner of the envelope
   * intersection) AND the exact JTS predicate (`contains` or
-  * `intersects`), with ONE WKB parse per side. The former refine
-  * Column chain (`refBucket` + `st_contains`) parsed each geometry
-  * three times per candidate — st_xmin(a), st_ymin(a), the predicate's
-  * own a (and the same for b): six parses per candidate row, measured
+  * `intersects`), with ONE WKB parse per side. A Column chain
+  * (reference-bucket struct + `st_contains`) parses each geometry three
+  * times per candidate — st_xmin(a), st_ymin(a), the predicate's own a
+  * (and the same for b): six parses per candidate row, measured
   * ~2.6 µs vs ~0.8 µs fused at sf0.1 (r16 opt). Short-circuits the
-  * JTS predicate when the bucket check fails, exactly like the old
-  * `&&`. Value-identical — pinned by SpatialJoinSpec. */
+  * JTS predicate when the bucket check fails. The refine of
+  * [[graft.plans.SpatialJoinRewrite]]; its pairs equal brute force,
+  * pinned by SpatialJoinSpec. */
 case class STPairRefine(children: Seq[Expression], cellSize: Double,
     intersects: Boolean) extends GeomExpression {
   override def dataType: DataType = BooleanType

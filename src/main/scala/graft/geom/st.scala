@@ -31,9 +31,6 @@ object st {
 
   def envelopeCells(g: Column, cellSize: Double): Column =
     c(STEnvelopeCells(Seq(x(g)), cellSize))
-  def pairRefine(a: Column, b: Column, bx: Column, by: Column,
-      cellSize: Double, intersects: Boolean): Column =
-    c(STPairRefine(Seq(x(a), x(b), x(bx), x(by)), cellSize, intersects))
 
   def area(g: Column): Column = c(STArea(Seq(x(g))))
   def buffer(g: Column, dist: Column): Column = c(STBuffer(Seq(x(g), dx(dist))))

@@ -24,11 +24,6 @@ final case class GridConfig(
 
 object Grid {
 
-  /** Cross product of two 1-D axis tables — the reference's
-    * `meshgrid`+`ravel` (`wrf_voronoi.py:121-123`) in long form. Both
-    * inputs are small axis tables; Catalyst broadcasts the cross. */
-  def axesToCells(xs: DataFrame, ys: DataFrame): DataFrame = xs.crossJoin(ys)
-
   /** G11 rectilinear fast path as an API: cell-center spacing → boxes,
     * "we already know exactly what the Voronoi tesselation is"
     * (`delphine/regrid.py:182-203`). Adds a `geom` box column of

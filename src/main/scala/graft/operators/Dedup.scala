@@ -389,11 +389,6 @@ object Dedup {
       Bridge.expression(shingles(text, n))))
   }
 
-  /** Convenience single-expression signature (recomputes shingles per
-    * family — use the two-step form in hot paths). */
-  def minhashSignature(text: Column, n: Int, k: Int): Column =
-    minhashFromShingles(shingles(text, n), k)
-
   /** Internal: candidate id pairs from bucket membership rows
     * (bucketCols → id). Pairs are emitted by a distributed SELF-JOIN on
     * the bucket key — never by per-bucket array expansion, which would
@@ -405,8 +400,8 @@ object Dedup {
     * to size so it never triggers on healthy data. The guard is NOT
     * silent: [[droppedBuckets]] reports exactly which buckets (and how
     * many member rows) the same predicate would drop, and the declared
-    * `dedup_lsh_guard` query keeps that count in the validation path
-    * (VERDICT r8 #2 — at 100 TB a templated-boilerplate corpus must not
+    * `dedup_lsh_guard` query ([[lshGuardReportPortable]]) keeps the
+    * bucket-size distribution in the validation path (VERDICT r8 #2 — at 100 TB a templated-boilerplate corpus must not
     * lose true pairs without a signal). */
   private[operators] def pairsFromBuckets(memb: DataFrame, bucketCols: Seq[String],
       maxBucket: Int, dedup: Boolean = true): DataFrame = {
@@ -480,45 +475,22 @@ object Dedup {
       .filter(col("n_rows") > maxBucket)
 
   /** One-row guard report for the MinHash-LSH banding of `df`: total
-    * buckets, buckets the size guard drops, member rows lost to the
-    * guard, and the observed max bucket size. Declared as the
-    * `dedup_lsh_guard` query so every round's validation records
-    * whether the guard fired (0 dropped on healthy corpora); at 100 TB
-    * this is the loud signal that `maxBucket` needs resizing before
-    * near-dup recall silently degrades. */
-  def lshGuardReport(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, k: Int = 32, bands: Int = 16,
-      maxBucket: Int = 64): DataFrame = {
-    // hashed family: the same bucketing minhashNearDups pairs on, so
-    // the report reflects the candidate path it guards
-    val banded = minhashBandedHashed(
-      df.select(col(idCol).cast("long").as("id"),
-        hashedShingles(col(textCol), shingleN).as("shh")), k, bands)
-    val sizes = banded.groupBy("band", "band_hash")
-      .agg(count(lit(1)).as("n_rows"))
-    sizes.agg(
-      count(lit(1)).as("n_buckets"),
-      sum(when(col("n_rows") > maxBucket, 1L).otherwise(0L))
-        .as("n_buckets_dropped"),
-      sum(when(col("n_rows") > maxBucket, col("n_rows")).otherwise(0L))
-        .as("n_rows_dropped"),
-      max(col("n_rows")).as("max_bucket"),
-      lit(maxBucket.toLong).as("max_bucket_allowed"))
-  }
-
-  /** [[lshGuardReport]] over an ORACLE-EXPRESSIBLE hash family
-    * (VERDICT r9 next #2b): minhash components are 8-hex-char md5
-    * substrings ([[graft.expressions.Md5MinHashSig]] — fixed-width
-    * lowercase hex, so the STRING min is the numeric min and DuckDB's
-    * binary-collation `min` agrees bit for bit), and each band hash is
-    * the md5 of the f-ordered component concat. The engine's candidate
-    * path keeps murmur3 ([[minhashBandedHashed]]); the guard only reads the
-    * bucket-size DISTRIBUTION, which is statistically equivalent under
-    * any sound hash family, so making the declared `dedup_lsh_guard`
-    * query portable costs nothing it measures. The signature is one
-    * compiled row-local pass (no token×k explode, no extra shuffle);
-    * only the bands-per-doc explode and the two grouping shuffles of
-    * the murmur3 form remain. */
+    * buckets, buckets the `maxBucket` size guard would drop, member rows
+    * lost to the guard, and the observed max bucket size — the loud
+    * signal that `maxBucket` needs resizing before near-dup recall
+    * silently degrades. The declared `dedup_lsh_guard` query runs it.
+    *
+    * The hash family is ORACLE-EXPRESSIBLE (VERDICT r9 next #2b):
+    * minhash components are 8-hex-char md5 substrings
+    * ([[graft.expressions.Md5MinHashSig]] — fixed-width lowercase hex,
+    * so the STRING min is the numeric min and DuckDB's binary-collation
+    * `min` agrees bit for bit), and each band hash is the md5 of the
+    * f-ordered component concat. The engine's candidate path keeps
+    * murmur3 ([[minhashBandedHashed]]), so the report counts a
+    * statistically equivalent bucket-size DISTRIBUTION, not the very
+    * buckets the candidate path drops. The signature is one compiled
+    * row-local pass (no token×k explode, no extra shuffle); the
+    * bands-per-doc explode and two grouping shuffles follow. */
   def lshGuardReportPortable(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, k: Int = 32, bands: Int = 16,
       maxBucket: Int = 64): DataFrame = {

@@ -1,25 +1,24 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.catalyst.plans.logical.Join
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.geom.st
+import graft.plans.SpatialJoinRewrite
 
-/** Distributed spatial join via grid-bucket explode + exact refine
-  * (SURVEY §2.3 J3/J4, §4 "spatial-index join").
+/** The DataFrame entry to the spatial-join planner (SURVEY §2.3 J3/J4,
+  * §4 "spatial-index join").
   *
   * The reference leans on GeoPandas' in-RAM R-tree (`sjoin`
   * delphine/regrid.py:167-177, `overlay` :267-270) — single-process,
-  * whole-dataset-in-memory. The scale-out re-expression: assign every
-  * geometry the grid buckets its envelope covers (a generator over pure
-  * column arithmetic — codegen'd, no shuffle), equi-join on the bucket id
-  * (stock shuffle-hash/sort-merge join on an 16-byte key — Catalyst
-  * plans, AQE handles skew), then refine with the exact JTS predicate.
-  *
-  * Duplicate-pair elimination uses REFERENCE-POINT dedup: a candidate
-  * pair may share several buckets, but is emitted only from the bucket
-  * containing the top-left corner of the envelope intersection — pure
-  * arithmetic, no `distinct()` shuffle afterwards.
+  * whole-dataset-in-memory. The scale-out re-expression is a grid-bucket
+  * equi-join with an exact refine, built by ONE planner,
+  * [[graft.plans.SpatialJoinRewrite]]: [[joinContains]] and
+  * [[overlayIntersection]] write the plain join on `st_contains` /
+  * `st_intersects` and hand it to that rule's rewrite with the call's
+  * own cell size, the same plan a SQL join gets from the rule.
   *
   * 100 TB notes: shuffle volume is O(geoms × buckets-per-geom); pick
   * `cellSize` near the median geometry extent so buckets-per-geom stays
@@ -28,134 +27,39 @@ import graft.geom.st
   */
 object SpatialJoin {
 
-  /** Packed ids of all buckets a geometry's envelope covers. */
-  def bucketIds(geom: Column, cellSize: Double): Column = {
-    val bx0 = floor(st.xmin(geom) / cellSize).cast("long")
-    val bx1 = floor(st.xmax(geom) / cellSize).cast("long")
-    val by0 = floor(st.ymin(geom) / cellSize).cast("long")
-    val by1 = floor(st.ymax(geom) / cellSize).cast("long")
-    flatten(transform(sequence(bx0, bx1), bx =>
-      transform(sequence(by0, by1), by =>
-        struct(bx.as("bx"), by.as("by")))))
-  }
+  /** `joined` — a plain join on one spatial predicate — planned by the
+    * rule's rewrite at `cellSize`. */
+  private def planned(joined: DataFrame, cellSize: Double): DataFrame =
+    Bridge.ofRows(joined.sparkSession, SpatialJoinRewrite.rewrite(
+      joined.queryExecution.analyzed.asInstanceOf[Join], cellSize))
 
-  /** The single bucket holding the reference point (min corner of the
-    * envelope intersection) of a candidate pair. */
-  private def refBucket(a: Column, b: Column, cellSize: Double): Column =
-    struct(
-      floor(greatest(st.xmin(a), st.xmin(b)) / cellSize).cast("long").as("bx"),
-      floor(greatest(st.ymin(a), st.ymin(b)) / cellSize).cast("long").as("by"))
-
-  /** Spatial join of `left` and `right` on `predicate(leftGeom,
-    * rightGeom)`. Column names of the two sides must be disjoint.
-    * Emits each qualifying pair exactly once.
-    *
-    * The generic-predicate form: bucket explode and reference-point
-    * dedup run as the fused one-parse-per-row expressions
-    * ([[graft.expressions.STEnvelopeCells]]), but the caller's
-    * predicate stays a separate Column, so its geometry arguments
-    * re-parse. [[joinContains]]/[[overlayIntersection]] — the two
-    * named predicates every declared query uses — go through
-    * [[joinFused]] instead, which folds the predicate into the same
-    * single parse (r16 opt; 6 WKB parses per candidate → 2). */
-  def join(left: DataFrame, right: DataFrame,
-      leftGeom: String, rightGeom: String, cellSize: Double,
-      predicate: (Column, Column) => Column): DataFrame = {
-    val l = left.withColumn("__bucket",
-      explode(st.envelopeCells(col(leftGeom), cellSize)))
-    val r = right.withColumn("__bucket",
-      explode(st.envelopeCells(col(rightGeom), cellSize)))
-    l.join(r, "__bucket")
-      .filter(col("__bucket") === refBucket(col(leftGeom), col(rightGeom), cellSize) &&
-        predicate(col(leftGeom), col(rightGeom)))
-      .drop("__bucket")
-  }
-
-  /** [[join]] with the refine fully fused ([[graft.expressions.STPairRefine]]):
-    * reference-point dedup + the named JTS predicate in ONE expression,
-    * one WKB parse per side per candidate. */
-  private def joinFused(left: DataFrame, right: DataFrame,
-      leftGeom: String, rightGeom: String, cellSize: Double,
-      intersects: Boolean): DataFrame = {
-    val l = left.withColumn("__bucket",
-      explode(st.envelopeCells(col(leftGeom), cellSize)))
-    val r = right.withColumn("__bucket",
-      explode(st.envelopeCells(col(rightGeom), cellSize)))
-    l.join(r, "__bucket")
-      .filter(st.pairRefine(col(leftGeom), col(rightGeom),
-        col("__bucket.bx"), col("__bucket.by"), cellSize, intersects))
-      .drop("__bucket")
-  }
-
-  /** J3: point-in-polygon join (the reference's `sjoin`). */
+  /** J3: point-in-polygon join (the reference's `sjoin`): every pair with
+    * `st_contains(polyGeom, pointGeom)`, each exactly once. Column names
+    * of the two sides must be disjoint. */
   def joinContains(polys: DataFrame, points: DataFrame,
       polyGeom: String, pointGeom: String, cellSize: Double): DataFrame =
-    joinFused(polys, points, polyGeom, pointGeom, cellSize,
-      intersects = false)
+    planned(polys.join(points, st.contains(col(polyGeom), col(pointGeom))),
+      cellSize)
 
   /** J4: overlay intersection (the reference's `gpd.overlay(...,
     * "intersection")`) — qualifying pairs carry both attribute sets plus
-    * the intersection piece and its area. */
+    * the intersection piece and its area. Column names of the two sides
+    * must be disjoint. */
   def overlayIntersection(left: DataFrame, right: DataFrame,
       leftGeom: String, rightGeom: String, cellSize: Double): DataFrame =
-    joinFused(left, right, leftGeom, rightGeom, cellSize,
-      intersects = true)
+    planned(left.join(right, st.intersects(col(leftGeom), col(rightGeom))),
+      cellSize)
       .withColumn("__piece", st.intersection(col(leftGeom), col(rightGeom)))
       .withColumn("piece_area", st.area(col("__piece")))
       .withColumnRenamed("__piece", "piece_geom")
 
-  /** Distance join (`ST_DWithin`): every (a, b) point pair within
-    * Euclidean distance `d`, as `(id_a, id_b, dist)`. The left side
-    * explodes to the grid cells its d-radius disc's bounding box
-    * covers; the right side sits in its OWN single cell — so the
-    * candidate generator is one equi-join on cell ids and each
-    * qualifying pair is emitted exactly once (no dedup pass). The
-    * refine compares SQUARED distances (`dx²+dy² ≤ d²` — exact single
-    * IEEE ops), and `dist` is one final sqrt.
+  /** SELF distance join (`ST_DWithin`): every unordered pair of `pts`
+    * within Euclidean distance `d`, as (id_a, id_b, dist) with id_a <
+    * id_b. The refine compares SQUARED distances (`dx²+dy² ≤ d²` — exact
+    * single IEEE ops), and `dist` is one final sqrt. Pick `cellSize` ≈
+    * `d`: the disc bbox then covers ≤ 9 cells.
     *
-    * 100 TB shape: shuffle carries (id, x, y, cell) only; per-pair
-    * work is three multiplies. Pick `cellSize` ≈ `d`: the disc bbox
-    * then covers ≤ 9 cells, so the explode fan-out is O(1) per row. */
-  def joinWithinDistance(a: DataFrame, aId: String, aGeom: String,
-      b: DataFrame, bId: String, bGeom: String,
-      d: Double, cellSize: Double): DataFrame = {
-    require(d >= 0, s"d=$d")
-    require(cellSize > 0, s"cellSize=$cellSize")
-    val lhs = a.select(col(aId).as("id_a"),
-        st.stx(col(aGeom)).as("__ax"), st.sty(col(aGeom)).as("__ay"))
-      .withColumn("__cell", explode(flatten(transform(
-        sequence(floor((col("__ax") - d) / cellSize).cast("long"),
-          floor((col("__ax") + d) / cellSize).cast("long")), bx =>
-          transform(
-            sequence(floor((col("__ay") - d) / cellSize).cast("long"),
-              floor((col("__ay") + d) / cellSize).cast("long")), by =>
-            struct(bx.as("bx"), by.as("by")))))))
-    val rhs = b.select(col(bId).as("id_b"),
-        st.stx(col(bGeom)).as("__bx"), st.sty(col(bGeom)).as("__by"))
-      .withColumn("__cell", struct(
-        floor(col("__bx") / cellSize).cast("long").as("bx"),
-        floor(col("__by") / cellSize).cast("long").as("by")))
-    val dx = col("__ax") - col("__bx")
-    val dy = col("__ay") - col("__by")
-    // SHUFFLE_HASH, not broadcast: a small input here is an EXPLODED
-    // side with O(1/cellSize²) fan-out and a single-file probe side —
-    // Catalyst's size estimate would broadcast the 9×-exploded left and
-    // run the probe at the parquet file's parallelism (near-serial on a
-    // small file; a driver OOM at scale). Hash-partitioning both sides
-    // on the cell key is the plan that survives 100 TB: candidate
-    // generation and the distance refine parallelize with the shuffle
-    // partition count on both ends.
-    lhs.join(rhs.hint("shuffle_hash"), "__cell")
-      .filter(dx * dx + dy * dy <= lit(d) * lit(d))
-      .select(col("id_a"), col("id_b"), sqrt(dx * dx + dy * dy).as("dist"))
-  }
-
-  /** SELF distance join: every unordered pair of `pts` within Euclidean
-    * distance `d`, as (id_a, id_b, dist) with id_a < id_b — the same
-    * pair multiset as [[joinWithinDistance]](pts, pts) followed by an
-    * `id_a < id_b` filter, at about half the candidate work.
-    *
-    * The generic form explodes the probe side to the FULL disc-bbox
+    * A two-sided form explodes the probe side to the FULL disc-bbox
     * neighborhood (9 cells at cellSize ≈ d), so every qualifying pair
     * is generated — and distance-refined — in BOTH orientations, and
     * the caller then discards half. Here the probe side covers only
@@ -201,9 +105,13 @@ object SpatialJoin {
     // recomputed from the carried coords (3 cheap ops) instead of
     // shuffling a second 16-byte struct per exploded row
     val sameCell = col("__cell") === cellOf(col("__ax"), col("__ay"))
-    // same SHUFFLE_HASH rationale as joinWithinDistance: the exploded
-    // side must not broadcast, and the probe side must not run at a
-    // single small file's parallelism
+    // SHUFFLE_HASH, not broadcast: a small input here is an EXPLODED
+    // side with O(1/cellSize²) fan-out and a single-file probe side —
+    // Catalyst's size estimate would broadcast the exploded side and
+    // run the probe at the parquet file's parallelism (near-serial on a
+    // small file; a driver OOM at scale). Hash-partitioning both sides
+    // on the cell key parallelizes candidate generation and the
+    // distance refine with the shuffle partition count on both ends.
     lhs.join(rhs.hint("shuffle_hash"), "__cell")
       .filter(dx * dx + dy * dy <= lit(d) * lit(d) &&
         (!sameCell || col("id_a") < col("id_b")))

@@ -4,106 +4,102 @@ import org.apache.spark.sql.catalyst.expressions._
 import org.apache.spark.sql.catalyst.plans.Inner
 import org.apache.spark.sql.catalyst.plans.logical._
 import org.apache.spark.sql.catalyst.rules.Rule
-import org.apache.spark.sql.types._
+import org.apache.spark.sql.types.ArrayType
 
-import graft.expressions.{STContains, STIntersects, STWithin, STXMax, STXMin, STYMax, STYMin}
+import graft.expressions.{STContains, STEnvelopeCells, STIntersects, STPairRefine, STWithin}
 
-/** Optimizer rule planning spatial-predicate joins (SURVEY §4
-  * "spatial-index join", approach (a)): an inner join whose condition is
-  * exactly `st_intersects(l, r)` would be planned as a
-  * BroadcastNestedLoopJoin — O(|L|·|R|) predicate evaluations. This rule
-  * rewrites it into the bucket-explode equi-join the SpatialJoin API
-  * builds by hand:
+/** The engine's one spatial-join planner (SURVEY §4 "spatial-index
+  * join", approach (a)). An inner join whose condition is
+  * `st_intersects(l, r)` would be planned as a BroadcastNestedLoopJoin —
+  * O(|L|·|R|) predicate evaluations. [[rewrite]] turns it into a
+  * grid-bucket equi-join with a fused exact refine:
   *
   *   Project(original output)
-  *     Filter(refBucket dedup ∧ st_intersects(l, r))
-  *       Join(bucket_l = bucket_r)
-  *         Generate(explode(buckets(lGeom)), left)
-  *         Generate(explode(buckets(rGeom)), right)
+  *     Filter(st_pair_refine(a, b, cell) ∧ carried conjuncts)
+  *       Join(__bucket_l = __bucket_r)
+  *         Generate(explode(st_envelope_cells(lGeom)), left)
+  *         Generate(explode(st_envelope_cells(rGeom)), right)
   *
   * so Catalyst plans a stock shuffled/broadcast HASH join on the 16-byte
-  * bucket key (AQE skew-splitting included) with exact refine after.
-  * Bucket resolution comes from `spark.graft.spatialJoin.cellSize`
-  * (default 1.0).
+  * cell key (AQE skew-splitting included). Each geometry is exploded to
+  * the cells its envelope covers ([[STEnvelopeCells]], one WKB parse per
+  * row); [[STPairRefine]] keeps a candidate only in the cell holding the
+  * min corner of the two envelopes' intersection (each pair is emitted
+  * once, no `distinct()`) and runs the exact JTS predicate, one parse
+  * per side per candidate.
+  *
+  * Two entry points share [[rewrite]]:
+  *  - the rule itself, for SQL and plain DataFrame joins, with the cell
+  *    size from `spark.graft.spatialJoin.cellSize` (default 1.0);
+  *  - [[graft.operators.SpatialJoin]], the DataFrame API, with each
+  *    call's own cell size.
   *
   * Matched shapes: the join condition's conjuncts are split and the
   * FIRST st_intersects / st_contains / st_within conjunct with one
   * geometry per side drives the rewrite (envelope overlap is a
-  * necessary condition for all three predicates); the spatial predicate
-  * AND every remaining conjunct move into the refine filter above the
-  * bucket join. Disjunctions and predicates mixing both sides' columns
-  * inside one geometry argument are left untouched — as is any join
-  * whose condition ALSO carries an equi conjunct across the two sides
-  * (hash join on the selective key + spatial filter beats the bucket
-  * plan; see [[isEquiAcrossSides]]).
+  * necessary condition for all three predicates; `st_within(a, b)` is
+  * refined as `b` contains `a`). Every remaining conjunct moves into the
+  * refine filter above the bucket join. Disjunctions and predicates
+  * mixing both sides' columns inside one geometry argument are left
+  * untouched — as is any join whose condition ALSO carries an equi
+  * conjunct across the two sides (hash join on the selective key +
+  * spatial filter beats the bucket plan; see [[isEquiAcrossSides]]) and
+  * any non-inner join, such as a `crossJoin`.
   *
   * Activate per session via `spark.experimental.extraOptimizations ++=
   * Seq(SpatialJoinRewrite)` or cluster-wide through [[graft.GraftExtensions]].
   */
 object SpatialJoinRewrite extends Rule[LogicalPlan] {
 
-  private val bucketType = StructType(Seq(
-    StructField("bx", LongType, nullable = false),
-    StructField("by", LongType, nullable = false)))
+  private val cellSizeKey = "spark.graft.spatialJoin.cellSize"
 
-  private def cellSize: Double =
-    conf.getConfString("spark.graft.spatialJoin.cellSize", "1.0").toDouble
+  /** A matched join: the refine predicate `a contains b` (or `a
+    * intersects b`), one geometry per side, and the conjuncts carried
+    * into the refine filter. */
+  private case class Spatial(a: Expression, b: Expression,
+      intersects: Boolean, rest: Seq[Expression])
 
-  private def floorDiv(e: Expression, cell: Double): Expression =
-    Floor(Divide(e, Literal(cell)))
-
-  /** flatten(transform(seq(bx0,bx1), bx -> transform(seq(by0,by1),
-    * by -> struct(bx, by)))) — the covering-bucket generator. */
-  private def bucketsOf(geom: Expression, cell: Double): Expression = {
-    val bx0 = floorDiv(STXMin(Seq(geom)), cell)
-    val bx1 = floorDiv(STXMax(Seq(geom)), cell)
-    val by0 = floorDiv(STYMin(Seq(geom)), cell)
-    val by1 = floorDiv(STYMax(Seq(geom)), cell)
-    val bx = NamedLambdaVariable("bx", LongType, nullable = false)
-    val by = NamedLambdaVariable("by", LongType, nullable = false)
-    val innerStruct = CreateNamedStruct(Seq(
-      Literal("bx"), bx, Literal("by"), by))
-    // Sequence is TimeZoneAwareExpression: unresolved until tz is set
-    val tz = Some(conf.sessionLocalTimeZone)
-    val inner = ArrayTransform(Sequence(by0, by1, None, tz),
-      LambdaFunction(innerStruct, Seq(by)))
-    val outer = ArrayTransform(Sequence(bx0, bx1, None, tz),
-      LambdaFunction(inner, Seq(bx)))
-    Flatten(outer)
+  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
+    case j: Join => spatialOf(j).fold[LogicalPlan](j)(build(j, _, confCellSize))
   }
 
-  /** Bucket of the envelope-intersection min corner — emit-once dedup. */
-  private def refBucket(a: Expression, b: Expression, cell: Double): Expression =
-    CreateNamedStruct(Seq(
-      Literal("bx"), floorDiv(Greatest(Seq(STXMin(Seq(a)), STXMin(Seq(b)))), cell),
-      Literal("by"), floorDiv(Greatest(Seq(STYMin(Seq(a)), STYMin(Seq(b)))), cell)))
+  /** The bucket join for `j`, an inner join on a spatial predicate, at
+    * grid cell size `cellSize`. */
+  def rewrite(j: Join, cellSize: Double): LogicalPlan =
+    build(j, spatialOf(j).getOrElse(throw new IllegalArgumentException(
+      s"not a spatial-predicate join: ${j.condition}")), cellSize)
+
+  private def confCellSize: Double = {
+    val v = conf.getConfString(cellSizeKey, "1.0")
+    v.toDoubleOption.getOrElse(throw new IllegalArgumentException(
+      s"$cellSizeKey must be a number, got '$v'"))
+  }
 
   private def splitConj(e: Expression): Seq[Expression] = e match {
     case And(l, r) => splitConj(l) ++ splitConj(r)
     case other => Seq(other)
   }
 
-  /** (leftGeom, rightGeom) when `e` is a supported spatial predicate
-    * with one geometry argument per join side. Envelope overlap is
-    * necessary for st_intersects AND for st_contains/st_within (the
-    * contained geometry's envelope lies inside the container's), so the
-    * same covering-bucket equi-join is a sound candidate generator for
-    * all three; the exact predicate always re-runs in the refine. */
+  /** The refine form of `e` — (a, b, intersects) with the predicate
+    * `a contains b` or `a intersects b` — when `e` is a supported
+    * spatial predicate with one geometry argument per join side. */
   private def spatialPair(e: Expression, left: LogicalPlan,
-      right: LogicalPlan): Option[(Expression, Expression)] = {
-    val args = e match {
-      case STIntersects(Seq(a, b)) => Some((a, b))
-      case STContains(Seq(a, b)) => Some((a, b))
-      case STWithin(Seq(a, b)) => Some((a, b))
+      right: LogicalPlan): Option[(Expression, Expression, Boolean)] = {
+    val pair = e match {
+      case STIntersects(Seq(a, b)) => Some((a, b, true))
+      case STContains(Seq(a, b)) => Some((a, b, false))
+      case STWithin(Seq(a, b)) => Some((b, a, false))
       case _ => None
     }
-    args.flatMap { case (a, b) =>
-      if (a.references.subsetOf(left.outputSet) &&
-          b.references.subsetOf(right.outputSet)) Some((a, b))
-      else if (b.references.subsetOf(left.outputSet) &&
-          a.references.subsetOf(right.outputSet)) Some((b, a))
-      else None
-    }
+    pair.filter { case (a, b, _) => crossesSides(a, b, left, right) }
+  }
+
+  /** True when `a` reads only one side and `b` only the other. */
+  private def crossesSides(a: Expression, b: Expression, left: LogicalPlan,
+      right: LogicalPlan): Boolean = {
+    val (ra, rb) = (a.references, b.references)
+    (ra.subsetOf(left.outputSet) && rb.subsetOf(right.outputSet)) ||
+      (rb.subsetOf(left.outputSet) && ra.subsetOf(right.outputSet))
   }
 
   /** True when `e` is an equi-join conjunct (`l.k = r.k`) referencing
@@ -114,52 +110,44 @@ object SpatialJoinRewrite extends Rule[LogicalPlan] {
     * the far-less-selective bucket key. Leave such joins untouched. */
   private def isEquiAcrossSides(e: Expression, left: LogicalPlan,
       right: LogicalPlan): Boolean = e match {
-    case EqualTo(a, b) =>
-      val (ra, rb) = (a.references, b.references)
-      (ra.nonEmpty && rb.nonEmpty) &&
-        ((ra.subsetOf(left.outputSet) && rb.subsetOf(right.outputSet)) ||
-          (rb.subsetOf(left.outputSet) && ra.subsetOf(right.outputSet)))
-    case EqualNullSafe(a, b) =>
-      val (ra, rb) = (a.references, b.references)
-      (ra.nonEmpty && rb.nonEmpty) &&
-        ((ra.subsetOf(left.outputSet) && rb.subsetOf(right.outputSet)) ||
-          (rb.subsetOf(left.outputSet) && ra.subsetOf(right.outputSet)))
+    case Equality(a, b) =>
+      a.references.nonEmpty && b.references.nonEmpty &&
+        crossesSides(a, b, left, right)
     case _ => false
   }
 
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transformUp {
-    case j @ Join(left, right, Inner, Some(cond), hint)
-        if !splitConj(cond).exists(isEquiAcrossSides(_, left, right)) =>
+  private def spatialOf(j: Join): Option[Spatial] = j match {
+    case Join(left, right, Inner, Some(cond), _) =>
       val conjuncts = splitConj(cond)
-      val hit = conjuncts.iterator.zipWithIndex
-        .map { case (c, i) => (i, spatialPair(c, left, right)) }
-        .collectFirst { case (i, Some(pair)) => (i, pair) }
-      hit match {
-        case Some((i, (lGeom, rGeom))) =>
-          rewrite(j, left, right, lGeom, rGeom,
-            conjuncts(i), conjuncts.patch(i, Nil, 1), hint)
-        case None => j
-      }
+      if (conjuncts.exists(isEquiAcrossSides(_, left, right))) None
+      else conjuncts.indices.iterator
+        .flatMap(i => spatialPair(conjuncts(i), left, right).map {
+          case (a, b, intersects) =>
+            Spatial(a, b, intersects, conjuncts.patch(i, Nil, 1))
+        })
+        .nextOption()
+    case _ => None
   }
 
-  private def rewrite(j: Join, left: LogicalPlan, right: LogicalPlan,
-      lGeom: Expression, rGeom: Expression, spatial: Expression,
-      rest: Seq[Expression], hint: JoinHint): LogicalPlan = {
-    val cell = cellSize
-    val lBucket = AttributeReference("__bucket_l", bucketType, nullable = false)()
-    val rBucket = AttributeReference("__bucket_r", bucketType, nullable = false)()
-    val lGen = Generate(Explode(bucketsOf(lGeom, cell)), Nil,
-      outer = false, qualifier = None, generatorOutput = Seq(lBucket), child = left)
-    val rGen = Generate(Explode(bucketsOf(rGeom, cell)), Nil,
-      outer = false, qualifier = None, generatorOutput = Seq(rBucket), child = right)
-    val bucketJoin = Join(lGen, rGen, Inner,
-      Some(EqualTo(lBucket, rBucket)), hint)
-    // emit-once dedup ∧ the exact spatial predicate ∧ every carried
-    // conjunct of the original join condition
-    val refined = Filter(
-      (EqualTo(lBucket, refBucket(lGeom, rGeom, cell)) +: spatial +: rest)
-        .reduce(And),
-      bucketJoin)
-    Project(j.output, refined)
+  private def build(j: Join, m: Spatial, cellSize: Double): LogicalPlan = {
+    // a non-positive cell size yields no cells (bx1 < bx0) and loses
+    // pairs; zero or ±∞ puts envelopes in infinite or one-for-all cells
+    require(cellSize > 0 && !cellSize.isInfinite,
+      s"spatial-join cell size must be finite and > 0, got $cellSize")
+    val (lGeom, rGeom) =
+      if (m.a.references.subsetOf(j.left.outputSet)) (m.a, m.b) else (m.b, m.a)
+    def cells(geom: Expression, side: LogicalPlan, name: String) = {
+      val gen = STEnvelopeCells(Seq(geom), cellSize)
+      val cell = AttributeReference(name,
+        gen.dataType.asInstanceOf[ArrayType].elementType)()
+      (cell, Generate(Explode(gen), Nil, outer = false, qualifier = None,
+        generatorOutput = Seq(cell), child = side))
+    }
+    val (lCell, lGen) = cells(lGeom, j.left, "__bucket_l")
+    val (rCell, rGen) = cells(rGeom, j.right, "__bucket_r")
+    val refine = STPairRefine(Seq(m.a, m.b,
+      GetStructField(lCell, 0), GetStructField(lCell, 1)), cellSize, m.intersects)
+    Project(j.output, Filter((refine +: m.rest).reduce(And),
+      Join(lGen, rGen, Inner, Some(EqualTo(lCell, rCell)), j.hint)))
   }
 }

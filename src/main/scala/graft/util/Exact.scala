@@ -88,9 +88,4 @@ object Exact {
     val unit = "1" + "0" * dec
     s"sum(cast(round(($expr) * $unit) as bigint)) / $unit.0"
   }
-
-  def sqlFixedAvg(expr: String, dec: Int): String = {
-    val unit = "1" + "0" * dec
-    s"sum(cast(round(($expr) * $unit) as bigint)) / (count(*) * $unit.0)"
-  }
 }

@@ -1,7 +1,9 @@
 package org.apache.spark.sql.graftbridge
 
-import org.apache.spark.sql.Column
+import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.classic
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column ↔ Catalyst-Expression bridge.
@@ -21,7 +23,13 @@ object Bridge {
     * can be a non-integer spelling on some platforms (e.g. "auto"
     * with AQE) — `SQLConf.numShufflePartitions` is the integer API,
     * but `sessionState` is `private[sql]`, hence the re-export. */
-  def numShufflePartitions(spark: org.apache.spark.sql.SparkSession): Int =
-    spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession]
+  def numShufflePartitions(spark: SparkSession): Int =
+    spark.asInstanceOf[classic.SparkSession]
       .sessionState.conf.numShufflePartitions
+
+  /** A DataFrame over a logical plan the engine built itself (the
+    * spatial-join planner's rewrite). `Dataset.ofRows` is
+    * `private[sql]`, hence the re-export. */
+  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
+    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 }

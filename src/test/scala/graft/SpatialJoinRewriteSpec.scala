@@ -1,14 +1,18 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.execution.{GenerateExec, SparkPlan}
+import org.apache.spark.sql.execution.exchange.Exchange
+import org.apache.spark.sql.execution.joins.BaseJoinExec
 import org.apache.spark.sql.functions._
 
 import graft.geom.st
 import graft.operators.SpatialJoin
 import graft.plans.SpatialJoinRewrite
 
-/** The optimizer rule: a bare st_intersects join plans as a hash
+/** The spatial-join planner: a bare st_intersects join plans as a hash
   * equi-join on buckets instead of a BroadcastNestedLoopJoin, with
-  * identical results to the hand-built SpatialJoin API. */
+  * brute-force results, and the SpatialJoin API gets the same plan. */
 class SpatialJoinRewriteSpec extends SparkSpec {
   import spark.implicits._
 
@@ -16,6 +20,18 @@ class SpatialJoinRewriteSpec extends SparkSpec {
     super.beforeAll()
     spark.experimental.extraOptimizations =
       spark.experimental.extraOptimizations :+ SpatialJoinRewrite
+  }
+
+  private val cellSizeKey = "spark.graft.spatialJoin.cellSize"
+
+  private def withConf[T](kvs: (String, String)*)(body: => T): T = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
   }
 
   private def boxesA = (0 until 30).map(i =>
@@ -33,10 +49,9 @@ class SpatialJoinRewriteSpec extends SparkSpec {
     assert(plan.contains("Generate"), "bucket explode missing from plan")
 
     val viaRule = j.select("aid", "bid").as[(Long, Long)].collect().toSet
-    val viaApi = SpatialJoin.join(boxesA, boxesB, "ga", "gb", 1.0,
-      (l, r) => st.intersects(l, r))
+    val brute = boxesA.crossJoin(boxesB).filter(st.intersects($"ga", $"gb"))
       .select("aid", "bid").as[(Long, Long)].collect().toSet
-    assert(viaRule == viaApi)
+    assert(viaRule == brute)
     assert(viaRule.nonEmpty)
   }
 
@@ -61,11 +76,10 @@ class SpatialJoinRewriteSpec extends SparkSpec {
     assert(!plan.contains("BroadcastNestedLoop") && !plan.contains("CartesianProduct"),
       s"nested-loop join survived the conjunction rewrite:\n$plan")
     val viaRule = j.select("aid", "bid").as[(Long, Long)].collect().toSet
-    val viaApi = SpatialJoin.join(
-      boxesA.filter($"aid" < 10), boxesB.filter($"bid" =!= 105L),
-      "ga", "gb", 1.0, (l, r) => st.intersects(l, r))
+    val brute = boxesA.crossJoin(boxesB)
+      .filter(st.intersects($"ga", $"gb") && $"aid" < 10 && $"bid" =!= 105L)
       .select("aid", "bid").as[(Long, Long)].collect().toSet
-    assert(viaRule == viaApi)
+    assert(viaRule == brute)
     assert(viaRule.nonEmpty)
   }
 
@@ -125,5 +139,73 @@ class SpatialJoinRewriteSpec extends SparkSpec {
     } yield (aid, bid)).toSet
     assert(gotContains == brute)
     assert(gotContains.nonEmpty)
+  }
+
+  test("the rewritten plan explodes st_envelope_cells and refines with st_pair_refine") {
+    val plan = boxesA.join(boxesB, st.intersects($"ga", $"gb"))
+      .queryExecution.executedPlan.toString
+    assert(plan.contains("st_envelope_cells") && plan.contains("st_pair_refine"),
+      s"the fused explode and refine are missing from the plan:\n$plan")
+  }
+
+  test("a SQL-text st_within join plans no nested loop and equals brute force") {
+    GraftFunctions.register(spark)
+    boxesA.createOrReplaceTempView("sj_a")
+    boxesB.createOrReplaceTempView("sj_b")
+    val j = spark.sql(
+      "SELECT a.aid, b.bid FROM sj_a a JOIN sj_b b ON st_within(b.gb, a.ga)")
+    val plan = j.queryExecution.executedPlan.toString
+    assert(!plan.contains("BroadcastNestedLoop") && !plan.contains("CartesianProduct"),
+      s"nested-loop join survived the SQL st_within rewrite:\n$plan")
+    val got = j.as[(Long, Long)].collect().toSet
+    val brute = boxesA.crossJoin(boxesB).filter(st.within($"gb", $"ga"))
+      .select("aid", "bid").as[(Long, Long)].collect().toSet
+    assert(got == brute)
+    assert(got.nonEmpty)
+  }
+
+  test("SpatialJoin.joinContains plans like a plain st_contains join through the rule") {
+    // Generate, Exchange and join nodes of the executed plan, with AQE
+    // and broadcast off so both sides shuffle and nothing re-plans
+    def shape(df: DataFrame) = {
+      val p: SparkPlan = df.queryExecution.executedPlan
+      (p.collect { case g: GenerateExec => g }.size,
+        p.collect { case e: Exchange => e }.size,
+        p.collect { case b: BaseJoinExec => b }.size)
+    }
+    def rows(df: DataFrame) =
+      df.select("aid", "bid").as[(Long, Long)].collect().toSeq.sorted
+    withConf(cellSizeKey -> "1.5", "spark.sql.adaptive.enabled" -> "false",
+        "spark.sql.autoBroadcastJoinThreshold" -> "-1") {
+      val viaApi = SpatialJoin.joinContains(boxesA, boxesB, "ga", "gb", 1.5)
+      val viaRule = boxesA.join(boxesB, st.contains($"ga", $"gb"))
+      assert(viaApi.columns.toSeq == viaRule.columns.toSeq)
+      assert(rows(viaApi) == rows(viaRule))
+      assert(rows(viaApi).nonEmpty)
+      assert(shape(viaApi) == shape(viaRule))
+      assert(shape(viaApi) == (2, 2, 1))
+    }
+  }
+
+  test("a cell size that is not finite and > 0 is rejected on both entry points") {
+    for (c <- Seq(-1.0, 0.0, Double.NaN, Double.PositiveInfinity)) {
+      for (call <- Seq(
+          () => SpatialJoin.joinContains(boxesA, boxesB, "ga", "gb", c),
+          () => SpatialJoin.overlayIntersection(boxesA, boxesB, "ga", "gb", c))) {
+        val e = intercept[IllegalArgumentException](call().collect())
+        assert(e.getMessage.contains("cell size must be finite and > 0"),
+          s"cellSize=$c: ${e.getMessage}")
+      }
+    }
+    def confJoin() =
+      boxesA.join(boxesB, st.intersects($"ga", $"gb")).collect()
+    val negative = withConf(cellSizeKey -> "-1") {
+      intercept[IllegalArgumentException](confJoin())
+    }
+    assert(negative.getMessage.contains("cell size must be finite and > 0"))
+    val garbage = withConf(cellSizeKey -> "abc") {
+      intercept[IllegalArgumentException](confJoin())
+    }
+    assert(garbage.getMessage.contains(s"$cellSizeKey must be a number"))
   }
 }

@@ -5,8 +5,9 @@ import org.apache.spark.sql.functions._
 import graft.geom.st
 import graft.operators.SpatialJoin
 
-/** Bucket-explode spatial join: correctness of candidate generation,
-  * reference-point pair dedup, and predicate refinement. */
+/** Bucket-explode spatial join through the DataFrame API: correctness
+  * of candidate generation, reference-point pair dedup, and predicate
+  * refinement, against brute-force references. */
 class SpatialJoinSpec extends SparkSpec {
   import spark.implicits._
 
@@ -17,9 +18,7 @@ class SpatialJoinSpec extends SparkSpec {
       .select($"aid", st.makeBox($"x0", $"y0", $"x1", $"y1").as("ga"))
     val b = Seq((7L, 1.0, 1.0, 5.0, 5.0)).toDF("bid", "x0", "y0", "x1", "y1")
       .select($"bid", st.makeBox($"x0", $"y0", $"x1", $"y1").as("gb"))
-    val j = SpatialJoin.join(a, b, "ga", "gb", 1.0,
-      (l, r) => st.intersects(l, r))
-    assert(j.count() == 1)
+    assert(SpatialJoin.overlayIntersection(a, b, "ga", "gb", 1.0).count() == 1)
   }
 
   test("disjoint geometries in the same bucket are refined away") {
@@ -27,9 +26,7 @@ class SpatialJoinSpec extends SparkSpec {
       .select($"aid", st.makeBox(lit(0.0), lit(0.0), lit(0.2), lit(0.2)).as("ga"))
     val b = Seq((2L)).toDF("bid")
       .select($"bid", st.makeBox(lit(0.5), lit(0.5), lit(0.7), lit(0.7)).as("gb"))
-    val j = SpatialJoin.join(a, b, "ga", "gb", 10.0,
-      (l, r) => st.intersects(l, r))
-    assert(j.count() == 0)
+    assert(SpatialJoin.overlayIntersection(a, b, "ga", "gb", 10.0).count() == 0)
   }
 
   test("joinContains: points on cell edges belong to no cell") {
@@ -56,7 +53,7 @@ class SpatialJoinSpec extends SparkSpec {
     assert(r(0)._1 == 1.0 && r(0)._2 == "POINT (1.5 1.5)")
   }
 
-  test("fused envelope-cells and pair-refine equal the column-chain forms") {
+  test("envelope cells and the planned joins equal brute force") {
     // random-ish boxes spanning 1-4 cells at cellSize=1.7, plus exact
     // cell-boundary-aligned ones (hash(id)%17==0 → integer corners)
     def boxes(seed: Int, n: Int, idName: String, gName: String) =
@@ -69,24 +66,28 @@ class SpatialJoinSpec extends SparkSpec {
           .as(gName))
     val a = boxes(11, 80, "aid", "ga")
     val b = boxes(37, 80, "bid", "gb")
-    // expression level: one-parse envelope cells == the 4-parse chain
-    val cellsNew = a.select($"aid", st.envelopeCells($"ga", 1.7).as("c"))
-      .orderBy("aid").collect().map(_.toString).toSeq
-    val cellsOld = a.select($"aid", SpatialJoin.bucketIds($"ga", 1.7).as("c"))
-      .orderBy("aid").collect().map(_.toString).toSeq
-    assert(cellsNew == cellsOld)
-    // join level: the fused refine (joinContains/overlayIntersection
-    // path) == the generic refBucket + predicate chain (join path)
+    // expression level: the one-parse envelope cells == floor of the
+    // envelope bounds over cellSize, x-major, computed on the driver
+    val cells = a.select($"aid", st.envelopeCells($"ga", 1.7).as("c"))
+      .orderBy("aid").collect()
+      .map(r => r.getSeq[org.apache.spark.sql.Row](1).map(c => (c.getLong(0), c.getLong(1))))
+      .toSeq
+    val bounds = a.select($"aid", st.xmin($"ga"), st.ymin($"ga"),
+        st.xmax($"ga"), st.ymax($"ga"))
+      .orderBy("aid").as[(Long, Double, Double, Double, Double)].collect().toSeq
+    def f(v: Double) = math.floor(v / 1.7).toLong
+    val expected = bounds.map { case (_, x0, y0, x1, y1) =>
+      for (bx <- f(x0) to f(x1); by <- f(y0) to f(y1)) yield (bx, by) }
+    assert(cells == expected)
+    // join level: the planned joins == the predicate over the full cross
     def pairs(df: org.apache.spark.sql.DataFrame) =
       df.select("aid", "bid").as[(Long, Long)].collect().toSeq.sorted
-    val chainInt = pairs(SpatialJoin.join(a, b, "ga", "gb", 1.7,
-      (l, r) => st.intersects(l, r)))
+    val bruteInt = pairs(a.crossJoin(b).filter(st.intersects($"ga", $"gb")))
     val fusedInt = pairs(SpatialJoin.overlayIntersection(a, b, "ga", "gb", 1.7))
-    assert(chainInt.nonEmpty && fusedInt == chainInt)
-    val chainCont = pairs(SpatialJoin.join(a, b, "ga", "gb", 1.7,
-      (l, r) => st.contains(l, r)))
+    assert(bruteInt.nonEmpty && fusedInt == bruteInt)
+    val bruteCont = pairs(a.crossJoin(b).filter(st.contains($"ga", $"gb")))
     val fusedCont = pairs(SpatialJoin.joinContains(a, b, "ga", "gb", 1.7))
-    assert(fusedCont == chainCont)
+    assert(bruteCont.nonEmpty && fusedCont == bruteCont)
   }
 
   test("empty geometries produce no cells and no pairs") {
@@ -105,7 +106,7 @@ class SpatialJoinSpec extends SparkSpec {
     assert(SpatialJoin.overlayIntersection(empt, pts, "ga", "gb", 1.0).count() == 0)
   }
 
-  test("selfJoinWithinDistance equals the generic two-sided form") {
+  test("selfJoinWithinDistance equals the brute-force pair set") {
     // deterministic pseudo-random cloud spanning many cells, duplicate
     // coordinates included (ids 200..209 reuse id%10's position) so
     // same-cell, cross-cell, zero-distance and boundary pairs all occur
@@ -116,20 +117,20 @@ class SpatialJoinSpec extends SparkSpec {
     def norm(df: org.apache.spark.sql.DataFrame) = df
       .select($"id_a", $"id_b", round($"dist", 9).as("d"))
       .as[(Long, Long, Double)].collect().toSeq.sorted
-    val generic = norm(SpatialJoin.joinWithinDistance(
-        pts, "id", "pg", pts, "id", "pg", d = 0.7, cellSize = 0.7)
-      .filter($"id_a" < $"id_b"))
-    val self = norm(SpatialJoin.selfJoinWithinDistance(
-      pts, "id", "pg", d = 0.7, cellSize = 0.7))
-    assert(generic.nonEmpty) // the fixture actually produces pairs
-    assert(self == generic)
+    // every unordered pair of the full cross within d = 0.7, with the
+    // same squared-distance test and final sqrt
+    val xy = pts.select($"id", st.stx($"pg").as("x"), st.sty($"pg").as("y"))
+    val dx = $"ax" - $"bx"
+    val dy = $"ay" - $"by"
+    val expected = norm(xy.toDF("id_a", "ax", "ay").crossJoin(xy.toDF("id_b", "bx", "by"))
+      .filter($"id_a" < $"id_b" && dx * dx + dy * dy <= lit(0.7) * lit(0.7))
+      .select($"id_a", $"id_b", sqrt(dx * dx + dy * dy).as("dist")))
+    assert(expected.nonEmpty) // the fixture actually produces pairs
+    assert(norm(SpatialJoin.selfJoinWithinDistance(
+      pts, "id", "pg", d = 0.7, cellSize = 0.7)) == expected)
     // a cellSize well below d exercises the multi-ring forward probe
-    val generic2 = norm(SpatialJoin.joinWithinDistance(
-        pts, "id", "pg", pts, "id", "pg", d = 0.7, cellSize = 0.3)
-      .filter($"id_a" < $"id_b"))
-    val self2 = norm(SpatialJoin.selfJoinWithinDistance(
-      pts, "id", "pg", d = 0.7, cellSize = 0.3))
-    assert(self2 == generic2)
+    assert(norm(SpatialJoin.selfJoinWithinDistance(
+      pts, "id", "pg", d = 0.7, cellSize = 0.3)) == expected)
   }
 
   test("conservation: regrid piece areas sum to each source cell's area") {
