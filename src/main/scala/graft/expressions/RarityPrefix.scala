@@ -6,14 +6,15 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
-/** rarity_prefix(shingles) — the PPJoin prefix of a shingle set,
-  * computed entirely map-side: tokens are sorted under the global
-  * total order (corpusCount(tok), tok) and the first
-  * |X| − ⌈t·|X|⌉ + 1 are emitted as (tok, rn) structs, rn being the
-  * token's 1-based position in the FULL sorted order (what the
-  * positional filter needs).
+/** rarity_prefix(shh) — the PPJoin prefix of a hashed shingle set
+  * (`array<bigint>`, the xxhash64 longs of
+  * [[graft.operators.Dedup.hashedShingles]]), computed entirely
+  * map-side: tokens are sorted under the global total order
+  * (corpusCount(tok), tok) and the first |X| − ⌈t·|X|⌉ + 1 are emitted
+  * as (tok: bigint, rn: int) structs, rn being the token's 1-based
+  * position in the FULL sorted order (what the positional filter
+  * needs).
   *
   * `counts` is a driver-built, broadcast frequency table of the HEAVY
   * tokens only (tokens absent default to count 1): the prefix
@@ -28,7 +29,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * join itself.
   */
 case class RarityPrefix(child: Expression,
-    counts: Broadcast[Map[String, Long]], threshold: Double)
+    counts: Broadcast[Map[Long, Long]], threshold: Double)
   extends UnaryExpression with CodegenFallback {
 
   require(threshold > 0.0 && threshold <= 1.0, s"threshold=$threshold")
@@ -36,7 +37,7 @@ case class RarityPrefix(child: Expression,
   override def nullable: Boolean = true
   override lazy val deterministic: Boolean = true
   override def dataType: DataType = ArrayType(StructType(Seq(
-    StructField("tok", StringType, nullable = false),
+    StructField("tok", LongType, nullable = false),
     StructField("rn", IntegerType, nullable = false))), containsNull = false)
 
   override protected def nullSafeEval(input: Any): Any = {
@@ -49,14 +50,12 @@ case class RarityPrefix(child: Expression,
     // never shorten the prefix past an exactly-at-threshold pair
     val prefixLen = math.max(
       sz - math.ceil(sz * threshold - 1e-9).toLong + 1, 1L).min(sz).toInt
-    val toks = new Array[String](sz)
-    var i = 0
-    while (i < sz) { toks(i) = arr.getUTF8String(i).toString; i += 1 }
+    val toks = arr.toLongArray()
     val order = (0 until sz).sortBy(j => (ranks.getOrElse(toks(j), 1L), toks(j)))
     val out = new Array[Any](prefixLen)
-    i = 0
+    var i = 0
     while (i < prefixLen) {
-      out(i) = InternalRow(UTF8String.fromString(toks(order(i))), i + 1)
+      out(i) = InternalRow(toks(order(i)), i + 1)
       i += 1
     }
     new GenericArrayData(out)

@@ -51,7 +51,6 @@ object st {
   def npoints(g: Column): Column = c(STNPoints(Seq(x(g))))
   def geometryType(g: Column): Column = c(STGeometryType(Seq(x(g))))
   def asText(g: Column): Column = c(STAsText(Seq(x(g))))
-  def geomFromText(wkt: Column): Column = c(STGeomFromText(Seq(x(wkt))))
 
   /** CRS reprojection (4326 ↔ 27700; the reference's `to_crs`). */
   def transform(g: Column, fromSrid: Int, toSrid: Int): Column =

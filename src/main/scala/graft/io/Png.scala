@@ -95,34 +95,6 @@ object Png {
     out.toByteArray
   }
 
-  /** Encode a color-type-3 (palette) image: `indices` are row-major
-    * palette indices, `palette` is RGB triples. Exists so the
-    * palette-expansion decode path has a producer to round-trip
-    * against. */
-  def encodePalette(width: Int, height: Int, indices: Array[Byte],
-      palette: Array[Byte]): Array[Byte] = {
-    require(indices.length == width * height, "index buffer size")
-    require(palette.length % 3 == 0 && palette.nonEmpty, "palette size")
-    val raw = new Array[Byte]((width + 1) * height)
-    var y = 0
-    while (y < height) {
-      raw(y * (width + 1)) = 0 // filter None
-      System.arraycopy(indices, y * width, raw, y * (width + 1) + 1, width)
-      y += 1
-    }
-    val out = new ByteArrayOutputStream()
-    out.write(Signature)
-    val ihdr = new Array[Byte](13)
-    writeInt(ihdr, 0, width)
-    writeInt(ihdr, 4, height)
-    ihdr(8) = 8; ihdr(9) = 3; ihdr(10) = 0; ihdr(11) = 0; ihdr(12) = 0
-    writeChunk(out, "IHDR", ihdr)
-    writeChunk(out, "PLTE", palette)
-    writeChunk(out, "IDAT", deflate(raw))
-    writeChunk(out, "IEND", Array.emptyByteArray)
-    out.toByteArray
-  }
-
   // one reusable zlib stream per thread (reset between images): a 100
   // TB media pipeline encodes/decodes millions of payloads per task,
   // and a fresh native Deflater/Inflater per row dominated the per-row

@@ -80,14 +80,10 @@ object Dedup {
       graft.expressions.WordShingles(
         Seq(org.apache.spark.sql.graftbridge.Bridge.expression(text)), n))
 
-  /** Exact n-gram Jaccard similarity between two shingle-set columns. */
-  def jaccard(a: Column, b: Column): Column =
-    size(array_intersect(a, b)) /
-      greatest(size(array_union(a, b)), lit(1)).cast("double")
-
   /** Exact Jaccard for ASCENDING-SORTED distinct shingle arrays (what
     * [[shingles]] produces) via linear-merge intersection — same value
-    * as [[jaccard]], far cheaper (no per-row hash-set builds). */
+    * as `|array_intersect| / |array_union|`, without per-row hash-set
+    * builds. */
   def jaccardSorted(a: Column, b: Column): Column = {
     val common = org.apache.spark.sql.graftbridge.Bridge.column(
       graft.expressions.SortedIntersectCount(Seq(
@@ -107,9 +103,10 @@ object Dedup {
   }
 
   /** Deterministic sampled token-frequency table for rarity ordering,
-    * driver-bounded and broadcast: count shingles over a fixed
-    * 1-in-`rate` hash-sample of documents, keep tokens seen ≥ 2 times,
-    * cap at the `maxTokens` most frequent (ties on the token). The
+    * driver-bounded and broadcast: count the hashed shingles (`shh` of
+    * the [[shingleCache]] frame) over a fixed 1-in-`rate` hash-sample
+    * of documents, keep tokens seen ≥ 2 times, cap at the `maxTokens`
+    * most frequent (ties on the hash). The
     * frequent tokens — the only ones whose df² matters for candidate
     * pruning — are precisely the ones a sample catches; everything
     * absent ranks as a singleton. Fully deterministic (hash-sampled,
@@ -119,7 +116,7 @@ object Dedup {
     * rows on the driver regardless of corpus size. */
   private def sampledTokenCounts(sets: DataFrame, rate: Int = 20,
       maxTokens: Int = 65536)
-      : org.apache.spark.broadcast.Broadcast[Map[String, Long]] = {
+      : org.apache.spark.broadcast.Broadcast[Map[Long, Long]] = {
     // Memoized per (session, input-plan semantic hash, rate, maxTokens)
     // (ADVICE r8): query CONSTRUCTION calls this — without the cache
     // every plan build (audits, bench trials, retries) re-runs the
@@ -148,13 +145,13 @@ object Dedup {
     }
     val table = sets
       .filter(pmod(hash(col("id")), lit(rate)) === 0)
-      .select(explode(col("sh")).as("tok"))
+      .select(explode(col("shh")).as("tok"))
       .groupBy("tok").agg(count(lit(1)).as("c"))
       .filter(col("c") >= 2)
       .orderBy(col("c").desc, col("tok"))
       .limit(maxTokens)
       .collect()
-      .map(r => r.getString(0) -> r.getLong(1) * rate)
+      .map(r => r.getLong(0) -> r.getLong(1) * rate)
       .toMap
     val bc = sets.sparkSession.sparkContext.broadcast(table)
     rarityCache.synchronized {
@@ -172,37 +169,44 @@ object Dedup {
     * re-insert at the tail; eviction takes the head). */
   private val rarityCache = scala.collection.mutable.LinkedHashMap
     .empty[(org.apache.spark.sql.SparkSession, Int, Int, Int),
-      org.apache.spark.broadcast.Broadcast[Map[String, Long]]]
+      org.apache.spark.broadcast.Broadcast[Map[Long, Long]]]
 
   /** The PPJoin prefix index rows (id, sz, rn, tok) for every document
-    * — prefix selection and positional rank computed map-side by
+    * of a [[shingleCache]] frame, `tok` a shingle's xxhash64 — prefix
+    * selection and positional rank computed map-side by
     * [[graft.expressions.RarityPrefix]] under the broadcast sampled
     * order; only prefix tokens are ever exploded. */
   private def prefixIndex(sets: DataFrame, threshold: Double): DataFrame = {
     import org.apache.spark.sql.graftbridge.Bridge
     val pref = Bridge.column(graft.expressions.RarityPrefix(
-      Bridge.expression(col("sh")), sampledTokenCounts(sets), threshold))
-    sets.select(col("id"), size(col("sh")).as("sz"), explode(pref).as("p"))
+      Bridge.expression(col("shh")), sampledTokenCounts(sets), threshold))
+    sets.select(col("id"), size(col("shh")).as("sz"), explode(pref).as("p"))
       .select(col("id"), col("sz"), col("p.rn").as("rn"), col("p.tok").as("tok"))
   }
 
   /** All-pairs Jaccard ≥ threshold WITHOUT a cross join: a
-    * prefix-filtered inverted shingle index (SSJoin/PPJoin family).
-    * Candidate generation is exact (the prefix principle loses
-    * nothing); the refine, like every batch refine here, computes
-    * |A∩B| over per-shingle `xxhash64` values ([[refineJaccardHashed]]) —
-    * exact unless two shingles of one candidate pair collide in 64
-    * bits (~1e-16). Since r12 the streaming gate's standing index
-    * refines on the same hashed longs ([[corpusBandIndex]]), so batch
-    * and stream share one exactness contract.
+    * prefix-filtered inverted shingle index (SSJoin/PPJoin family) over
+    * the [[shingleCache]] — the same persisted (id, shh) frame
+    * [[minhashNearDups]] and [[containmentPairsIndexed]] read, so a
+    * session that runs them on one input builds it once. Candidate
+    * generation is exact over the hashed sets (the prefix principle
+    * loses nothing); the refine, like every batch refine here, computes
+    * |A∩B| over the same per-shingle `xxhash64` values
+    * ([[refineJaccardHashed]]) — exact unless two shingles of one
+    * candidate pair collide in 64 bits (~1e-16), and such a collision
+    * can only add a candidate, never lose one. Since r12 the streaming
+    * gate's standing index refines on the same hashed longs
+    * ([[corpusBandIndex]]), so batch and stream share one exactness
+    * contract.
     *
     * With shingle sets sorted under one global order, any pair with
     * J(A,B) ≥ t shares at least one token within each side's first
     * |X| − ⌈t·|X|⌉ + 1 tokens — so indexing only those prefixes loses
-    * nothing. Candidate generation joins (id, token) pairs (compact),
-    * dedups, then exact-refines only candidates.
+    * nothing. Candidate generation joins (id, token) pairs (compact:
+    * the token is the 8-byte hash), dedups, then exact-refines only
+    * candidates.
     *
-    * The rarity order (rarest first, ties on the token) comes from a
+    * The rarity order (rarest first, ties on the hash) comes from a
     * broadcast sampled frequency table ([[sampledTokenCounts]]) applied
     * per row — the prefix principle is exact under ANY total order, and
     * the sampled order prunes the frequent-token collisions that
@@ -211,40 +215,7 @@ object Dedup {
     * groupBy, token join, per-doc rank window). */
   def jaccardPairsIndexed(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int, threshold: Double): DataFrame = {
-    // the shingle frame feeds the index AND both refine joins — persist
-    // so the sort-distinct shingle pass runs once (MEMORY_AND_DISK:
-    // spills rather than OOMs at scale; eldest caches are unpersisted
-    // by the bounded registry, see persistBounded)
-    //
-    // persisted PRE-PARTITIONED AND PRE-SORTED on id — the same
-    // cache-partitioning restructure minhashNearDups took in r15
-    // (drift watch closed, VERDICT r15 #2): both refine joins need
-    // hash(id) clustering + id ordering on their sets side, and the
-    // explicit repartition+sortWithinPartitions form propagates both
-    // out of the cache through the id_a/id_b alias projections, so the
-    // refine pays zero sets-side exchanges and zero sets-side sorts.
-    // The prefix-index consumer is map-side (explode, no required
-    // distribution) and is unaffected by the cache's layout. The
-    // cache carries BOTH the string shingles (the rarity prefix keys
-    // on tokens) and their sorted-xxhash64 form (what the refine
-    // compares), as a two-step projection so the shingle subtree
-    // evaluates once per row — CollapseProject keeps the split because
-    // WordShingles is not a cheap expression.
-    val setsP = org.apache.spark.sql.graftbridge.Bridge
-      .numShufflePartitions(df.sparkSession)
-    val sets = persistBounded(
-      df.select(col(idCol).cast("long").as("id"),
-        shingles(col(textCol), shingleN).as("sh"))
-      .select(col("id"), col("sh"),
-        org.apache.spark.sql.graftbridge.Bridge.column(
-          graft.expressions.SortedXxHash64Array(
-            org.apache.spark.sql.graftbridge.Bridge.expression(col("sh"))))
-          .as("shh"))
-      .repartition(setsP, col("id")).sortWithinPartitions("id"))
-    // see eagerShingleCacheDefault for the stage-split rationale; the
-    // eager count is also what arms the exchange-free refine (an
-    // unbuilt AQE-cached plan reports unknown partitioning)
-    if (eagerShingleCacheDefault(df.sparkSession)) sets.count()
+    val sets = shingleCache(df, idCol, textCol, shingleN)
     val idx = prefixIndex(sets, threshold)
     // required overlap α: J ≥ t ⇔ |A∩B| ≥ t/(1+t)·(|A|+|B|); a collision
     // at positions (ra, rb) certifies at most 1 + min(sa−ra, sb−rb)
@@ -265,9 +236,7 @@ object Dedup {
         (lit(1) + least(col("sz_a") - col("rn_a"), col("sz_b") - col("rn_b"))) >= alpha)
       .select("id_a", "id_b")
       .distinct()
-    // the refine consumes the cache's pre-hashed arrays as-is (no
-    // per-side re-hash) and its pre-partitioned, pre-sorted layout
-    refineJaccardHashed(cand, sets.select(col("id"), col("shh")), threshold)
+    refineJaccardHashed(cand, sets, threshold)
   }
 
   /** CONTAINMENT pairs — exact up to the refine's sorted-xxhash64
@@ -276,47 +245,25 @@ object Dedup {
     * near-dup mode Jaccard
     * misses: `|A∩B| / |A| ≥ t` flags A as (near-)contained in B (a doc
     * quoted wholesale inside a larger one, a page embedded in an
-    * aggregator). Same rarity-ordered machinery as
-    * [[jaccardPairsIndexed]], but the prefix principle is one-sided:
+    * aggregator). Same rarity-ordered machinery and the same
+    * [[shingleCache]] as [[jaccardPairsIndexed]], but the prefix
+    * principle is one-sided:
     * if ≥ ⌈t·|A|⌉ of A's shingles appear in B, then A's
     * (|A| − ⌈t·|A|⌉ + 1)-token rare-first prefix must collide with
     * SOME token of B (pigeonhole) — so the candidate join runs A's
-    * prefix against B's FULL index. Cost is Σ df(prefix token): rarity
-    * ordering keeps prefixes on near-singleton shingles. The B-side
-    * length filter `|B| ≥ t·|A|` is implied by the final predicate
-    * (|A∩B| ≤ |B|), so pruning with it is lossless. */
+    * prefix against B's FULL hashed index. Cost is Σ df(prefix token):
+    * rarity ordering keeps prefixes on near-singleton shingles. The
+    * B-side length filter `|B| ≥ t·|A|` is implied by the final
+    * predicate (|A∩B| ≤ |B|), so pruning with it is lossless. */
   def containmentPairsIndexed(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int, threshold: Double): DataFrame = {
-    // same pre-partitioned+pre-sorted cache layout as
-    // jaccardPairsIndexed: both refine joins key on id, so the refine
-    // pays zero sets-side exchanges/sorts; the prefix and full-index
-    // consumers are map-side explodes, unaffected. Against a plain
-    // unhinted persist, same-JVM interleaved at sf0.1 (r16), this
-    // layout ran dedup_containment in 1.47 s min vs 2.21 s.
-    val setsP = org.apache.spark.sql.graftbridge.Bridge
-      .numShufflePartitions(df.sparkSession)
-    // like jaccardPairsIndexed the cache carries BOTH the string
-    // shingles (prefix + full-index consumers key on tokens) and their
-    // sorted-xxhash64 form (what the refine compares — r16 opt: the
-    // string-merge refine was the allocation-heavy remnant; |A∩B| over
-    // per-doc-distinct 64-bit hashes equals the string count under the
-    // same ~1e-16 collision bound the jaccard refine documents)
-    val shaped = df.select(col(idCol).cast("long").as("id"),
-        shingles(col(textCol), shingleN).as("sh"))
-      .select(col("id"), col("sh"),
-        org.apache.spark.sql.graftbridge.Bridge.column(
-          graft.expressions.SortedXxHash64Array(
-            org.apache.spark.sql.graftbridge.Bridge.expression(col("sh"))))
-          .as("shh"))
-    val sets = persistBounded(
-      shaped.repartition(setsP, col("id")).sortWithinPartitions("id"))
-    if (eagerShingleCacheDefault(df.sparkSession)) sets.count()
+    val sets = shingleCache(df, idCol, textCol, shingleN)
     // A's prefix comes from the broadcast sampled order (map-side); the
     // B side needs no rank at all — only token membership and size
     val aPrefix = prefixIndex(sets, threshold)
       .select(col("id").as("id_a"), col("sz").as("sz_a"), col("tok"))
     val bAll = sets.select(col("id").as("id_b"),
-      size(col("sh")).as("sz_b"), explode(col("sh")).as("tok"))
+      size(col("shh")).as("sz_b"), explode(col("shh")).as("tok"))
     // conservative 1e-9 nudge so a product rounding above the exact
     // rational t·|A| can't drop an exactly-at-threshold pair
     val cand = aPrefix.join(bAll, "tok")
@@ -330,10 +277,9 @@ object Dedup {
     cand
       .join(sets.select(col("id").as("id_a"), col("shh").as("sh_a")), "id_a")
       .join(sets.select(col("id").as("id_b"), col("shh").as("sh_b")), "id_b")
-      // hashed arrays are ascending-sorted distinct — the compiled
-      // linear-merge count equals array_intersect size without per-row
-      // hash-set builds, comparing 8-byte primitives instead of
-      // UTF8Strings (|shh| = |sh|, so the denominator is unchanged)
+      // hashed arrays are ascending-sorted — the compiled linear-merge
+      // count equals array_intersect size without per-row hash-set
+      // builds, comparing 8-byte primitives
       .select(col("id_a"), col("id_b"),
         (common.cast("double") /
           greatest(size(col("sh_a")), lit(1))).as("containment"))
@@ -389,6 +335,46 @@ object Dedup {
       Bridge.expression(shingles(text, n))))
   }
 
+  /** The shingle cache [[minhashNearDups]], [[jaccardPairsIndexed]]
+    * and [[containmentPairsIndexed]] share: `(id, shh)`, `shh` being
+    * [[hashedShingles]]'s sorted xxhash64 longs (8 bytes per shingle
+    * against a multi-word string; banding, the rarity prefix, the
+    * candidate joins and every refine all read this one column).
+    * Built here and nowhere else, so the three operators persist the
+    * SAME plan for the same input: Spark's CacheManager and the
+    * [[persistBounded]] registry, both keyed by plan, share one entry
+    * among them and a session that runs them on one input builds the
+    * shingle pass once.
+    *
+    * Persisted PRE-PARTITIONED AND PRE-SORTED on id: the two id-keyed
+    * refine joins each need hash(id) clustering + id ordering on their
+    * sets side, and the explicit repartition+sortWithinPartitions form
+    * propagates both OUT of the cache (through the id_a/id_b alias
+    * projections), so the refine pays zero sets-side exchanges and
+    * zero sets-side sorts — one wide exchange at cache build replaces
+    * two at join time. The banding, prefix-index and full-index
+    * consumers are map-side explodes with no required distribution,
+    * unaffected by the layout. Measured same-box at 2M/10M docs (r15;
+    * for containment at sf0.1, 1.47 s min against 2.21 s for a plain
+    * persist, r16). MEMORY_AND_DISK: spills rather than OOMs at scale;
+    * eldest caches are unpersisted by the bounded registry. */
+  private def shingleCache(df: DataFrame, idCol: String, textCol: String,
+      shingleN: Int): DataFrame = {
+    val setsP = org.apache.spark.sql.graftbridge.Bridge
+      .numShufflePartitions(df.sparkSession)
+    val sets = persistBounded(
+      df.select(col(idCol).cast("long").as("id"),
+        hashedShingles(col(textCol), shingleN).as("shh"))
+      .repartition(setsP, col("id")).sortWithinPartitions("id"))
+    // see eagerShingleCacheDefault for why (and when) the cache build
+    // is split into its own stage — same build work either way. The
+    // partitioning propagates to the refine only once the cache is
+    // materialized (an unbuilt AQE-cached plan reports unknown), so
+    // the eager count is also what arms the exchange-free refine.
+    if (eagerShingleCacheDefault(df.sparkSession)) sets.count()
+    sets
+  }
+
   /** Internal: candidate id pairs from bucket membership rows
     * (bucketCols → id). Pairs are emitted by a distributed SELF-JOIN on
     * the bucket key — never by per-bucket array expansion, which would
@@ -423,9 +409,12 @@ object Dedup {
     * and the fused simhash refine, which needs the SAME guard/cache
     * discipline but carries extra columns (the fingerprint) through the
     * self-join. Keeps every column of `memb` besides the transient
-    * window count. */
+    * window count — except under `keepOversized`, where the cache also
+    * holds the rows of the buckets the guard drops, with their count
+    * `__n`, so the caller can tell which buckets those are; it must
+    * then filter `__n <= maxBucket` itself before pairing. */
   private[operators] def guardedBuckets(memb: DataFrame, bucketCols: Seq[String],
-      maxBucket: Int): DataFrame = {
+      maxBucket: Int, keepOversized: Boolean = false): DataFrame = {
     // bucket-size guard via a windowed count — one shuffle on the bucket
     // key, reused by the self-join below (no groupBy + semi-join round
     // trip; the window needs no ordering so no sort beyond the shuffle)
@@ -449,11 +438,11 @@ object Dedup {
     // be a non-integer spelling ("auto") on some platforms
     val shuffleP = org.apache.spark.sql.graftbridge.Bridge
       .numShufflePartitions(memb.sparkSession)
-    val mf = persistBounded(memb
-      .repartition(shuffleP, bucketCols.map(col): _*)
+    val counted = memb.repartition(shuffleP, bucketCols.map(col): _*)
       .withColumn("__n", count(lit(1)).over(w))
-      .filter(col("__n") >= 2 && col("__n") <= maxBucket)
-      .drop("__n"))
+    val mf = persistBounded(
+      if (keepOversized) counted.filter(col("__n") >= 2)
+      else counted.filter(col("__n") >= 2 && col("__n") <= maxBucket).drop("__n"))
     // materialize BEFORE the self-join is planned: an unmaterialized
     // AQE-cached plan reports unknown partitioning and the join would
     // re-shuffle + re-sort both sides of the full membership stream.
@@ -566,8 +555,9 @@ object Dedup {
   /** The composed near-dup pipeline: MinHash-LSH candidates + exact
     * Jaccard refine — candidates ⊇ all true pairs (w.h.p., see
     * [[minhashCandidates]]), refine makes the output exact. */
-  /** Whether [[minhashNearDups]] materializes its shared shingle cache
-    * in its own stage before the band shuffle consumes it. Left lazy,
+  /** Whether [[shingleCache]] materializes the shared shingle cache
+    * in its own stage before the first shuffle (minhash's band shuffle,
+    * the prefix index's candidate join) consumes it. Left lazy,
     * the first action builds the columnar cache INSIDE the
     * band-explode's shuffle-map stage, and the unroll (storage-side,
     * unevictable while in flight) starves the shuffle SORTER into
@@ -607,34 +597,9 @@ object Dedup {
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, threshold: Double = 0.5,
       k: Int = 32, bands: Int = 16): DataFrame = {
-    // one persisted PRE-HASHED shingle pass feeds signature generation
-    // AND refine: the cache holds sorted xxhash64 longs (8 bytes per
-    // shingle vs multi-word strings — the pipeline's largest persisted
-    // frame and the refine joins' shuffle payload both shrink, and the
-    // refine consumes the cached arrays as-is instead of re-hashing
-    // and re-sorting per side)
-    // persisted PRE-PARTITIONED AND PRE-SORTED on id: the two refine
-    // joins each need hash(id) clustering + id ordering on their sets
-    // side, and the explicit repartition+sortWithinPartitions form
-    // propagates both OUT of the cache (through the id_a/id_b alias
-    // projections), so refine pays zero sets-side exchanges and zero
-    // sets-side sorts — one wide exchange at cache build replaces two
-    // at join time, and the banding consumer (map-side, no required
-    // distribution) is unaffected. Measured same-box at 2M/10M docs
-    // (r15); at sf0.1 scale the refine broadcasts and the extra build
-    // exchange is sub-100ms.
-    val setsP = org.apache.spark.sql.graftbridge.Bridge
-      .numShufflePartitions(df.sparkSession)
-    val sets = persistBounded(
-      df.select(col(idCol).cast("long").as("id"),
-        hashedShingles(col(textCol), shingleN).as("shh"))
-      .repartition(setsP, col("id")).sortWithinPartitions("id"))
-    // see eagerShingleCacheDefault for why (and when) the cache build
-    // is split into its own stage — same build work either way. The
-    // partitioning propagates to the refine only once the cache is
-    // materialized (an unbuilt AQE-cached plan reports unknown), so
-    // the eager count is also what arms the exchange-free refine.
-    if (eagerShingleCacheDefault(df.sparkSession)) sets.count()
+    // one persisted pre-hashed shingle pass feeds signature generation
+    // AND refine
+    val sets = shingleCache(df, idCol, textCol, shingleN)
     val raw = pairsFromBuckets(minhashBandedHashed(sets, k, bands),
       Seq("band", "band_hash"), maxBucket = 64, dedup = false)
     // FUSED pair dedup (r16, NearDupProfile attribution: the standalone
@@ -646,7 +611,9 @@ object Dedup {
     // pairs share id_a, hence a partition). One exchange of the raw
     // stream replaces distinct's exchange PLUS the candidate exchange
     // the refine used to add on top.
-    val cand = raw.repartition(setsP, col("id_a")).distinct()
+    val cand = raw.repartition(
+      org.apache.spark.sql.graftbridge.Bridge.numShufflePartitions(df.sparkSession),
+      col("id_a")).distinct()
     // EXACT bitmap prescreen (r16): the refine's dominant cost at 10M
     // docs was the mid-join exchange carrying full shingle arrays for
     // EVERY candidate (~190 B/row at 25-word docs, two thirds of them
@@ -801,21 +768,21 @@ object Dedup {
     * only checks CONVERGENCE (a count), never collects data. Rounds
     * needed = the largest component's diameter (near-dup components
     * are dense — a handful); `maxIters` caps adversarial chains. */
-  /** `pointerJumping` adds a label-of-label self-join per round,
+  /** Pointer jumping adds a label-of-label self-join per round,
     * halving path lengths (O(log diameter) rounds). Near-dup components
     * are dense cliques (diameter ~2) where the extra per-round join
     * costs more than the rounds it saves — so jumping starts OFF and
-    * auto-enables once `autoJumpAfter` rounds have not converged (a
+    * turns on once `autoJumpAfter` rounds have not converged (a
     * chain-shaped graph revealed itself). Every `checkpointEvery`
     * rounds the label frame is `localCheckpoint`ed: without truncation
     * the plan deepens every round and the optimizer re-traverses the
     * whole chain; superseded rounds' cached blocks are released as soon
     * as the next round is materialized. */
   def connectedComponents(ids: DataFrame, pairs: DataFrame,
-      maxIters: Int = 50, pointerJumping: Boolean = false,
-      autoJumpAfter: Int = 3, checkpointEvery: Int = 5,
-      deltaCapRows: Int = 500000,
+      maxIters: Int = 50, deltaCapRows: Int = 500000,
       driverFinishEdges: Int = 250000): DataFrame = {
+    val autoJumpAfter = 3
+    val checkpointEvery = 5
     // both edge directions in ONE pass over the pair list: a union of two
     // selects re-executes the (expensive, un-persisted) pair-generation
     // subtree once per branch, doubling candidate-join work before the
@@ -943,8 +910,7 @@ object Dedup {
       // one hop per round (dense near-dup graphs converge with small
       // frontiers and never pay the hop join); small frontiers fall
       // back to the round-count trigger
-      val jump = pointerJumping || iter >= autoJumpAfter ||
-        changed >= jumpWhenWider
+      val jump = iter >= autoJumpAfter || changed >= jumpWhenWider
       val small = changed < broadcastBelow
       val front = if (small) broadcast(frontier) else frontier
       // nbrMin's size is bounded by the frontier's NEIGHBOR count, not by
@@ -1001,7 +967,7 @@ object Dedup {
           least(col("lbl"),
             least(coalesce(col("nbr_lbl"), col("lbl")),
               coalesce(col("hlbl"), col("lbl")))).as("lbl"))
-      val truncate = checkpointEvery > 0 && (iter + 1) % checkpointEvery == 0
+      val truncate = (iter + 1) % checkpointEvery == 0
       // materialize each round hash-partitioned on id: the next round's
       // labels⋈nbrMin left join (keyed id===src, with nbrMin already
       // src-partitioned by its groupBy) and the pointer-jump hop side
@@ -1225,8 +1191,10 @@ object Dedup {
   }
 
   /** SimHash near-dup pairs within `maxDist` hamming distance, via
-    * exhaustive hamming-band bucketing — exact (recall 1 by pigeonhole),
-    * no cross join. */
+    * exhaustive hamming-band bucketing — exact (recall 1 by pigeonhole)
+    * while no bucket exceeds `maxBucket`, no cross join. Above it the
+    * guard drops the bucket, and a pair is found only through a later
+    * band whose bucket it also shares. */
   def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
       maxDist: Int = 6, bits: Int = 32, maxBucket: Int = 4096): DataFrame = {
     val fp = simhashFingerprints(df, idCol, textCol, bits)
@@ -1243,22 +1211,34 @@ object Dedup {
     // the (band-count × pair) candidate stream plus two join-backs to
     // the fingerprint frame (the pre-r17 shape: distinct's
     // HashAgg+Exchange+HashAgg over every raw candidate, then
-    // cand⋈fp⋈fp). Exactly-once without distinct: a surviving pair is
-    // kept only in its FIRST colliding band — both fingerprints are in
+    // cand⋈fp⋈fp). Exactly-once without distinct: a pair is kept only
+    // in its FIRST SURVIVING colliding band — both fingerprints are in
     // hand, so `first_band` recomputes each band value pair in codegen
-    // (pigeonhole guarantees a colliding band exists whenever
-    // hamming ≤ maxDist, so the coalesce is non-null for every kept
-    // row). Guard/cache discipline identical to minhash
-    // ([[guardedBuckets]]).
+    // and skips a band whose shared bucket the guard dropped: that
+    // band emits no row, so a pair whose first colliding bucket is
+    // oversized must be kept in a later band or it is lost. A pair's
+    // bucket in band i is (i, its band value); it holds both ids, so
+    // it survives unless it is oversized. Guard/cache discipline
+    // identical to minhash ([[guardedBuckets]]).
     val memb = fp.select(col("id"), col("fp"),
         explode(array(bandCols: _*)).as("b"))
       .select(col("id"), col("fp"),
         col("b.band").as("band"), col("b.bval").as("bval"))
-    val mf = guardedBuckets(memb, Seq("band", "bval"), maxBucket)
+    val cached = guardedBuckets(memb, Seq("band", "bval"), maxBucket,
+      keepOversized = true)
+    // the dropped buckets: at most rows/maxBucket per band, read from
+    // the materialized cache (partitioned on the bucket, so the
+    // distinct adds no exchange) — empty on healthy data
+    val dropped: Map[Int, Seq[Long]] = cached
+      .filter(col("__n") > maxBucket).select("band", "bval").distinct()
+      .collect().toSeq.groupMap(_.getInt(0))(_.getLong(1))
+    val mf = cached.filter(col("__n") <= maxBucket).drop("__n")
     val firstBand = coalesce(bands.zipWithIndex.map { case ((off, w), i) =>
       val m = (1L << w) - 1L
-      when(shiftright(col("fp_a"), off).bitwiseAND(m) ===
-        shiftright(col("fp_b"), off).bitwiseAND(m), lit(i))
+      val va = shiftright(col("fp_a"), off).bitwiseAND(m)
+      val collides = va === shiftright(col("fp_b"), off).bitwiseAND(m)
+      when(dropped.get(i).fold(collides)(vs => collides && !va.isin(vs: _*)),
+        lit(i))
     }: _*)
     mf.select(col("id").as("id_a"), col("fp").as("fp_a"),
         col("band"), col("bval"))

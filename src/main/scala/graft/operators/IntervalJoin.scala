@@ -61,20 +61,4 @@ object IntervalJoin {
       .filter(col(startCol) <= col(tsCol) && col(tsCol) < col(endCol))
       .drop("__bucket")
   }
-
-  /** Left-outer form: every point appears at least once; points no
-    * interval covers carry nulls in the interval columns. `pointIdCol`
-    * must uniquely identify a point row — the unmatched set is the
-    * id-anti-join of the inner result (two compact-key joins, the
-    * interval explosion still runs once). */
-  def pointsInIntervalsOuter(points: DataFrame, pointIdCol: String,
-      tsCol: String, intervals: DataFrame, startCol: String, endCol: String,
-      keys: Seq[String], bucketSeconds: Long,
-      maxBucketsPerInterval: Int = 10000): DataFrame = {
-    val inner = pointsInIntervals(points, tsCol, intervals, startCol, endCol,
-      keys, bucketSeconds, maxBucketsPerInterval)
-    val matched = inner.select(pointIdCol).distinct()
-    val unmatched = points.join(matched, Seq(pointIdCol), "left_anti")
-    inner.unionByName(unmatched, allowMissingColumns = true)
-  }
 }

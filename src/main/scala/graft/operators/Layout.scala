@@ -1,7 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.Column
 import org.apache.spark.sql.graftbridge.Bridge
 
 import graft.expressions.ZOrderValue
@@ -14,7 +13,9 @@ import graft.expressions.ZOrderValue
   * columns, so each output file covers a small hyper-rectangle of the
   * key space: a range predicate on ANY of the dimensions then touches
   * few files (parquet footer min/max stats skip the rest), instead of
-  * only predicates on the single leading sort column.
+  * only predicates on the single leading sort column. A writer clusters
+  * on the value with `repartitionByRange(numFiles, z)` and
+  * `sortWithinPartitions(z)` (ZOrderSpec measures the file pruning).
   */
 object Layout {
 
@@ -23,18 +24,4 @@ object Layout {
   def zorderValue(cols: Seq[Column], bits: Int): Column =
     Bridge.column(ZOrderValue(cols.map(c =>
       Bridge.expression(c.cast("long"))), bits))
-
-  /** Cluster a frame for writing: range-partition by z-value into
-    * `numFiles` partitions and sort within each. One shuffle (the range
-    * exchange samples z boundaries), then a per-partition sort —
-    * exactly what `df.write` needs for footer-stat locality on every
-    * z dimension. */
-  def clusterByZ(df: DataFrame, cols: Seq[Column], bits: Int,
-      numFiles: Int): DataFrame = {
-    val z = zorderValue(cols, bits)
-    df.withColumn("__z", z)
-      .repartitionByRange(numFiles, col("__z"))
-      .sortWithinPartitions("__z")
-      .drop("__z")
-  }
 }

@@ -114,13 +114,6 @@ object Pca {
     array(model.components.indices.map(c =>
       projectComponent(vecCol, model, c)): _*)
 
-  /** Whitened projection: each component scaled by 1/√λ (λ floored at
-    * `eps` to keep degenerate directions finite). */
-  def whiten(vecCol: Column, model: Model, eps: Double = 1e-12): Column =
-    array(model.components.indices.map(c =>
-      projectComponent(vecCol, model, c) /
-        lit(math.sqrt(math.max(model.eigenvalues(c), eps)))): _*)
-
   /** Cyclic Jacobi eigendecomposition of a symmetric matrix —
     * deterministic sweep order, eigenpairs sorted by descending
     * eigenvalue, each eigenvector's sign fixed so its largest-|.|

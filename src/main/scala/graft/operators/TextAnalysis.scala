@@ -275,11 +275,6 @@ object TextAnalysis {
     "fr" -> Seq("le", "la", "les", "est", "et", "que", "une", "dans"),
     "zh" -> Seq("的", "是", "了", "在", "我", "有"))
 
-  def langScore(text: Column, lang: String): Column = {
-    val toks = split(trim(lower(text)), "\\s+")
-    size(filter(toks, t => t.isInCollection(langMarkers(lang))))
-  }
-
   /** Best-scoring language, "und" when nothing matches. One compiled
     * pass ([[graft.expressions.LangId]]) — the former column chain ran
     * one tokenize + one interpreted filter-HOF PER LANGUAGE, then

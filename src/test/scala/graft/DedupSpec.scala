@@ -128,6 +128,47 @@ class DedupSpec extends SparkSpec {
     }
   }
 
+  test("minhash, Jaccard and containment share one hashed shingle cache") {
+    import org.apache.spark.sql.execution.columnar.InMemoryRelation
+    import org.apache.spark.sql.types.{ArrayType, LongType, StringType}
+    spark.catalog.clearCache()
+    val cm = spark.sharedState.cacheManager
+    val df = docs.toDF("doc_id", "text")
+    val outs = Seq(
+      Dedup.minhashNearDups(df, "doc_id", "text", 3, 0.5),
+      Dedup.jaccardPairsIndexed(df, "doc_id", "text", 3, 0.5),
+      Dedup.containmentPairsIndexed(df, "doc_id", "text", 3, 0.8))
+    assert(outs(0).select("id_a", "id_b").as[(Long, Long)].collect().toSet ==
+      naiveJaccardPairs(3, 0.5))
+    assert(outs(1).select("id_a", "id_b").as[(Long, Long)].collect().toSet ==
+      naiveJaccardPairs(3, 0.5))
+    assert(outs(2).select("id_a", "id_b").as[(Long, Long)].collect().toSet ==
+      naiveContainmentPairs(3, 0.8))
+    // the registry holds one cached frame over the shingle pass
+    val shingleFrames = Dedup.retainedFrames(spark).filter(f =>
+      f.columns.exists(c => c == "sh" || c == "shh") &&
+        cm.lookupCachedData(
+          f.asInstanceOf[org.apache.spark.sql.classic.DataFrame]).isDefined)
+    assert(shingleFrames.size == 1, shingleFrames.map(_.schema.simpleString))
+    assert(!shingleFrames.head.schema.exists(_.dataType match {
+      case ArrayType(StringType, _) => true
+      case _ => false
+    }), shingleFrames.head.schema.simpleString)
+    // and all three plans read that one cache entry
+    val builders = outs.flatMap(_.queryExecution.optimizedPlan.collect {
+      case r: InMemoryRelation if r.output.exists(_.name == "shh") => r.cacheBuilder
+    })
+    assert(builders.size >= 3 && builders.forall(_ eq builders.head))
+    // the prefix-index candidate joins key on the 8-byte hash
+    outs.drop(1).foreach { out =>
+      val tok = out.queryExecution.optimizedPlan.collect {
+        case j: org.apache.spark.sql.catalyst.plans.logical.Join =>
+          j.condition.toSeq.flatMap(_.references).filter(_.name == "tok")
+      }.flatten
+      assert(tok.nonEmpty && tok.forall(_.dataType == LongType), tok)
+    }
+  }
+
   test("jaccardPairsIndexed equals brute force on a collision-heavy random corpus") {
     // 120 docs over an 8-word vocabulary: every 3-shingle is frequent,
     // so the sampled rarity order actually has heavy tokens to rank
@@ -478,6 +519,60 @@ class DedupSpec extends SparkSpec {
     val brute = naiveSimhashPairs(maxDist = 6, bits = 48)
     assert(banded == brute)
     assert(banded.exists(_._3 == 0)) // identical docs collapse to distance 0
+  }
+
+  test("simhashNearDups keeps a pair whose first colliding bucket the guard dropped") {
+    // 16-bit fingerprints in four 4-bit bands fill buckets fast. From a
+    // pool of docs and one-word-longer variants, pick a near-dup pair
+    // that collides in band 0 and a later band, plus two fillers that
+    // share the pair's band-0 value: that bucket then holds four rows
+    // against maxBucket 3 and is dropped, while the later band's stays.
+    val bits = 16; val maxDist = 3; val maxBucket = 3
+    val bands = Dedup.hammingBands(bits, maxDist)
+    def bval(fp: Long, b: Int): Long = {
+      val (off, w) = bands(b)
+      (fp >>> off) & ((1L << w) - 1L)
+    }
+    def collides(x: Long, y: Long, b: Int) = bval(x, b) == bval(y, b)
+    val rnd = new scala.util.Random(77)
+    val bases = (0L until 200L).map(i =>
+      i -> Vector.fill(14)(s"w${rnd.nextInt(60)}").mkString(" "))
+    val pool = bases ++ bases.map { case (i, t) => (1000L + i) -> s"$t extra$i" }
+    val text = pool.toMap
+    val fps = Dedup.simhashFingerprints(pool.toDF("doc_id", "text"),
+        "doc_id", "text", bits)
+      .as[(Long, Long)].collect().toMap
+    val corpusIds = (for {
+      (a, _) <- bases.iterator
+      b = 1000L + a
+      if java.lang.Long.bitCount(fps(a) ^ fps(b)) <= maxDist
+      if collides(fps(a), fps(b), 0)
+      later <- (1 until bands.size).find(collides(fps(a), fps(b), _)).iterator
+      fillers = bases.map(_._1)
+        .filter(f => f != a && bval(fps(f), 0) == bval(fps(a), 0)).take(2)
+      if fillers.size == 2
+      ids = Seq(a, b) ++ fillers
+      if ids.count(i => bval(fps(i), later) == bval(fps(a), later)) <= maxBucket
+    } yield ids).next()
+    val corpus = corpusIds.map(i => i -> text(i))
+    // reference: pairs from the surviving buckets, distinct, refined
+    val buckets = (for (i <- corpusIds; b <- bands.indices)
+      yield (b, bval(fps(i), b)) -> i).groupMap(_._1)(_._2)
+    val expect = (for {
+      ids <- buckets.values if ids.size >= 2 && ids.size <= maxBucket
+      x <- ids; y <- ids if x < y
+      h = java.lang.Long.bitCount(fps(x) ^ fps(y)) if h <= maxDist
+    } yield (x, y, h)).toSet
+    val (a, b) = (corpusIds(0), corpusIds(1))
+    val first = bands.indices.find(collides(fps(a), fps(b), _)).get
+    assert(buckets((first, bval(fps(a), first))).size > maxBucket)
+    assert(expect.exists(p => p._1 == a && p._2 == b),
+      "the pair survives in a later band")
+    val got = Dedup.simhashNearDups(corpus.toDF("doc_id", "text"), "doc_id",
+        "text", maxDist = maxDist, bits = bits, maxBucket = maxBucket)
+      .select("id_a", "id_b", "hamming").as[(Long, Long, Int)].collect()
+    assert(got.length == got.toSet.size, "each pair once")
+    assert(got.toSet == expect)
   }
 
   test("connectedComponents converges on a 1000-vertex path graph") {

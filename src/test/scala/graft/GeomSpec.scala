@@ -2,7 +2,9 @@ package graft
 
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.Row
+import org.apache.spark.sql.graftbridge.Bridge
 
+import graft.expressions.STGeomFromText
 import graft.geom.{st, Wkb}
 
 /** Unit coverage for the st_* expression layer (SURVEY §5: per-operator
@@ -156,7 +158,8 @@ class GeomSpec extends SparkSpec {
   test("wkt bridge: st_geomfromtext ∘ st_astext is identity") {
     val wkt = "POLYGON ((0 0, 2 0, 2 2, 0 2, 0 0))"
     val r = spark.range(1)
-      .select(st.asText(st.geomFromText(lit(wkt))).as("t")).head()
+      .select(st.asText(Bridge.column(STGeomFromText(
+        Seq(Bridge.expression(lit(wkt)))))).as("t")).head()
     assert(r.getString(0) == wkt)
   }
 

@@ -64,24 +64,6 @@ class IntervalJoinSpec extends SparkSpec {
     assert(msgs(ex).exists(m => m != null && m.contains("buckets")), ex)
   }
 
-  test("left-outer form keeps uncovered points with null interval columns") {
-    val points = Seq(
-      (1L, 10L, "2024-01-01 00:30:00"), // covered
-      (2L, 10L, "2024-01-02 00:00:00"), // uncovered (wrong day)
-      (3L, 20L, "2024-01-01 00:30:00")  // uncovered (wrong key)
-    ).toDF("event_id", "k", "t")
-      .select(col("event_id"), col("k"), col("t").cast("timestamp").as("t"))
-    val intervals = Seq((10L, "2024-01-01 00:00:00", "2024-01-01 01:00:00"))
-      .toDF("k", "s", "e")
-      .select(col("k"), col("s").cast("timestamp").as("s"),
-        col("e").cast("timestamp").as("e"))
-    val got = IntervalJoin.pointsInIntervalsOuter(points, "event_id", "t",
-        intervals, "s", "e", Seq("k"), bucketSeconds = 3600)
-      .select(col("event_id"), col("s").isNull.as("no_window"))
-      .as[(Long, Boolean)].collect().toSet
-    assert(got == Set((1L, false), (2L, true), (3L, true)))
-  }
-
   test("matches the naive range join on the events fixture") {
     val ev = Tables(spark, "/root/testdata/sf0.001", "events")
       .select(col("event_id"), col("user_id"), col("ts"), col("value"))

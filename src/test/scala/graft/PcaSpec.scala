@@ -67,24 +67,6 @@ class PcaSpec extends SparkSpec {
     assert(approx(math.abs(proj(0L)), math.abs((t0 - meanT)) * math.sqrt(2.0), 2e-2))
   }
 
-  test("whiten normalizes component variances to ~1") {
-    val pts = (0 until 300).map { i =>
-      val a = math.sin(i * 0.7) * 3.0
-      val b = math.cos(i * 1.3) * 0.5
-      (i.toLong, Array(a.toFloat, b.toFloat, (a * 0.5 + b).toFloat))
-    }
-    val df = pts.toDF("id", "vec")
-    val m = Pca.fit(df, "vec", d = 3, k = 2)
-    val w = df.select(Pca.whiten(col("vec"), m).as("w"))
-      .select(col("w").getItem(0).as("w0"), col("w").getItem(1).as("w1"))
-    val vars = w.agg(
-      (sum(col("w0") * col("w0")) / count(lit(1))).as("v0"),
-      (sum(col("w1") * col("w1")) / count(lit(1))).as("v1"))
-      .collect()(0)
-    assert(approx(vars.getDouble(0), 1.0, 0.05))
-    assert(approx(vars.getDouble(1), 1.0, 0.05))
-  }
-
   test("covLongForm matches a hand-computed moment matrix") {
     val df = Seq(
       (1L, Array(1.0f, 2.0f)),

@@ -36,13 +36,35 @@ class PngSpec extends AnyFunSuite {
     }
   }
 
+  /** One PNG chunk: length, type, data and the CRC over type + data. */
+  private def chunk(typ: String, d: Array[Byte]): Array[Byte] = {
+    val out = new java.io.ByteArrayOutputStream()
+    val len = new Array[Byte](4)
+    def wi(v: Int, dst: Array[Byte]) = {
+      dst(0) = (v >>> 24).toByte; dst(1) = (v >>> 16).toByte
+      dst(2) = (v >>> 8).toByte; dst(3) = v.toByte
+    }
+    wi(d.length, len); out.write(len)
+    val tb = typ.getBytes("US-ASCII"); out.write(tb); out.write(d)
+    val crc = new java.util.zip.CRC32(); crc.update(tb); crc.update(d)
+    val cb = new Array[Byte](4); wi(crc.getValue.toInt, cb); out.write(cb)
+    out.toByteArray
+  }
+
   test("palette images expand to RGB through PLTE") {
     val palette = Array[Byte](
       10, 20, 30, // index 0
       40, 50, 60, // index 1
       70, 80, 90) // index 2
     val indices = Array[Byte](0, 1, 2, 2, 1, 0)
-    val img = Png.decode(Png.encodePalette(3, 2, indices, palette))
+    // the codec writes no palette images: encode the indices as an
+    // 8-bit grayscale image (filter None), then declare color type 3 in
+    // its IHDR (bytes 16-28, CRC recomputed) and add a PLTE chunk
+    val gray = Png.encode(Image(3, 2, 1, indices))
+    val ihdr = gray.slice(16, 29).updated(9, 3.toByte)
+    val pal = gray.take(8) ++ chunk("IHDR", ihdr) ++ chunk("PLTE", palette) ++
+      gray.drop(33)
+    val img = Png.decode(pal)
     assert(img.width === 3 && img.height === 2 && img.channels === 3)
     assert(img.pixels.toSeq === Seq[Byte](
       10, 20, 30, 40, 50, 60, 70, 80, 90,
@@ -67,19 +89,6 @@ class PngSpec extends AnyFunSuite {
     }
     val data = one.slice(idatOff + 8, idatOff + 8 + idatLen)
     val (d1, d2) = data.splitAt(data.length / 2)
-    def chunk(typ: String, d: Array[Byte]): Array[Byte] = {
-      val out = new java.io.ByteArrayOutputStream()
-      val len = new Array[Byte](4)
-      def wi(v: Int, dst: Array[Byte]) = {
-        dst(0) = (v >>> 24).toByte; dst(1) = (v >>> 16).toByte
-        dst(2) = (v >>> 8).toByte; dst(3) = v.toByte
-      }
-      wi(d.length, len); out.write(len)
-      val tb = typ.getBytes("US-ASCII"); out.write(tb); out.write(d)
-      val crc = new java.util.zip.CRC32(); crc.update(tb); crc.update(d)
-      val cb = new Array[Byte](4); wi(crc.getValue.toInt, cb); out.write(cb)
-      out.toByteArray
-    }
     val reframed = one.slice(0, idatOff) ++ chunk("IDAT", d1) ++
       chunk("IDAT", d2) ++ one.slice(idatOff + 12 + idatLen, one.length)
     assert(Png.decode(reframed).pixels.toSeq === img.pixels.toSeq)

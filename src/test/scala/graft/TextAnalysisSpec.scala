@@ -149,8 +149,11 @@ class TextAnalysisSpec extends SparkSpec {
     size(filter(toks, t => t.isInCollection(TextAnalysis.stopwords)))
   }
   private def chainLanguageId(text: org.apache.spark.sql.Column) = {
+    val toks = split(trim(lower(text)), "\\s+")
     val scored = TextAnalysis.langMarkers.keys.toSeq.sorted.map { l =>
-      struct(TextAnalysis.langScore(text, l).as("score"), lit(l).as("lang"))
+      val score = size(filter(toks,
+        t => t.isInCollection(TextAnalysis.langMarkers(l))))
+      struct(score.as("score"), lit(l).as("lang"))
     }
     val best = array_max(array(scored: _*))
     when(best.getField("score") > 0, best.getField("lang")).otherwise("und")

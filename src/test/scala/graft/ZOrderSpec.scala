@@ -20,6 +20,16 @@ class ZOrderSpec extends SparkSpec {
     z
   }
 
+  /** The z write layout: range-partition by the z-value into `numFiles`
+    * partitions and sort within each (one sampled range exchange, then
+    * a per-partition sort). */
+  private def clusterByZ(df: org.apache.spark.sql.DataFrame,
+      cols: Seq[org.apache.spark.sql.Column], bits: Int, numFiles: Int) =
+    df.withColumn("__z", Layout.zorderValue(cols, bits))
+      .repartitionByRange(numFiles, col("__z"))
+      .sortWithinPartitions("__z")
+      .drop("__z")
+
   test("ZOrderValue codegen compiles eagerly and matches interpreted eval") {
     import org.apache.spark.sql.catalyst.InternalRow
     import org.apache.spark.sql.catalyst.expressions.BoundReference
@@ -61,7 +71,7 @@ class ZOrderSpec extends SparkSpec {
         .filter(col("x").between(8, 15) && col("y").between(40, 47))
         .select("f").distinct().count()
     val naive = grid.repartitionByRange(16, col("x")) // single-column sort layout
-    val zed = Layout.clusterByZ(grid, Seq(col("x"), col("y")), 6, 16)
+    val zed = clusterByZ(grid, Seq(col("x"), col("y")), 6, 16)
     val nNaive = filesTouched(naive)
     val nZ = filesTouched(zed)
     // x-sorted layout: the x-slab spans every y, so the box hits every
@@ -81,7 +91,7 @@ class ZOrderSpec extends SparkSpec {
       .select((col("id") % 64).as("x"), (col("id") / 64).cast("long").as("y"))
     val tmp = java.nio.file.Files.createTempDirectory("graft_zorder").toString
     val zDir = s"$tmp/z"; val nDir = s"$tmp/naive"
-    Layout.clusterByZ(grid, Seq(col("x"), col("y")), 6, 16)
+    clusterByZ(grid, Seq(col("x"), col("y")), 6, 16)
       .write.mode("overwrite").parquet(zDir)
     grid.repartitionByRange(16, col("x")).sortWithinPartitions("x")
       .write.mode("overwrite").parquet(nDir)
