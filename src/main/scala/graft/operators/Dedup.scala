@@ -286,29 +286,6 @@ object Dedup {
       .filter(col("containment") >= threshold)
   }
 
-  /** MinHash signature from a MATERIALIZED shingle-array column: for
-    * each of `k` independent hash families, the minimum over shingle
-    * hashes — value-identical to min over Spark's `hash(shingle,
-    * lit(seed))`, deterministic across executors.
-    *
-    * Computed by the compiled [[graft.expressions.MinHashSig]] pass:
-    * each shingle is Murmur3-hashed ONCE and each family adds a single
-    * 32-bit mix. This replaced two slower formulations measured here —
-    * the per-row HOF chain (interpreted lambda per element×family,
-    * string re-hashed k times) and explode + codegen'd min-aggregate
-    * (fast kernel but a corpus shuffle) — and being per-row it serves
-    * the stateless streaming gate and the batch index alike, shuffle-
-    * free.
-    *
-    * Callers must project the shingle array into a real column first
-    * (`df.select(shingles(...).as("sh")).select(minhashFromShingles(
-    * col("sh"), k))`) so the sort-distinct shingle subtree evaluates
-    * once per row. */
-  def minhashFromShingles(sh: Column, k: Int): Column = {
-    import org.apache.spark.sql.graftbridge.Bridge
-    Bridge.column(graft.expressions.MinHashSig(Bridge.expression(sh), k))
-  }
-
   /** k-family MinHash signature over PRE-HASHED shingles (the sorted
     * `xxhash64` long arrays the refine stage caches) — a different but
     * equally sound LSH family ([[graft.expressions.MinHashSigLong]]):
@@ -508,24 +485,6 @@ object Dedup {
       lit(maxBucket.toLong).as("max_bucket_allowed"))
   }
 
-  /** MinHash-LSH near-dup candidate pairs: band the k-row signature,
-    * bucket by (band, bandHash), emit pairs per bucket (classic Broder
-    * banding, MMDS ch.3).
-    *
-    * Only (id, band, bandHash) rows shuffle — signatures are consumed at
-    * the map side. Defaults k=32, bands=16 (rows=2): detection odds
-    * 1−(1−j²)^16 — at j≥0.9 miss probability ~3e−12, while unrelated
-    * pairs (j≈0.01) bucket together with p≈0.0016. */
-  /** Banded candidate pairs from a PRE-HASHED (id, shh) frame, where
-    * `shh` is [[hashedShingles]]'s sorted long array — the shared core
-    * of [[minhashCandidates]] and [[minhashNearDups]] (both on the
-    * hashed [[graft.expressions.MinHashSigLong]] family since r13/r14;
-    * the string family stays available via [[minhashFromShingles]]). */
-  private[graft] def minhashCandidatesFromHashedSets(sets: DataFrame, k: Int,
-      bands: Int, maxBucket: Int): DataFrame =
-    pairsFromBuckets(minhashBandedHashed(sets, k, bands),
-      Seq("band", "band_hash"), maxBucket)
-
   /** (id, band, band_hash) LSH membership rows from a PRE-HASHED
     * (id, shh) frame: band_hash = murmur3 of the band's signature
     * slice (seed 9999), signature and banding fused into one compiled
@@ -545,16 +504,8 @@ object Dedup {
       .withColumnRenamed("pos", "band").withColumnRenamed("col", "band_hash")
   }
 
-  def minhashCandidates(df: DataFrame, idCol: String, textCol: String,
-      shingleN: Int = 3, k: Int = 32, bands: Int = 16,
-      maxBucket: Int = 64): DataFrame =
-    minhashCandidatesFromHashedSets(
-      df.select(col(idCol).cast("long").as("id"),
-        hashedShingles(col(textCol), shingleN).as("shh")), k, bands, maxBucket)
+  private val EagerShingleCacheKey = "spark.graft.eagerShingleCache"
 
-  /** The composed near-dup pipeline: MinHash-LSH candidates + exact
-    * Jaccard refine — candidates ⊇ all true pairs (w.h.p., see
-    * [[minhashCandidates]]), refine makes the output exact. */
   /** Whether [[shingleCache]] materializes the shared shingle cache
     * in its own stage before the first shuffle (minhash's band shuffle,
     * the prefix index's candidate join) consumes it. Left lazy,
@@ -573,16 +524,14 @@ object Dedup {
     * the failure mode it prevents can exist, and big-partition
     * pipelines like `tools/Prep10M` keep the contract automatically if
     * they ever raise their partition count past the threshold.
-    * Override per-pipeline via `-Dgraft.eagerShingleCache=true|false`
-    * / env `GRAFT_EAGER_SHINGLE_CACHE` (Prep10M sets it true: at a
-    * 4 GiB heap even the bypass writer's map stage benefits from not
-    * sharing its working set with the cache unroll). Only `true` or
-    * `false` (any case) override; any other value falls back to the
-    * gate, so a malformed setting cannot crash query construction. */
+    * The session conf `spark.graft.eagerShingleCache=true|false`
+    * overrides the gate (Prep10M sets it true: at a 4 GiB heap even
+    * the bypass writer's map stage benefits from not sharing its
+    * working set with the cache unroll); any other value throws. */
   private[graft] def eagerShingleCacheDefault(spark: SparkSession): Boolean =
-    sys.props.get("graft.eagerShingleCache")
-      .orElse(sys.env.get("GRAFT_EAGER_SHINGLE_CACHE"))
-      .flatMap(_.toBooleanOption)
+    spark.conf.getOption(EagerShingleCacheKey)
+      .map(v => v.toBooleanOption.getOrElse(throw new IllegalArgumentException(
+        s"$EagerShingleCacheKey must be true or false, got '$v'")))
       .getOrElse {
         // unparsable conf values (both accept only ints today, but the
         // safe default for a protective split is ON) → eager
@@ -594,6 +543,14 @@ object Dedup {
         parts.flatMap(p => bypass.map(p > _)).getOrElse(true)
       }
 
+  /** The composed near-dup pipeline: MinHash-LSH candidates + exact
+    * Jaccard refine. Candidates come from classic Broder banding (MMDS
+    * ch.3) of the k-row signature, bucketed by (band, bandHash); only
+    * (id, band, bandHash) rows shuffle. Defaults k=32, bands=16
+    * (rows=2): detection odds 1−(1−j²)^16 — at j≥0.9 miss probability
+    * ~3e−12, while unrelated pairs (j≈0.01) bucket together with
+    * p≈0.0016. Candidates ⊇ all true pairs (w.h.p.), and the refine
+    * makes the output exact. */
   def minhashNearDups(df: DataFrame, idCol: String, textCol: String,
       shingleN: Int = 3, threshold: Double = 0.5,
       k: Int = 32, bands: Int = 16): DataFrame = {
@@ -674,7 +631,7 @@ object Dedup {
   }
 
   /** Banded band-hash array of a k-row signature — same family/seed as
-    * [[minhashCandidatesFromHashedSets]]'s bucketing, kept as an array so a
+    * [[minhashBandedHashed]]'s bucketing, kept as an array so a
     * joined pair can locate its FIRST colliding band in-row. */
   private def bandHashes(sig: Column, bands: Int, rows: Int): Column =
     array((0 until bands).map { b =>
@@ -767,8 +724,9 @@ object Dedup {
     * current labels + a min-aggregate (both stock shuffles); the driver
     * only checks CONVERGENCE (a count), never collects data. Rounds
     * needed = the largest component's diameter (near-dup components
-    * are dense — a handful); `maxIters` caps adversarial chains. */
-  /** Pointer jumping adds a label-of-label self-join per round,
+    * are dense — a handful); `maxIters` caps adversarial chains.
+    *
+    * Pointer jumping adds a label-of-label self-join per round,
     * halving path lengths (O(log diameter) rounds). Near-dup components
     * are dense cliques (diameter ~2) where the extra per-round join
     * costs more than the rounds it saves — so jumping starts OFF and
@@ -1194,9 +1152,15 @@ object Dedup {
     * exhaustive hamming-band bucketing — exact (recall 1 by pigeonhole)
     * while no bucket exceeds `maxBucket`, no cross join. Above it the
     * guard drops the bucket, and a pair is found only through a later
-    * band whose bucket it also shares. */
+    * band whose bucket it also shares.
+    *
+    * Size `bits` and `maxDist` to the corpus: [[hammingBands]] splits
+    * the fingerprint into maxDist+1 bands, and a w-bit band has at most
+    * 2^w buckets, so past 2^w × `maxBucket` rows the guard must drop
+    * one of them (bits = 32, maxDist = 6 gives 7 bands of 4–5 bits:
+    * past 32 × 4096 = 131,072 rows every band drops a bucket). */
   def simhashNearDups(df: DataFrame, idCol: String, textCol: String,
-      maxDist: Int = 6, bits: Int = 32, maxBucket: Int = 4096): DataFrame = {
+      maxDist: Int, bits: Int, maxBucket: Int = 4096): DataFrame = {
     val fp = simhashFingerprints(df, idCol, textCol, bits)
     val bands = hammingBands(bits, maxDist)
     val bandCols = bands.zipWithIndex.map {
@@ -1252,18 +1216,6 @@ object Dedup {
       .select("id_a", "id_b", "hamming")
   }
 
-  /** Benchmark DECONTAMINATION: flag corpus documents that share at
-    * least one word n-gram with a benchmark/eval set (the n-gram-overlap
-    * test used to scrub training corpora before pretraining). Returns
-    * one row per NON-benchmark document: (id, n_shared, contaminated).
-    *
-    * Plan shape for 100 TB: per-document distinct n-grams come from the
-    * compiled [[shingles]] pass, hashed to 60-bit longs (md5-derived so
-    * the oracle recomputes them) — the join key is 8 bytes, the text
-    * never leaves its scan. The benchmark gram set (eval suites are
-    * ~10⁴-10⁶ grams) is distinct-ed and BROADCAST, so the corpus side
-    * joins map-side with zero shuffle of corpus rows; the only shuffle
-    * is the final per-doc count aggregation, which is output-bound. */
   /** Cross-document REPEATED-SUBSTRING spans — the dedup step document-
     * level near-dup misses: licence blocks, boilerplate headers and
     * templated paragraphs shared verbatim ACROSS otherwise-distinct
@@ -1433,6 +1385,18 @@ object Dedup {
         col("n_shared").isNotNull.as("contaminated"))
   }
 
+  /** Benchmark DECONTAMINATION: flag corpus documents that share at
+    * least one word n-gram with a benchmark/eval set (the n-gram-overlap
+    * test used to scrub training corpora before pretraining). Returns
+    * one row per NON-benchmark document: (id, n_shared, contaminated).
+    *
+    * Plan shape for 100 TB: per-document distinct n-grams come from the
+    * compiled [[shingles]] pass, hashed to 60-bit longs (md5-derived so
+    * the oracle recomputes them) — the join key is 8 bytes, the text
+    * never leaves its scan. The benchmark gram set (eval suites are
+    * ~10⁴-10⁶ grams) is distinct-ed and BROADCAST, so the corpus side
+    * joins map-side with zero shuffle of corpus rows; the only shuffle
+    * is the final per-doc count aggregation, which is output-bound. */
   def ngramContamination(df: DataFrame, idCol: String, textCol: String,
       isBenchmark: Column, n: Int): DataFrame = {
     val grams = df.select(col(idCol).as("id"), isBenchmark.as("is_bench"),

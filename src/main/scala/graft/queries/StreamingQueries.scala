@@ -74,33 +74,6 @@ object StreamingQueries {
   val RocksDbProvider: String =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  /** True when the suite should run its stateful queries on RocksDB
-    * instead of the default in-memory provider — flipped by the JVM
-    * property `graft.stateStore=rocksdb` (or env GRAFT_STATE_STORE). */
-  private[graft] def useRocksDb: Boolean =
-    sys.props.get("graft.stateStore").orElse(sys.env.get("GRAFT_STATE_STORE"))
-      .exists(_.equalsIgnoreCase("rocksdb"))
-
-  /** Run a streaming query with `spark.sql.shuffle.partitions` sized to
-    * the STATE, restoring the batch default after. Every shuffle
-    * partition materializes its own state-store instances (a
-    * stream-stream join keeps four per partition) with per-batch
-    * checkpoint I/O, so a stateful query over a small keyspace pays
-    * ~constant overhead PER PARTITION: the stream-stream join measured
-    * 13.8 s at the batch default of 32 partitions vs 3.1 s at 8 on the
-    * same sf0.1 replay. At cluster scale the same sizing applies, just
-    * against stream volume rather than a local replay.
-    *
-    * STATE-SIZE BOUND: the default HDFSBackedStateStoreProvider holds
-    * every partition's state map on the executor HEAP — total state is
-    * bounded by executor memory, and a 100 TB keyspace (billions of
-    * session/join keys) OOMs. With [[useRocksDb]] the same queries run
-    * on [[RocksDbProvider]] (set here, restored after): state lives in
-    * per-partition RocksDB instances on executor-local disk with a
-    * block-cache in native memory, so the bound becomes local DISK
-    * (plus `spark.sql.streaming.stateStore.rocksdb.*` cache knobs),
-    * not heap. ScaleBench's RocksDB soak stage pushes 2M state entries
-    * through one query to pin this path. */
   /** One-row sentinel parquet files, written once per (table dir,
     * kind) per JVM and reused across bench trials: the sentinel's
     * content is a pure function of the source table (its max event
@@ -145,37 +118,36 @@ object StreamingQueries {
       } finally listing.close() // Files.list leaks a directory fd unclosed
     })
 
-  /** State-partition count for the declared stateful queries — 8 by
-    * default (see [[withStatePartitions]] for the sizing rationale and
-    * the 32-vs-8 measurement), overridable for A/B sizing experiments
-    * via `-Dgraft.statePartitions=N` / env `GRAFT_STATE_PARTITIONS`. */
-  private[graft] def defaultStatePartitions: Int =
-    sys.props.get("graft.statePartitions")
-      .orElse(sys.env.get("GRAFT_STATE_PARTITIONS"))
-      .map { raw =>
-        val n = try raw.toInt catch {
-          case _: NumberFormatException => throw new IllegalArgumentException(
-            s"graft.statePartitions / GRAFT_STATE_PARTITIONS must be a " +
-              s"positive integer, got '$raw'")
-        }
-        require(n >= 1,
-          s"graft.statePartitions / GRAFT_STATE_PARTITIONS must be >= 1, got $n")
-        n
-      }.getOrElse(8)
+  /** State-partition count for the declared stateful queries (see
+    * [[withStatePartitions]] for the sizing rationale and the 32-vs-8
+    * measurement). */
+  private val StatePartitions = 8
 
-  private[graft] def withStatePartitions[A](spark: SparkSession, n: Int)(f: => A): A = {
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
+  /** Run a streaming query with `spark.sql.shuffle.partitions` sized to
+    * the STATE, restoring the batch default after. Every shuffle
+    * partition materializes its own state-store instances (a
+    * stream-stream join keeps four per partition) with per-batch
+    * checkpoint I/O, so a stateful query over a small keyspace pays
+    * ~constant overhead PER PARTITION: the stream-stream join measured
+    * 13.8 s at the batch default of 32 partitions vs 3.1 s at 8 on the
+    * same sf0.1 replay. At cluster scale the same sizing applies, just
+    * against stream volume rather than a local replay.
+    *
+    * STATE-SIZE BOUND: the default HDFSBackedStateStoreProvider holds
+    * every partition's state map on the executor HEAP — total state is
+    * bounded by executor memory, and a 100 TB keyspace (billions of
+    * session/join keys) OOMs. With Spark's
+    * `spark.sql.streaming.stateStore.providerClass` set to
+    * [[RocksDbProvider]] the same queries keep state in per-partition
+    * RocksDB instances on executor-local disk with a block-cache in
+    * native memory, so the bound becomes local DISK (plus
+    * `spark.sql.streaming.stateStore.rocksdb.*` cache knobs), not heap.
+    * ScaleBench's RocksDB soak stage pushes 2M state entries through
+    * one query to pin this path. */
+  private def withStatePartitions[A](spark: SparkSession, n: Int)(f: => A): A = {
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevProv = spark.conf.getOption(provKey)
     spark.conf.set("spark.sql.shuffle.partitions", n.toString)
-    if (useRocksDb) spark.conf.set(provKey, RocksDbProvider)
-    try f finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevProv match {
-        case Some(p) => spark.conf.set(provKey, p)
-        case None => spark.conf.unset(provKey)
-      }
-    }
+    try f finally spark.conf.set("spark.sql.shuffle.partitions", prev)
   }
 
   /** Raw on-disk schema of events.parquet plus the SQL normalizing its
@@ -333,7 +305,7 @@ object StreamingQueries {
       .select(col("w.start").cast("date").as("day"), col("event_type"),
         col("n"), col("min_value"), col("max_value"), col("avg_value"))
     val name = s"graft_stream_daily_${runId.incrementAndGet()}"
-    withStatePartitions(spark, defaultStatePartitions) {
+    withStatePartitions(spark, StatePartitions) {
       val q = agg.writeStream.format("memory").queryName(name)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
@@ -354,7 +326,7 @@ object StreamingQueries {
         col("value").cast("double").as("value"))
       .as[Stateful.KeyedValue]
     val name = s"graft_stream_state_${runId.incrementAndGet()}"
-    withStatePartitions(spark, defaultStatePartitions) {
+    withStatePartitions(spark, StatePartitions) {
       val q = Stateful.runningStats(keyed).toDF()
         .writeStream.format("memory").queryName(name)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
@@ -386,7 +358,7 @@ object StreamingQueries {
         col("value").cast("double").as("score"))
       .as[Stateful.KeyedScored]
     val name = s"graft_stream_state_${runId.incrementAndGet()}"
-    withStatePartitions(spark, defaultStatePartitions) {
+    withStatePartitions(spark, StatePartitions) {
       val q = Stateful.topKPerKey(keyed, 5).toDF()
         .writeStream.format("memory").queryName(name)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
@@ -434,7 +406,7 @@ object StreamingQueries {
       .agg(count(lit(1)).as("n_points"),
         Exact.fixedSum(col("value"), 2).as("sum_value"))
     val name = s"graft_stream_pip_${runId.incrementAndGet()}"
-    withStatePartitions(spark, defaultStatePartitions) {
+    withStatePartitions(spark, StatePartitions) {
       val q = joined.writeStream.format("memory").queryName(name)
         .outputMode("complete").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
@@ -462,7 +434,7 @@ object StreamingQueries {
         bucketSeconds = 3600)
       .groupBy("event_id").agg(count(lit(1)).as("n_windows"))
     val name = s"graft_stream_interval_${runId.incrementAndGet()}"
-    withStatePartitions(spark, defaultStatePartitions) {
+    withStatePartitions(spark, StatePartitions) {
       val q = joined.writeStream.format("memory").queryName(name)
         .outputMode("complete").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
@@ -507,7 +479,7 @@ object StreamingQueries {
     // 2 partitions 1.5 s / 4 → 2.6 s / 8 → 9.3 s / 16 → 41 s on the
     // same replay, with wall time best at 4. Same sizing rule at
     // cluster scale, driven by stream volume instead of a replay.
-    withStatePartitions(spark, math.max(defaultStatePartitions / 2, 1)) {
+    withStatePartitions(spark, StatePartitions / 2) {
       val q = joined.writeStream.format("memory").queryName(name)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
@@ -580,7 +552,7 @@ object StreamingQueries {
       .select(col("user_id").cast("long").as("user_id"))
       .dropDuplicates("user_id")
     val name = s"graft_stream_dedup_${runId.incrementAndGet()}"
-    withStatePartitions(spark, defaultStatePartitions) {
+    withStatePartitions(spark, StatePartitions) {
       val q = dedup.writeStream.format("memory").queryName(name)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
@@ -619,7 +591,7 @@ object StreamingQueries {
         unix_micros(col("max_ts")).as("end_us"),
         col("n_events"), col("sum_value"))
     val name = s"graft_stream_sessions_${runId.incrementAndGet()}"
-    withStatePartitions(spark, defaultStatePartitions) {
+    withStatePartitions(spark, StatePartitions) {
       val q = agg.writeStream.format("memory").queryName(name)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
@@ -759,7 +731,7 @@ object StreamingQueries {
       .agg(Ann.topK(col("cos_sim"), col("neighbor_id"), k).as("top"))
     requireAnnCandidatesOnce(spark, dir, e, c, probes, k, "stream_ann_topk")
     val name = s"graft_stream_ann_${runId.incrementAndGet()}"
-    withStatePartitions(spark, defaultStatePartitions) {
+    withStatePartitions(spark, StatePartitions) {
       val q = agg.writeStream.format("memory").queryName(name)
         .outputMode("complete").trigger(Trigger.AvailableNow()).start()
       q.awaitTermination()
@@ -908,7 +880,7 @@ object StreamingQueries {
         col("ts"))
       .as[Stateful.ServeCand]
     val name = s"graft_stream_annserve_${runId.incrementAndGet()}"
-    withStatePartitions(spark, defaultStatePartitions) {
+    withStatePartitions(spark, StatePartitions) {
       val q = Stateful.topKServe(cands, k, graceMs = 1000L).toDF()
         .writeStream.format("memory").queryName(name)
         .outputMode("append").trigger(Trigger.AvailableNow()).start()

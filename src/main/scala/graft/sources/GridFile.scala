@@ -235,16 +235,12 @@ private[sources] object GridFile {
   /** Opt-in for CF calendar 'none' (an axis whose epoch date has NO
     * calendar to interpret it with): when set to "raw", time values
     * decode as elapsed-unit micros anchored at 0 instead of raising.
-    * Set `--conf spark.graft.cfCalendarNone=raw` (Spark confs reach
+    * Set `--conf spark.graft.cfCalendarNone=raw`: Spark confs reach
     * every EXECUTOR, where the per-partition readers re-open the
-    * file — a driver-only JVM property would silently not apply on a
-    * real cluster), or `-Dgraft.cfCalendarNone=raw` / env
-    * `GRAFT_CF_CALENDAR_NONE` for single-JVM use. */
+    * file. */
   private def cfCalendarNoneRaw: Boolean =
     Option(org.apache.spark.SparkEnv.get)
       .flatMap(_.conf.getOption("spark.graft.cfCalendarNone"))
-      .orElse(sys.props.get("graft.cfCalendarNone"))
-      .orElse(sys.env.get("GRAFT_CF_CALENDAR_NONE"))
       .exists(_.trim.equalsIgnoreCase("raw"))
 
   private def timesOrDefault(coord: Option[(Array[Double], Seq[(String, String)])],

@@ -29,10 +29,9 @@ object NearDupProfile {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val docsN = if (args.nonEmpty) args(0).toLong else 10000000L
-    if (sys.props.get("graft.eagerShingleCache").isEmpty)
-      sys.props("graft.eagerShingleCache") = "true"
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
+      .config("spark.graft.eagerShingleCache", "true")
       .config("spark.sql.shuffle.partitions",
         sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", "192"))
       .config("spark.sql.adaptive.coalescePartitions.enabled", "true")

@@ -40,16 +40,15 @@ import graft.operators.{Dedup, Packing, Sampling, TextAnalysis}
 object Prep10M {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    // Keep the eager shingle-cache stage split unconditionally here
-    // even though 192 partitions stays on the bypass writer (where the
-    // fd failure mode can't exist): at a 4 GiB heap the map stage
-    // still benefits from not sharing its working set with the cache
-    // unroll. Declared-query paths (32 partitions) take the lazy path
-    // via Dedup.eagerShingleCacheDefault's bypass-threshold gate.
-    if (sys.props.get("graft.eagerShingleCache").isEmpty)
-      sys.props("graft.eagerShingleCache") = "true"
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
+      // Keep the eager shingle-cache stage split unconditionally here
+      // even though 192 partitions stays on the bypass writer (where
+      // the fd failure mode can't exist): at a 4 GiB heap the map stage
+      // still benefits from not sharing its working set with the cache
+      // unroll. Declared-query paths (32 partitions) take the lazy path
+      // via Dedup.eagerShingleCacheDefault's bypass-threshold gate.
+      .config("spark.graft.eagerShingleCache", "true")
       // Reduce-side partition count is the memory:data deployment
       // parameter this probe exists to measure: at 32 partitions each
       // band-shuffle reduce task sorts ~4M wide rows and the 4 GiB

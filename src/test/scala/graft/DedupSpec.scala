@@ -373,8 +373,9 @@ class DedupSpec extends SparkSpec {
     val hof = array((0 until 32).map { seed =>
       array_min(transform($"sh", s => hash(s, lit(seed))))
     }: _*)
+    GraftFunctions.register(spark)
     val rows = df.select($"doc_id",
-        Dedup.minhashFromShingles($"sh", 32).as("fast"), hof.as("ref"))
+        expr("minhash_sig(sh, 32)").as("fast"), hof.as("ref"))
       .collect()
     rows.foreach { r =>
       assert(r.getSeq[Any](1) === r.getSeq[Any](2),
@@ -648,6 +649,7 @@ class DedupSpec extends SparkSpec {
   }
 
   test("eager shingle-cache gate follows the bypass-merge threshold; knob overrides") {
+    val key = "spark.graft.eagerShingleCache"
     val prev = spark.conf.get("spark.sql.shuffle.partitions")
     try {
       // at/below the bypass threshold (default 200) the sort-based
@@ -657,19 +659,20 @@ class DedupSpec extends SparkSpec {
       assert(!Dedup.eagerShingleCacheDefault(spark))
       spark.conf.set("spark.sql.shuffle.partitions", "201")
       assert(Dedup.eagerShingleCacheDefault(spark))
-      // explicit knob wins over the gate, both directions
-      sys.props("graft.eagerShingleCache") = "false"
+      // the session conf wins over the gate, both directions
+      spark.conf.set(key, "false")
       assert(!Dedup.eagerShingleCacheDefault(spark))
-      sys.props("graft.eagerShingleCache") = "true"
+      spark.conf.set(key, "true")
       spark.conf.set("spark.sql.shuffle.partitions", "2")
       assert(Dedup.eagerShingleCacheDefault(spark))
-      // a malformed knob is ignored, not thrown: the gate decides
-      sys.props("graft.eagerShingleCache") = "yes"
-      assert(!Dedup.eagerShingleCacheDefault(spark))
-      spark.conf.set("spark.sql.shuffle.partitions", "201")
-      assert(Dedup.eagerShingleCacheDefault(spark))
+      // a malformed value throws, naming the key
+      spark.conf.set(key, "yes")
+      val bad = intercept[IllegalArgumentException] {
+        Dedup.eagerShingleCacheDefault(spark)
+      }
+      assert(bad.getMessage.contains(key))
     } finally {
-      sys.props.remove("graft.eagerShingleCache")
+      spark.conf.unset(key)
       spark.conf.set("spark.sql.shuffle.partitions", prev)
     }
   }

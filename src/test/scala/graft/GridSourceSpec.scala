@@ -330,12 +330,13 @@ class GridSourceSpec extends SparkSpec {
     // a RAW ELAPSED axis under the documented opt-in: value x unit
     // scale, anchored at 0 — the epoch date has no calendar to
     // interpret it with, so it is deliberately ignored
-    sys.props("graft.cfCalendarNone") = "raw"
+    val sparkConf = org.apache.spark.SparkEnv.get.conf
+    sparkConf.set("spark.graft.cfCalendarNone", "raw")
     try {
       assert(timesMs(write("cnone.nc", Array(0.0, 1.5),
         Seq("units" -> "days since 1850-01-01", "calendar" -> "none")))
         == Seq(0L, (1.5 * day).toLong))
-    } finally sys.props.remove("graft.cfCalendarNone")
+    } finally sparkConf.remove("spark.graft.cfCalendarNone")
     // ...and a digits-only year too long for Long must flow to the
     // SAME clean reject, not a raw NumberFormatException from toLong
     for ((ep, cal) <- Seq(("2000-02-29", "noleap"), ("2000-02-30", "all_leap"),

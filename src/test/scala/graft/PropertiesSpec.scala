@@ -294,8 +294,8 @@ class PropertiesSpec extends SparkSpec {
     val hof = array((0 until k).map { seed =>
       array_min(transform(col("sh"), s => hash(s, lit(seed))))
     }: _*)
-    val rows = df.select(Dedup.minhashFromShingles(col("sh"), k).as("fast"),
-        hof.as("ref"))
+    GraftFunctions.register(spark)
+    val rows = df.select(expr(s"minhash_sig(sh, $k)").as("fast"), hof.as("ref"))
       .collect()
     rows.foreach(r => assert(r.getSeq[Any](0) === r.getSeq[Any](1)))
     assert(rows.length == arrays.length)

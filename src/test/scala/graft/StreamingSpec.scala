@@ -70,22 +70,4 @@ class StreamingSpec extends SparkSpec {
     assert(streamed == batch,
       s"stream/batch divergence: ${streamed.take(2)} vs ${batch.take(2)}")
   }
-
-  test("state-partition knob rejects non-numeric and non-positive values loudly") {
-    import graft.queries.StreamingQueries
-    try {
-      sys.props("graft.statePartitions") = "4"
-      assert(StreamingQueries.defaultStatePartitions == 4)
-      sys.props("graft.statePartitions") = "zero"
-      val bad = intercept[IllegalArgumentException] {
-        StreamingQueries.defaultStatePartitions
-      }
-      assert(bad.getMessage.contains("GRAFT_STATE_PARTITIONS"))
-      sys.props("graft.statePartitions") = "0"
-      val zero = intercept[IllegalArgumentException] {
-        StreamingQueries.defaultStatePartitions
-      }
-      assert(zero.getMessage.contains("GRAFT_STATE_PARTITIONS"))
-    } finally sys.props.remove("graft.statePartitions")
-  }
 }

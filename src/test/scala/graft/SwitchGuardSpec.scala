@@ -9,18 +9,24 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Guard against hidden switches: every JVM-property or environment
   * read in the main sources must name a key on this allow-list. A
   * switch read inside an operator changes its plan behind the caller's
-  * back; a new one has to be added here, in review, or not at all. */
+  * back; a new one has to be added here, in review, or not at all.
+  * Engine settings are Spark session confs, and their set is pinned
+  * here too. */
 class SwitchGuardSpec extends AnyFunSuite {
 
   private val root = Paths.get("src/main/scala/graft")
 
-  /** Real tuning knobs, each with its env twin where one exists. */
-  private val knobs = Set(
-    "graft.eagerShingleCache", "GRAFT_EAGER_SHINGLE_CACHE",
-    "graft.statePartitions", "GRAFT_STATE_PARTITIONS",
-    "graft.stateStore", "GRAFT_STATE_STORE",
-    "graft.cfCalendarNone", "GRAFT_CF_CALENDAR_NONE",
-    "graft.fixtures.dir")
+  /** The deployment path of the multimodal fixtures. */
+  private val knobs = Set("graft.fixtures.dir")
+
+  /** The engine's own session confs. */
+  private val sessionKeys = Set(
+    "spark.graft.eagerShingleCache",
+    "spark.graft.cfCalendarNone",
+    "spark.graft.spatialJoin.cellSize")
+
+  private def mainFiles = Files.walk(root).iterator().asScala
+    .filter(_.toString.endsWith(".scala")).toSeq
 
   /** Harness variables are read only by the runnable mains. */
   private def harnessFile(rel: String): Boolean =
@@ -37,8 +43,7 @@ class SwitchGuardSpec extends AnyFunSuite {
 
   test("main code reads no property or env key outside the allow-list") {
     assert(Files.isDirectory(root), s"run from the repository root: $root")
-    val files = Files.walk(root).iterator().asScala
-      .filter(_.toString.endsWith(".scala")).toSeq
+    val files = mainFiles
     val offences = files.flatMap { f =>
       val rel = root.relativize(f).toString.replace('\\', '/')
       Files.readAllLines(f).asScala.zipWithIndex.flatMap { case (line, i) =>
@@ -57,5 +62,13 @@ class SwitchGuardSpec extends AnyFunSuite {
     }
     assert(files.size > 100, s"scanned only ${files.size} files under $root")
     assert(offences.isEmpty, offences.mkString("\n", "\n", ""))
+  }
+
+  test("main code names exactly the engine's spark.graft session confs") {
+    assert(Files.isDirectory(root), s"run from the repository root: $root")
+    val literal = """"(spark\.graft\.[^"]*)"""".r
+    val found = mainFiles.flatMap(f =>
+      literal.findAllMatchIn(Files.readString(f)).map(_.group(1))).toSet
+    assert(found == sessionKeys)
   }
 }
