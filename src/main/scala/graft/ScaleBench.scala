@@ -108,13 +108,14 @@ object ScaleBench {
 
     // --- stage 4b: DOMAIN-PARALLEL tessellation — 100 independent
     // domains × 100k seeds each (SURVEY §2.7 G10's many-grids case:
-    // model runs / tiles / regions tessellating concurrently). One JTS
-    // diagram per domain via groupByKey+flatMapGroups: domains hash
-    // across all reduce tasks, so the plan's parallelism is
-    // min(domains, partitions) — no single-task funnel. Exactness is
-    // REQUIRE'd per domain, not sampled: every domain must produce
-    // exactly one cell per seed, and every domain's cell-area sum must
-    // equal its clip envelope (seed extent + margin) to 1e-6 relative.
+    // model runs / tiles / regions tessellating concurrently). Each
+    // 100k domain is above tessellateByDomain's auto-tile threshold, so
+    // it is cut into ≈4k-seed halo tiles and the tiles of all domains
+    // hash across the reduce tasks of one plan — no task holds a
+    // handful of whole domains. Exactness is REQUIRE'd per domain, not
+    // sampled: every domain must produce exactly one cell per seed, and
+    // every domain's cell-area sum must equal its clip envelope (seed
+    // extent + margin) to 1e-6 relative.
     val domN = 100
     val perDom = 100000 // 400 x 250 jittered grid per domain
     val ((domCount, domAreaErr), tVorDomains) = timed {
@@ -156,15 +157,15 @@ object ScaleBench {
     }
 
     // --- stage 4c: MIXED domain sizes — 1 domain × 2M seeds + 99
-    // domains × 100k (VERDICT r12 #4). The 2M domain is above
-    // tessellateByDomain's auto-tile threshold, so it routes through
-    // the tiled path (verified halo guard) instead of funneling one
-    // 2M-seed JTS build into a single task; the 99 small domains keep
-    // the one-task-per-domain shape. A task-duration listener proves
-    // the funnel is gone: the stage's longest task must be far below a
-    // single-task 2M diagram build (100k ≈ 8-15 s single-threaded here,
-    // so 2M ≈ minutes; the REQUIRE bound is 120 s). Exactness is
-    // REQUIRE'd per domain exactly as in 4b.
+    // domains × 100k (VERDICT r12 #4). Every domain is above
+    // tessellateByDomain's auto-tile threshold, so the 2M domain is
+    // tiled (verified halo guard) in the same plan as the 100k ones
+    // instead of funneling one 2M-seed JTS build into a single task.
+    // A task-duration listener proves the funnel is gone: the stage's
+    // longest task must be far below a single-task 2M diagram build
+    // (100k ≈ 8-15 s single-threaded here, so 2M ≈ minutes; the REQUIRE
+    // bound is 120 s). Exactness is REQUIRE'd per domain exactly as in
+    // 4b.
     val maxTaskMs = new java.util.concurrent.atomic.AtomicLong(0)
     val taskListener = new org.apache.spark.scheduler.SparkListener {
       override def onTaskEnd(

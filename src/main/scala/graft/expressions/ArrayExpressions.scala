@@ -5,7 +5,6 @@ import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types._
-import org.apache.spark.unsafe.types.UTF8String
 
 /** sorted_long_intersect_count(a, b) — |a ∩ b| for two ASCENDING-sorted
   * long arrays with distinct elements, by linear merge. The 64-bit twin

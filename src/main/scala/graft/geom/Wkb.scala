@@ -1,6 +1,6 @@
 package graft.geom
 
-import org.locationtech.jts.geom.{Coordinate, Envelope, Geometry, GeometryFactory, Point, Polygon, PrecisionModel}
+import org.locationtech.jts.geom.{Coordinate, Geometry, GeometryFactory, Point, Polygon, PrecisionModel}
 import org.locationtech.jts.io.{WKBReader, WKBWriter, WKTReader, WKTWriter}
 
 /** JTS bridge: geometries travel through Spark plans as WKB bytes in a
@@ -61,7 +61,4 @@ object Wkb {
       factory.createPolygon(cs)
     }
   }
-
-  def envelopePolygon(e: Envelope): Polygon =
-    box(e.getMinX, e.getMinY, e.getMaxX, e.getMaxY)
 }

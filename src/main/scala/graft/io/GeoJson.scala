@@ -22,7 +22,7 @@ object GeoJson {
       rings.map(_.getCoordinates
         .map(c => s"[${c.x},${c.y}]").mkString("[", ",", "]"))
         .mkString("[", ",", "]")
-    case pt if g.getGeometryType == "Point" =>
+    case _ if g.getGeometryType == "Point" =>
       s"[${g.getCoordinate.x},${g.getCoordinate.y}]"
     case _ => throw new IllegalArgumentException(
       s"geojson writer: unsupported geometry ${g.getGeometryType}")

@@ -5,8 +5,6 @@ import java.nio.{ByteBuffer, ByteOrder}
 import org.apache.spark.sql.{DataFrame, SparkSession, Row}
 import org.apache.spark.sql.types._
 
-import org.locationtech.jts.geom.Geometry
-
 import graft.geom.Wkb
 import graft.io.Sqlite._
 

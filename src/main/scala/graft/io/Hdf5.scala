@@ -1495,7 +1495,7 @@ object Hdf5 {
     n.toInt
   }
 
-  private def parseAttr(b: ByteBuffer, r: R = null): Attr = {
+  private def parseAttr(b: ByteBuffer, r: R): Attr = {
     val ver = b.get() & 0xff
     require(ver >= 1 && ver <= 3, s"attribute message v$ver")
     val flags = b.get() & 0xff // v1: reserved (0)

@@ -1,6 +1,6 @@
 package graft.io
 
-import java.nio.{ByteBuffer, ByteOrder}
+import java.nio.ByteBuffer
 import java.nio.file.{Files, Paths}
 
 import scala.collection.mutable.ArrayBuffer

@@ -21,8 +21,8 @@ import org.apache.spark.sql.functions._
   * list (tiny — the heavy lifting happened inside each retriever,
   * which has its own distributed plan); the fusion is a full-outer
   * join cascade over id with one row per retrieved document, then one
-  * global top-N sort over ≤ Σ N rows. At 100 TB nothing here grows
-  * with the corpus.
+  * global top-N over ≤ Σ N rows and a rank window over the N kept.
+  * At 100 TB nothing here grows with the corpus.
   */
 object Hybrid {
 
@@ -38,10 +38,13 @@ object Hybrid {
     val fused = arms.indices.map { i =>
       coalesce(expr(s"1000000 div ($rrfK + rank_$i)"), lit(0L))
     }.reduce(_ + _)
-    val w = Window.orderBy(col("rrf_ppm").desc, col("id"))
-    joined.withColumn("rrf_ppm", fused.cast("long"))
-      .withColumn("rank", row_number().over(w).cast("long"))
-      .filter(col("rank") <= topN)
+    val top = joined.withColumn("rrf_ppm", fused.cast("long"))
+      .orderBy(col("rrf_ppm").desc, col("id")).limit(topN)
+    // rank over the topN surviving rows only — the unpartitioned window
+    // sees a driver-bounded frame, never the full outer join
+    top.withColumn("rank",
+        row_number().over(Window.orderBy(col("rrf_ppm").desc, col("id")))
+          .cast("long"))
       .select(col("rank") +: col("id") +:
         arms.indices.map(i => col(s"rank_$i")) :+ col("rrf_ppm"): _*)
   }

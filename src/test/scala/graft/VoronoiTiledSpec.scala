@@ -155,4 +155,51 @@ class VoronoiTiledSpec extends SparkSpec {
     fb.foreach { case (id, g) =>
       assert(g.equalsTopo(fbSingle(id)), s"fallback cell $id differs") }
   }
+
+  /** One `tessellateByDomain` call over every domain shape at once: a
+    * small domain (one tile), a jittered domain that tiles cleanly, and
+    * a clustered domain whose halo guard fires (its rim cells stretch
+    * across the extent a single far seed opens up), which must fall
+    * back to its single-tile diagram. Every cell must equal the
+    * per-domain single-tile diagram's. */
+  test("tessellateByDomain: small, tiled and guard-fired domains in one call") {
+    val small = lcgSeeds(50).map { case (i, x, y) => (0L, i, x, y) }
+    val jittered = jitteredGrid(70).map { case (i, x, y) => (1L, i, x, y) }
+    val cluster = (0 until 5000).map(i =>
+        (2L, i.toLong, (i % 70) * 0.14, (i / 70) * 0.14)) :+
+      ((2L, 5000L, 1000.0, 1000.0))
+    val pts = (small ++ jittered ++ cluster).toDF("dom", "id", "x", "y")
+    val margin = 1.0
+    def collect(df: org.apache.spark.sql.DataFrame) =
+      df.select($"dom", $"id", st.asText($"geom"))
+        .as[(Long, Long, String)].collect()
+        .map { case (d, i, w) => (d, i) -> Wkb.readWkt(w) }.toMap
+
+    // the clustered domain's derived cut (tile 64·s̄, halo 4·s̄ over its
+    // extent + margin) really is unprovable: the guard fires on it
+    val clip = (-margin, -margin, 1000.0 + margin, 1000.0 + margin)
+    val sBar = math.sqrt((1000.0 + 2 * margin) * (1000.0 + 2 * margin) /
+      cluster.size)
+    val ex = intercept[Exception] {
+      Voronoi.tessellateTiled(cluster.map(c => (c._2, c._3, c._4))
+          .toDF("id", "x", "y"), "id", "x", "y", clip,
+        tileSize = 64 * sBar, halo = 4 * sBar).collect()
+    }
+    def messages(t: Throwable): Seq[String] =
+      if (t == null) Nil else Option(t.getMessage).toSeq ++ messages(t.getCause)
+    assert(messages(ex).exists(_.contains("halo")), s"guard did not fire: $ex")
+
+    val got = collect(Voronoi.tessellateByDomain(pts, "dom", "id", "x", "y",
+      margin, autoTileAbove = 1000L))
+    val single = collect(Voronoi.tessellateByDomain(pts, "dom", "id", "x", "y",
+      margin, autoTileAbove = Long.MaxValue))
+    assert(single.size == small.size + jittered.size + cluster.size)
+    assert(got.keySet == single.keySet)
+    got.foreach { case (k, g) =>
+      // ULP-level vertex noise tolerated, as in the property test above
+      val exact = g.equalsTopo(single(k))
+      lazy val symArea = g.symDifference(single(k)).getArea
+      assert(exact || symArea < 1e-12, s"cell $k differs, symdiff area $symArea")
+    }
+  }
 }
