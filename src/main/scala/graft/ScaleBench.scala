@@ -1076,10 +1076,9 @@ object ScaleBench {
       s"planted blocklist counts off: $blStats")
 
     // --- stage 31: connected components over a 1M-vertex planted graph
-    // — 100k chains of 10 (the dense-near-dup shape: converges in the
-    // fused first round) PLUS one adversarial 1,000-vertex chain whose
-    // diameter forces the auto-enabled pointer-jumping path (O(log d)
-    // rounds, broadcast frontiers once the wide graph has converged).
+    // — 100k chains of 10 PLUS one adversarial 1,000-vertex chain, far
+    // above the driver union-find's edge budget: Large-Star/Small-Star
+    // rounds, 11 of them, the last one the round that moves no edge.
     // Every representative is exact: rep(v) = 10·⌊v/10⌋ on the short
     // chains, 1,000,000 on the long one.
     val (ccStats, tCc) = timed {

@@ -703,42 +703,47 @@ object Dedup {
         round(col("__j"), 6).as("jaccard"))
   }
 
-  /** Connected components over a near-dup pair list by iterative
-    * min-label propagation: every document gets the smallest doc id in
-    * its similarity component as `cluster_rep` — the cluster-assignment
-    * step a dedup pipeline runs after pair generation (keep one doc per
-    * component, not per pair).
+  /** A neighbour `w` of vertex `v`: smaller on side 0, larger on 1. */
+  private[operators] case class CcNbr(v: Long, side: Int, w: Long)
+  /** An edge `hi > lo`, and whether this round's steps relinked it. */
+  private[operators] case class CcEdge(hi: Long, lo: Long, moved: Boolean)
+
+  /** Connected components over a near-dup pair list: every document
+    * gets the smallest doc id in its similarity component as
+    * `cluster_rep` — the cluster-assignment step a dedup pipeline runs
+    * after pair generation (keep one doc per component, not per pair).
     *
-    * Distributed-iterative: each round is one equi-join of edges with
-    * current labels + a min-aggregate (both stock shuffles); the driver
-    * only checks CONVERGENCE (a count), never collects data. Rounds
-    * needed = the largest component's diameter (near-dup components
-    * are dense — a handful); `maxIters` caps adversarial chains.
+    * Two regimes, chosen by the directed edge count:
+    *  - at most `driverFinishEdges`: one collect and a driver
+    *    union-find, in one job;
+    *  - above it: alternating Large-Star / Small-Star rounds (Kiveris
+    *    et al., "Connected Components in MapReduce and Beyond", SoCC
+    *    2014) over the canonical edge list `(hi, lo)`, `hi > lo`. With
+    *    m(u) the smallest of `u` and its smaller neighbours, Large-Star
+    *    turns each edge into `(hi, m(lo))` and Small-Star turns it into
+    *    `(lo, m(hi))`, keeping `(hi, m(hi))`. Both keep every component
+    *    connected; the fixpoint is one star per component centred on
+    *    its minimum, and a leaf's label is its star's centre.
     *
-    * Pointer jumping adds a label-of-label self-join per round,
-    * halving path lengths (O(log diameter) rounds). Near-dup components
-    * are dense cliques (diameter ~2) where the extra per-round join
-    * costs more than the rounds it saves — so jumping starts OFF and
-    * turns on once `autoJumpAfter` rounds have not converged (a
-    * chain-shaped graph revealed itself). Every `checkpointEvery`
-    * rounds the label frame is `localCheckpoint`ed: without truncation
-    * the plan deepens every round and the optimizer re-traverses the
-    * whole chain; superseded rounds' cached blocks are released as soon
-    * as the next round is materialized. */
+    * Round bound: O(log² n) rounds for n vertices (the paper's bound
+    * for the alternation); a 1,000-vertex path takes 11. The loop
+    * stops at the first round that moves no edge, at one count per
+    * round, and refuses to return after `maxIters` rounds without one.
+    *
+    * Group bound: each step is one groupBy keyed on a vertex whose
+    * edges stream through it sorted; no per-vertex array is built.
+    * Neither step emits more edges than it reads, so the largest group
+    * a step builds is one vertex's edges: at most its component's pair
+    * count, and the component's size − 1 once it is a star. */
   def connectedComponents(ids: DataFrame, pairs: DataFrame,
-      maxIters: Int = 50, deltaCapRows: Int = 500000,
-      driverFinishEdges: Int = 250000): DataFrame = {
-    val autoJumpAfter = 3
+      maxIters: Int = 50, driverFinishEdges: Int = 250000): DataFrame = {
     val checkpointEvery = 5
+    val spark = ids.sparkSession
+    import spark.implicits._
     // both edge directions in ONE pass over the pair list: a union of two
     // selects re-executes the (expensive, un-persisted) pair-generation
     // subtree once per branch, doubling candidate-join work before the
     // loop even starts
-    // persisted PRE-PARTITIONED on dst: every round's neighbor-min join
-    // keys edges on dst, so a cached hash layout makes that join
-    // shuffle-free on the edge side (the cached InMemoryTableScan
-    // preserves outputPartitioning) — without it each non-broadcast
-    // round re-shuffled the full edge list
     val edgesRaw = pairs.select(explode(array(
         struct(col("id_a").as("src"), col("id_b").as("dst")),
         struct(col("id_b").as("src"), col("id_a").as("dst")))).as("e"))
@@ -754,8 +759,6 @@ object Dedup {
     // edge cache the iterative path would warm anyway.
     val nDirected = edgesRaw.count()
     if (nDirected <= driverFinishEdges) {
-      val spark = ids.sparkSession
-      import spark.implicits._
       val parent = new scala.collection.mutable.HashMap[Long, Long]()
       def find(v: Long): Long = {
         var r = v
@@ -785,294 +788,80 @@ object Dedup {
         .join(broadcast(lbls), Seq("id"), "left")
         .select(col("id"), coalesce(col("__lbl"), col("id")).as("cluster_rep"))
     }
-    // iterative regimes: re-key the CACHED edge list hash-partitioned
-    // on dst, so every round's neighbor-min join reads a co-partitioned
-    // layout. The exchange reads from the cache — repartitioning the
-    // raw frame directly was measured to disturb the AQE stage shapes
-    // of the (expensive) banded pair-generation subtree itself:
-    // +1.5-2 s on the sf0.1 near-dup graphs before any round ran.
-    val edges = edgesRaw.repartition(col("dst"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    edges.count()
-    edgesRaw.unpersist(false)
-    // only edge-touched vertices can change label — iterate over those
-    // and re-attach the (typically vast) untouched remainder at the end.
-    // Round 1 is FUSED: with every label initialized to the vertex id,
-    // the first neighbor-min is simply min(dst) per src — one groupBy
-    // over the symmetric edge list replaces the labels-distinct shuffle,
-    // the edges⋈frontier join, and the labels left join the generic
-    // round would run (the edge list itself enumerates every touched
-    // vertex as src).
-    var labels = edges.groupBy(col("src")).agg(min("dst").as("nbr"))
-      .select(col("src").as("id"), col("src").as("prev"),
-        least(col("src"), col("nbr")).as("lbl"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    // a localCheckpoint's lineage is truncated — unpersisting it would
-    // make downstream recompute impossible, so only plain persists are
-    // released when superseded. Unpersist must target the frame that
-    // was ACTUALLY persisted: calling it on a derived projection is a
-    // silent no-op (CacheManager matches on sameResult of the exact
-    // cached plan).
-    var prevPersisted = labels
-    var labelsCheckpointed = false
-    // delta propagation: labels only DECREASE, so a neighbor whose label
-    // did not change this round already contributed its value to every
-    // neighbor's running min in an earlier round — only the changed
-    // frontier needs to ride the neighbor-min join. The frontier shrinks
-    // geometrically (dense components converge in a round or two), so
-    // late rounds join near-empty frames instead of the full label set.
-    var changed = labels.filter(col("lbl") =!= col("prev")).count()
-    var frontier = labels.filter(col("lbl") =!= col("prev")).select("id", "lbl")
-    var iter = 1
-    labels = labels.select("id", "lbl")
-    // once the previous round reported a small `changed`, the frontier
-    // (exactly those rows) is driver-safe to broadcast — late rounds
-    // then cost one cached edge scan instead of two full shuffle joins.
-    // The threshold is a row COUNT known exactly from the prior round's
-    // convergence check, not a guess, so the adaptive switch is safe at
-    // any data scale (early wide rounds keep shuffle joins). Wide
-    // frontiers deliberately do NOT broadcast: the frontier is a
-    // filter of the id-partitioned cached labels and the edge cache is
-    // dst-partitioned, so the wide neighbor-min join is already
-    // co-partitioned and exchange-free — building a multi-hundred-MB
-    // broadcast relation per round would cost more than it saves.
-    // The early-jump trigger is a SEPARATE knob: it fires on wide
-    // frontiers (long chains still propagating), and must not move
-    // when the broadcast budget does.
-    val broadcastBelow = 10000L
-    val jumpWhenWider = 200000L
-    // below this frontier size the loop switches to the driver-delta
-    // finish (the `else` branch): the wide DataFrame rounds stop and
-    // the tail of convergence runs over the provably-affectable set.
-    // (200k was measured too: collecting a ~200k-candidate round to
-    // the driver costs more than running it as one DataFrame round,
-    // so the switch stays at the point where candidate sets are
-    // thousands, not hundreds of thousands.)
-    val deltaBelow = broadcastBelow
-    var deltaBailed = false
-    while (changed > 0 && iter < maxIters) {
-      if (changed >= deltaBelow || deltaBailed) {
-      // jump early when the frontier is LARGE: a big changed-count
-      // after the fused round means long chains are still propagating
-      // one hop per round (dense near-dup graphs converge with small
-      // frontiers and never pay the hop join); small frontiers fall
-      // back to the round-count trigger
-      val jump = iter >= autoJumpAfter || changed >= jumpWhenWider
-      val small = changed < broadcastBelow
-      val front = if (small) broadcast(frontier) else frontier
-      // nbrMin's size is bounded by the frontier's NEIGHBOR count, not by
-      // `changed` (a hub vertex breaks that bound) — leave its join to
-      // AQE, which sees the actual post-shuffle size
-      val nbrMinRaw = edges.join(front, col("dst") === col("id"))
-        .groupBy(col("src")).agg(min("lbl").as("nbr_lbl"))
-      // Convergence PROBE at the first iterated round (r16): dense
-      // near-dup graphs — the common shape, 1M disjoint cliques at the
-      // 10M-doc probe — are fully converged after the FUSED round, but
-      // proving it cost a whole round: hop self-join, 5M-row
-      // repartition, persist, full next-frame count. Converged ⟺ no
-      // frontier neighbor-min undercuts a current label: non-frontier
-      // neighbors' labels equal their ids (unchanged after round 1)
-      // and were already folded into round 1's min(dst), and at
-      // iter==1 a hop undercut implies a neighbor undercut (lbl(v)=u≠v
-      // came from a neighbor u whose own label is visible to v's
-      // nbrMin), so the probe is exact HERE — and only here, which is
-      // why it does not run in later rounds: chains pay one persisted
-      // nbrMin + one count, once, and the non-converged path reuses
-      // the persisted frame for the round it was going to run anyway.
-      val probing = iter == 1
-      val nbrMin =
-        if (probing) nbrMinRaw.persist(StorageLevel.MEMORY_AND_DISK)
-        else nbrMinRaw
-      if (probing && nbrMin.join(labels, col("src") === col("id"))
-          .filter(col("nbr_lbl") < col("lbl")).count() == 0) {
-        nbrMin.unpersist(false)
-        changed = 0
-        iter += 1
-      } else {
-      val joined = labels.join(nbrMin, col("id") === col("src"), "left")
-      // pointer-jump hop table: label(lbl(v)) over the FULL label frame.
-      // Restricting it to the last frontier was tried and reverted: a
-      // vertex can acquire an already-stale pointer from a neighbor
-      // (the parent changed in an earlier round and never reappears in
-      // a frontier), which downgrades doubling to geometric decay —
-      // measured 27 rounds / 42 s vs ~12 / 36 s on the 1M adversarial
-      // chain — and in the worst case strands convergence past
-      // maxIters. The full self-join is O(log diameter) guaranteed.
-      // (a second hop per jump round — label(label(label(v))), ~4^k
-      // distance growth — was tried and reverted: it cut 12 rounds to
-      // 9 on the 1M probe but the two extra 1M-row joins per round,
-      // and a much deeper checkpoint plan, cost more than the three
-      // saved rounds: 34.6 s vs 31.1 s measured. Round count is not
-      // the binding constraint; per-round frame size is.)
-      val withHop =
-        if (!jump) joined.withColumn("hlbl", col("lbl"))
-        else joined.join(
-          labels.select(col("id").as("hid"), col("lbl").as("hlbl")),
-          col("lbl") === col("hid"), "left")
-      val stepped = withHop
-        .select(col("id"), col("lbl").as("prev"),
-          least(col("lbl"),
-            least(coalesce(col("nbr_lbl"), col("lbl")),
-              coalesce(col("hlbl"), col("lbl")))).as("lbl"))
-      val truncate = (iter + 1) % checkpointEvery == 0
-      // materialize each round hash-partitioned on id: the next round's
-      // labels⋈nbrMin left join (keyed id===src, with nbrMin already
-      // src-partitioned by its groupBy) and the pointer-jump hop side
-      // (keyed hid = id) then both reuse the cached layout instead of
-      // re-shuffling the full label frame twice per round
-      val keyed = stepped.repartition(col("id"))
-      val next =
-        if (truncate) keyed.localCheckpoint(true)
-        else keyed.persist(StorageLevel.MEMORY_AND_DISK)
-      // carry the previous label so ONE action both materializes the
-      // round and measures convergence
-      changed = next.filter(col("lbl") =!= col("prev")).count()
-      // next is fully materialized (eager checkpoint, or the count above
-      // populated every cached partition) — the prior round is now dead
-      if (!labelsCheckpointed) prevPersisted.unpersist(false)
-      if (probing) nbrMin.unpersist(false)
-      prevPersisted = next
-      labels = next.select("id", "lbl")
-      frontier = next.filter(col("lbl") =!= col("prev")).select("id", "lbl")
-      labelsCheckpointed = truncate
-      iter += 1
-      }
-      } else {
-        // ---- driver-delta finish --------------------------------
-        // The frontier is tiny, but a DataFrame round still rebuilds
-        // and re-joins the FULL label frame to move it (measured on
-        // the 1M probe: 7 of 12 rounds spent moving <0.1% of rows).
-        // Freeze the cached label frame and iterate only the
-        // provably-affectable set: a vertex can change next round
-        // only if a neighbor changed (nbr-min), its parent changed
-        // (hop), or it changed itself last round (it has a new
-        // parent) — so candidates = F ∪ N(F) ∪ ptrIn(F). Each round
-        // costs three broadcast probes of cached frames plus a
-        // driver minimization over |candidates| rows. The monotone-
-        // min fixpoint is schedule-independent, so the final labels
-        // are exactly the DataFrame loop's. Bails loudly back to
-        // DataFrame rounds if any probe exceeds the driver cap.
-        val sp = labels.sparkSession
-        import sp.implicits._
-        val stale = labels
-        // `deltaCapRows` is a parameter so the bail path is TESTABLE:
-        // a tiny cap forces the probe-overflow branch on a small graph
-        // (DedupSpec pins bail ≡ pure-DataFrame labels)
-        val capRows = deltaCapRows
-        var fMap: Map[Long, Long] = frontier
-          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-        val delta = scala.collection.mutable.HashMap[Long, Long]() ++= fMap
-        var bail = false
-        while (fMap.nonEmpty && !bail && iter < maxIters) {
-          val fDf = broadcast(fMap.toSeq.toDF("fid", "flbl"))
-          // N(F) with the min frontier contribution AND the frozen
-          // label of each candidate, in one cached-probe job
-          val nbrRows = edges.join(fDf, col("dst") === col("fid"))
-            .groupBy("src").agg(min("flbl").as("nbrmin"))
-            .join(stale, col("src") === col("id"))
-            .select(col("src"), col("nbrmin"), col("lbl"))
-            .limit(capRows + 1).collect()
-          // ptrIn(F): vertices whose current pointer targets a
-          // vertex that changed last round
-          val revRows = stale.join(
-              broadcast(fMap.keys.toSeq.toDF("fid")),
-              col("lbl") === col("fid"))
-            .select(col("id"), col("lbl"))
-            .limit(capRows + 1).collect()
-          if (nbrRows.length > capRows || revRows.length > capRows) {
-            bail = true
-          } else {
-            // candidate -> (current label, neighbor-min or MaxValue)
-            val cand = scala.collection.mutable.HashMap[Long, (Long, Long)]()
-            nbrRows.foreach { r =>
-              val v = r.getLong(0)
-              cand(v) = (delta.getOrElse(v, r.getLong(2)), r.getLong(1))
+    // ---- regime 2: Large-Star / Small-Star rounds -----------------
+    // the canonical edges; self-loops drop out here
+    var edges = edgesRaw.filter(col("src") > col("dst"))
+      .select(col("src").as("hi"), col("dst").as("lo"))
+    var held = edgesRaw
+    var checkpointed = false
+    var changed = 1L
+    var round = 0
+    while (changed > 0 && round < maxIters) {
+      // Large-Star, grouped on each vertex v with its smaller
+      // neighbours (side 0) sorted first, smallest first: m(v) is the
+      // first row, and each larger neighbour w relinks to (w, m(v))
+      val large = edges.select(explode(array(
+          struct(col("hi").as("v"), lit(0).as("side"), col("lo").as("w")),
+          struct(col("lo").as("v"), lit(1).as("side"), col("hi").as("w"))))
+          .as("e")).select("e.*")
+        .groupBy("v").as[Long, CcNbr]
+        .flatMapSortedGroups(col("side"), col("w")) { (v, rows) =>
+          val it = rows.buffered
+          val m = if (it.head.side == 0) it.head.w else v
+          it.dropWhile(_.side == 0).map(r => CcEdge(r.w, m, m != v))
+        }
+      // Small-Star, grouped on each hi with its smaller neighbours
+      // sorted, smallest m(hi) first: the edge (hi, m) stays and every
+      // other edge of hi becomes (lo, m); repeated edges merge here
+      val small = large.groupBy("hi").as[Long, CcEdge]
+        .flatMapSortedGroups(col("lo")) { (hi, rows) =>
+          val it = rows.buffered
+          val m = it.head.lo
+          new Iterator[CcEdge] {
+            def hasNext: Boolean = it.hasNext
+            def next(): CcEdge = {
+              val e = it.next()
+              var moved = e.moved
+              while (it.hasNext && it.head.lo == e.lo) moved |= it.next().moved
+              if (e.lo == m) CcEdge(hi, m, moved) else CcEdge(e.lo, m, true)
             }
-            revRows.foreach { r =>
-              val v = r.getLong(0)
-              if (!cand.contains(v))
-                cand(v) = (delta.getOrElse(v, r.getLong(1)), Long.MaxValue)
-            }
-            // the frozen-frame probe above misses vertices whose
-            // pointer was rewritten by an EARLIER delta round to a
-            // vertex that changed later — complete ptrIn(F) from the
-            // driver-side delta map (ADVICE r11: without this, hop
-            // acceleration was stale-pointer-only and chain graphs
-            // spent extra rounds reaching the same fixpoint)
-            delta.foreach { case (v, l) =>
-              if (fMap.contains(l) && !cand.contains(v))
-                cand(v) = (l, Long.MaxValue)
-            }
-            fMap.keysIterator.foreach { v =>
-              if (!cand.contains(v)) cand(v) = (delta(v), Long.MaxValue)
-            }
-            // hop lookups: parents not already tracked by the delta
-            // come from one more frozen-frame probe. A parent absent
-            // from `stale` would be an edge-untouched vertex, whose
-            // label is provably its own id — labels only ever hold
-            // edge-endpoint ids, so the default never actually fires.
-            val unknown = (cand.valuesIterator.map(_._1).toSet --
-              delta.keySet).toSeq
-            val pMap: Map[Long, Long] =
-              if (unknown.isEmpty) Map.empty
-              else stale.join(broadcast(unknown.toDF("pid")),
-                  col("id") === col("pid"))
-                .select(col("id"), col("lbl")).collect()
-                .map(r => r.getLong(0) -> r.getLong(1)).toMap
-            def curOf(p: Long): Long =
-              delta.getOrElse(p, pMap.getOrElse(p, p))
-            val newF = scala.collection.mutable.HashMap[Long, Long]()
-            cand.foreach { case (v, (curV, nb)) =>
-              var nl = math.min(curV, curOf(curV))
-              if (nb != Long.MaxValue) nl = math.min(nl, nb)
-              if (nl < curV) newF(v) = nl
-            }
-            delta ++= newF
-            fMap = newF.toMap
-            iter += 1
-            changed = fMap.size
-            if (delta.size > capRows) bail = true
           }
-        }
-        // merge the driver corrections back over the frozen base
-        val merged = stale.join(
-            broadcast(delta.toSeq.toDF("did", "dlbl")),
-            col("id") === col("did"), "left")
-          .select(col("id"), coalesce(col("dlbl"), col("lbl")).as("lbl"))
-          .persist(StorageLevel.MEMORY_AND_DISK)
-        merged.count()
-        if (!labelsCheckpointed) prevPersisted.unpersist(false)
-        prevPersisted = merged
-        labels = merged
-        labelsCheckpointed = false
-        changed = fMap.size
-        if (bail) {
-          deltaBailed = true // stay in DataFrame rounds from here on
-          frontier = fMap.toSeq.toDF("id", "lbl")
-        }
-      }
+        }.toDF()
+      round += 1
+      val truncate = round % checkpointEvery == 0
+      val next =
+        if (truncate) small.localCheckpoint(true)
+        else small.persist(StorageLevel.MEMORY_AND_DISK)
+      // materializes the round and measures convergence in one action
+      changed = next.filter(col("moved")).count()
+      // a localCheckpoint's blocks are its only copy: only plain
+      // persists are released once the next round is materialized
+      if (!checkpointed) held.unpersist(false)
+      held = next
+      checkpointed = truncate
+      edges = next
     }
     // a capped loop that did NOT converge would silently emit wrong
     // representatives — refuse instead (callers raise maxIters for
     // adversarially deep graphs)
     require(changed == 0,
       s"connectedComponents did not converge within $maxIters rounds " +
-        s"($changed labels still changing) — raise maxIters")
-    // detach the result from all loop state: truncate lineage once more
-    // if the last round was only persisted, then release that round's
-    // cache and the edge frame
-    val finalLabels =
-      if (labelsCheckpointed) labels
+        s"($changed edges still moving) — raise maxIters")
+    // the converged edges are the stars, each leaf `hi` once with its
+    // centre `lo` (a round that moves nothing emits its distinct input
+    // unchanged); detach them from the loop's cache
+    val stars =
+      if (checkpointed) held
       else {
-        val f = labels.localCheckpoint(true)
-        prevPersisted.unpersist(false)
+        val f = held.localCheckpoint(true)
+        held.unpersist(false)
         f
       }
-    edges.unpersist(false)
-    // one left join re-attaches the (typically vast) untouched remainder:
-    // untouched vertices are their own representative
+    // one left join re-attaches every id no star names as a leaf:
+    // centres, and the untouched remainder, are their own representative
     ids.select(col("id"))
-      .join(finalLabels.withColumnRenamed("lbl", "__lbl"), Seq("id"), "left")
+      .join(stars.select(col("hi").as("id"), col("lo").as("__lbl")),
+        Seq("id"), "left")
       .select(col("id"), coalesce(col("__lbl"), col("id")).as("cluster_rep"))
   }
 

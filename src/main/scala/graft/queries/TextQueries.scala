@@ -1287,7 +1287,8 @@ object TextQueries {
 
   /** Cluster assignment: connected components over the exact near-dup
     * pair list — every doc labeled with its component's smallest id
-    * (iterative min-label propagation; oracle = transitive closure by
+    * (the driver union-find at this size, Large-Star/Small-Star rounds
+    * above `driverFinishEdges`; oracle = transitive closure by
     * recursive CTE). */
   val qDedupComponents: Q = (spark, dir) => {
     val docs = Tables(spark, dir, "documents")

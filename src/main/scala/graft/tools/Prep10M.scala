@@ -181,12 +181,13 @@ object Prep10M {
     })
     require(nPairs == 10000000L, s"near-dup pairs: $nPairs")
 
-    // CC's delta rounds materialize at call time — wrapped with its
+    // CC's rounds materialize at call time — wrapped with its
     // action so the LOOP is inside the measurement (r12's cc_sec only
     // timed the final count; the loop ran untimed at construction).
-    // Light wins here: honestly-measured 4 GiB A/B is 22.2 s at 32 vs
-    // 71.5 s at 192 — the loop runs many SMALL rounds, so per-round
-    // task overhead at 192 dominates anything the smaller sorts save.
+    // Light won here for the earlier label-propagation loop: a 4 GiB
+    // A/B measured 22.2 s at 32 vs 71.5 s at 192, per-round task
+    // overhead at 192 dominating (not re-measured for the
+    // Large-Star/Small-Star rounds, two of them on this graph).
     val ((labels, nComp), tCc) = timed(withP(lightP) {
       val l = Dedup.connectedComponents(survivors.select(col("id")), pairs)
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)

@@ -6,8 +6,6 @@ import graft.operators.AsOf
 
 class AsOfSpec extends SparkSpec {
 
-  import org.apache.spark.sql.Row
-
   private def run(left: Seq[(Long, Long)], right: Seq[(Long, Long, String)]) = {
     import spark.implicits._
     val l = left.toDF("k", "t")

@@ -9,7 +9,6 @@ import graft.io.Blosc
 class BloscSpec extends AnyFunSuite {
 
   test("roundtrip: shuffled split lz4 over every typesize and size shape") {
-    val rnd = new scala.util.Random(42)
     for {
       typesize <- Seq(1, 2, 4, 8, 16, 24) // 24 > MAX_SPLITS -> unsplit path
       n <- Seq(0, 1, 7, 64, 1000, 131072, 131072 + 17, 400000)
@@ -140,7 +139,7 @@ class BloscSpec extends AnyFunSuite {
     val base = Blosc.compress(raw, 8)
     val rnd = new scala.util.Random(1234)
     var raised = 0
-    for (trial <- 0 until 300) {
+    for (_ <- 0 until 300) {
       val m = base.clone()
       val flips = 1 + rnd.nextInt(4)
       for (_ <- 0 until flips)

@@ -578,15 +578,15 @@ class DedupSpec extends SparkSpec {
 
   test("connectedComponents converges on a 1000-vertex path graph") {
     // worst case for plain min-label propagation (diameter 999): the
-    // auto-enabled pointer jumping must close it in O(log n) rounds
-    // within the default maxIters=50, and the per-round unpersist +
-    // periodic localCheckpoint must keep lineage bounded throughout
+    // Large-Star/Small-Star rounds must close it within the default
+    // maxIters=50, and the per-round unpersist + periodic
+    // localCheckpoint must keep lineage bounded throughout
     val ids = spark.range(1000).select($"id")
     val pairs = spark.range(999)
       .select($"id".as("id_a"), ($"id" + 1).as("id_b"))
     // driverFinishEdges = 0 forces the ITERATIVE regime — this test
-    // exists to cover pointer jumping + the delta finish, which the
-    // small-graph driver union-find would otherwise short-circuit
+    // exists to cover the rounds, which the small-graph driver
+    // union-find would otherwise short-circuit
     val labels = Dedup.connectedComponents(ids, pairs, driverFinishEdges = 0)
       .as[(Long, Long)].collect()
     assert(labels.length == 1000)
@@ -608,23 +608,41 @@ class DedupSpec extends SparkSpec {
     assert(got == want)
   }
 
-  test("connectedComponents delta-phase bail resumes DataFrame rounds with identical labels") {
-    // small graphs enter the driver-delta finish immediately (frontier
-    // < 10k); a 2-row probe cap forces the bail branch on the first
-    // delta round (a 100-vertex path's frontier neighbors exceed it),
-    // so the merge-back + resumed DataFrame rounds are what converge.
-    // Labels must equal the uncapped run's exactly — the fixpoint is
-    // schedule-independent and the bail must not lose the delta.
-    val ids = spark.range(100).select($"id")
-    val pairs = spark.range(99)
+  test("connectedComponents Large-Star/Small-Star rounds equal the driver union-find") {
+    // driverFinishEdges = 0 sends every graph through the rounds; the
+    // default keeps these graphs in the driver union-find. Each graph
+    // carries isolated ids, duplicate pairs (both orientations) and
+    // self-loops, one of them on an id with no other edge.
+    val rnd = new scala.util.Random(7)
+    val graphs: Seq[(String, Int, Seq[(Long, Long)])] = Seq(
+      ("1,000-path", 1000, (0L until 999L).map(v => (v, v + 1))),
+      ("star on its largest id", 501, (0L until 500L).map(v => (500L, v))),
+      ("200 disjoint 5-cliques", 1000, for {
+        c <- 0L until 200L; a <- 0L until 5L; b <- a + 1 until 5L
+      } yield (5 * c + a, 5 * c + b)),
+      ("seeded random graph", 300,
+        Seq.fill(250)((rnd.nextInt(300).toLong, rnd.nextInt(300).toLong))))
+    for ((name, n, edges) <- graphs) {
+      val ids = spark.range(n + 20).select($"id")
+      val pairs = (edges ++ edges.take(7) ++ edges.take(5).map(_.swap) ++
+          Seq((3L, 3L), (n + 10L, n + 10L))).toDF("id_a", "id_b")
+      val rounds = Dedup.connectedComponents(ids, pairs, driverFinishEdges = 0)
+        .as[(Long, Long)].collect()
+      val driver = Dedup.connectedComponents(ids, pairs)
+        .as[(Long, Long)].collect()
+      assert(rounds.length == n + 20, name)
+      assert(rounds.sortBy(_._1).sameElements(driver.sortBy(_._1)), name)
+    }
+  }
+
+  test("connectedComponents refuses to return labels it did not converge on") {
+    val ids = spark.range(1000).select($"id")
+    val pairs = spark.range(999)
       .select($"id".as("id_a"), ($"id" + 1).as("id_b"))
-    val capped = Dedup.connectedComponents(ids, pairs,
-        deltaCapRows = 2, driverFinishEdges = 0)
-      .as[(Long, Long)].collect().toMap
-    val free = Dedup.connectedComponents(ids, pairs)
-      .as[(Long, Long)].collect().toMap
-    assert(capped == free)
-    assert(capped.values.forall(_ == 0L))
+    val e = intercept[IllegalArgumentException] {
+      Dedup.connectedComponents(ids, pairs, maxIters = 1, driverFinishEdges = 0)
+    }
+    assert(e.getMessage.contains("maxIters"))
   }
 
   test("exact dedup groups identical docs under one digest") {

@@ -1,8 +1,7 @@
 package graft
 
 import java.io.ByteArrayOutputStream
-import java.nio.{ByteBuffer, ByteOrder}
-import java.nio.file.{Files, Paths}
+import java.nio.file.Files
 import java.util.zip.Deflater
 
 import org.scalatest.funsuite.AnyFunSuite

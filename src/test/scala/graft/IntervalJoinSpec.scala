@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.SparkException
 import org.apache.spark.sql.functions._
 
 import graft.operators.IntervalJoin
@@ -12,8 +11,6 @@ import graft.operators.IntervalJoin
 class IntervalJoinSpec extends SparkSpec {
 
   import spark.implicits._
-
-  private def ts(s: String) = to_timestamp(lit(s))
 
   test("containment is start-inclusive, end-exclusive, across buckets") {
     val points = Seq(

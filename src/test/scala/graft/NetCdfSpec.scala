@@ -663,7 +663,7 @@ class NetCdfSpec extends AnyFunSuite {
     val rnd = new scala.util.Random(20260815)
     val p = tmp("dense_attrs_mut.h5")
     var decoded = 0; var rejected = 0
-    for (i <- 0 until 200) {
+    for (_ <- 0 until 200) {
       val b = base.clone()
       for (_ <- 0 to rnd.nextInt(8))
         b(rnd.nextInt(b.length)) = rnd.nextInt(256).toByte

@@ -33,7 +33,7 @@ class PerceptronSpec extends SparkSpec {
       "y", Seq("x1", "x2"), rounds = 5)
       .as[(Long, String, Long, Long)].collect().toSeq
     // replica: same batch-update rule, plain Scala
-    var w = Array(0L, 0L, 0L) // x1, x2, bias
+    val w = Array(0L, 0L, 0L) // x1, x2, bias
     val want = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Long, Long)]
     for (r <- 0 until 5) {
       var n = 0L

@@ -26,7 +26,6 @@ class SkewJoinSpec extends SparkSpec {
       c.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2")
       c.set("spark.sql.adaptive.coalescePartitions.enabled", "false")
       c.set("spark.sql.shuffle.partitions", "20")
-      import spark.implicits._
       // 90% of left rows share bucket key 0 — the shape of a degenerate
       // spatial/LSH bucket (all geometries in one grid cell)
       val left = spark.range(200000).select(
