@@ -7,9 +7,13 @@ object Verify {
   def main(args: Array[String]): Unit = {
     val (sfDir, outDir) = (args(0), args(1))
     // optional 3rd arg: comma-separated query-name filter for fast
-    // local iteration with tools/check.py (the driver passes 2 args)
+    // local iteration with tools/check.py; oracle_sql.json then holds
+    // only the filtered queries' entries
     val only: Option[Set[String]] =
       if (args.length > 2) Some(args(2).split(",").toSet) else None
+    val unknown = only.fold(Set.empty[String])(_ -- SparkEntry.queries.keySet)
+    require(unknown.isEmpty,
+      s"not a declared query: ${unknown.toSeq.sorted.mkString(", ")}")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -46,6 +50,7 @@ object Verify {
       case c => c.toString
     } + "\""
     val json = SparkEntry.oracleSql
+      .filter { case (name, _) => only.forall(_.contains(name)) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()

@@ -87,7 +87,8 @@ object Ann {
     * refine of candidates.
     *
     * Scale shape: membership rows are (id, band, 4-byte bucket); pairs
-    * come from the guarded bucket self-join ([[Dedup.pairsFromBuckets]]);
+    * come from one grouped pass over the buckets under the `maxBucket`
+    * size guard ([[Dedup.pairsFromBuckets]]);
     * vectors ride only the candidate refine joins. Miss probability per
     * true pair = (1 − (1 − θ/π)^p)^b — at cosine 0.99 with the defaults
     * (p=12, b=24) ≈ 1e-13. */
@@ -575,8 +576,8 @@ object Ann {
     * drop contract, but within-cluster candidates come from BANDED
     * sign-LSH with the cluster id prepended to the band key — an
     * oversized cluster never pairs exactly, it pairs inside (cluster,
-    * band, bucket) cells under the [[Dedup.pairsFromBuckets]] size
-    * guard. Same miss-probability algebra as [[cosineNearDups]]
+    * band, bucket) cells, grouped on that 3-column key by
+    * [[Dedup.pairsFromBuckets]] under its `maxBucket` size guard. Same miss-probability algebra as [[cosineNearDups]]
     * (≈1e-13 per true pair at the defaults near the threshold), so
     * the exact within-cluster operator remains the test oracle. */
   def semanticDedupBanded(corpus: DataFrame, idCol: String, vecCol: String,

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Encoder, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
@@ -16,24 +16,24 @@ import org.apache.spark.storage.StorageLevel
 object Dedup {
 
   /** Bounded per-session registry of the intermediate frames these
-    * operators persist (shingle caches, guarded bucket memberships).
-    * Each operator call persists 1–2 frames that the RETURNED lazy
-    * DataFrame still reads, so they cannot be unpersisted at return —
+    * operators persist (the shared shingle cache).
+    * Each operator call persists one frame that the RETURNED lazy
+    * DataFrame still reads, so it cannot be unpersisted at return —
     * but a long-lived session calling operators repeatedly must not
     * accumulate MEMORY_AND_DISK blocks forever (disk blocks are not
     * LRU-reclaimed the way memory blocks are). The registry keeps the
     * most recent `maxRetainedCaches` frames per session and unpersists
     * the eldest beyond that. Sized so one composed pipeline stage
-    * (near-dup = shingle cache + bucket membership) never evicts its
-    * own caches mid-flight.
+    * (one near-dup call persists its shingle cache) never evicts its
+    * own cache mid-flight.
     *
     * One handle per plan: Spark's CacheManager keys an entry by
     * `sameResult` on the plan, so a handle persisted by an earlier
     * call on the same input names the SAME entry as the new one, and
     * unpersisting it would uncache the frame the current call just
     * persisted. Such a handle leaves the queue without an unpersist.
-    * Losing the cache is not just a recompute: the refine and bucket
-    * self-joins lose their exchange-free cache side, and a repeated
+    * Losing the cache is not just a recompute: the refine joins lose
+    * their exchange-free cache side, and a repeated
     * `minhashNearDups` on the 25k-doc benchmark corpus ran 5 extra
     * jobs and wrote 4× the shuffle (41.9 MB against 10.9 MB) per call. */
   private val retainedCaches = scala.collection.mutable
@@ -352,81 +352,73 @@ object Dedup {
     sets
   }
 
-  /** Internal: candidate id pairs from bucket membership rows
-    * (bucketCols → id). Pairs are emitted by a distributed SELF-JOIN on
-    * the bucket key — never by per-bucket array expansion, which would
-    * materialize O(bucket²) structs inside single rows (memory spike +
-    * one-task skew on hot buckets; AQE skew-join splits the join's hot
-    * keys instead). Buckets larger than `maxBucket` are dropped before
-    * pairing: a degenerate bucket (templated/near-empty content hashing
-    * together) would otherwise go quadratic — a recall-vs-blowup guard
-    * to size so it never triggers on healthy data. Nothing reports the
-    * guard's drops at run time: the declared `dedup_lsh_guard` query
-    * ([[lshGuardReportPortable]]) counts a statistically equivalent md5
-    * bucket-size distribution, not the buckets this guard drops.
-    * Run-time drop counters are ROADMAP item 3. */
-  private[operators] def pairsFromBuckets(memb: DataFrame, bucketCols: Seq[String],
+  /** A bucket member, and one carrying SimHash's fingerprint. */
+  private[operators] case class Member(id: Long)
+  private[operators] case class FpMember(id: Long, fp: Long)
+  private[operators] case class BucketPair(id_a: Long, id_b: Long)
+  private[operators] case class FpPair(id_a: Long, id_b: Long, fp_a: Long, fp_b: Long)
+
+  /** Internal: candidate pairs `(id_a, id_b)`, `id_a < id_b`, from bucket
+    * membership rows (`id`, bucketCols…) in one pass grouped on the
+    * bucket key, each bucket's members streaming through sorted by id.
+    * An `fp` column (SimHash's fingerprint) rides along as `fp_a`, `fp_b`.
+    *
+    * Buckets larger than `maxBucket` are dropped: a degenerate bucket
+    * (templated/near-empty content hashing together) would otherwise go
+    * quadratic — a recall-vs-blowup guard to size so it never triggers
+    * on healthy data. Bounds:
+    *  - at most `maxBucket + 1` members of one bucket are held; a larger
+    *    bucket emits nothing and the rest of it is skipped;
+    *  - at most `maxBucket·(maxBucket−1)/2` pairs per bucket, streamed
+    *    from an iterator, never built as a per-bucket array;
+    *  - building the plan runs no job.
+    * Nothing reports the guard's drops at run time: the declared
+    * `dedup_lsh_guard` query ([[lshGuardReportPortable]]) counts a
+    * statistically equivalent md5 bucket-size distribution, not the
+    * buckets this guard drops. Run-time drop counters are ROADMAP
+    * item 3.
+    *
+    * `dedup = false` hands the caller the raw per-bucket emissions (one
+    * row per shared bucket) to fuse the dedup into its own partitioning. */
+  private[graft] def pairsFromBuckets(memb: DataFrame, bucketCols: Seq[String],
       maxBucket: Int, dedup: Boolean = true): DataFrame = {
-    val mf = guardedBuckets(memb, bucketCols, maxBucket)
-    val raw = mf.select((col("id").as("id_a") +: bucketCols.map(col)): _*)
-      .join(mf.select((col("id").as("id_b") +: bucketCols.map(col)): _*), bucketCols)
-      .filter(col("id_a") < col("id_b"))
-      .select("id_a", "id_b")
-    // dedup=false hands the caller the RAW per-bucket emissions (one
-    // row per colliding bucket, ~11 copies per high-similarity pair at
-    // 16 bands) so it can fuse the dedup into a partitioning it needs
-    // anyway — minhashNearDups folds it into the refine's hash(id_a)
-    // clustering, saving the standalone distinct's exchange round.
+    val spark = memb.sparkSession
+    import spark.implicits._
+    val keys = bucketCols.map(col)
+    implicit val keyEnc: Encoder[Row] = Encoders.row(memb.select(keys: _*).schema)
+    // explicit N: AQE coalesces a shuffle by the bytes it reads, and this
+    // pass emits far more than that (2M docs ran it in 7 tasks, not 192)
+    val grouped = memb.repartition(org.apache.spark.sql.graftbridge.Bridge
+      .numShufflePartitions(spark), keys: _*).groupBy(keys: _*)
+    val raw =
+      if (memb.columns.contains("fp"))
+        grouped.as[Row, FpMember].flatMapSortedGroups(col("id"))((_, it) =>
+          bucketPairs(it, maxBucket)(_.id)((a, b) => FpPair(a.id, b.id, a.fp, b.fp))).toDF()
+      else
+        grouped.as[Row, Member].flatMapSortedGroups(col("id"))((_, it) =>
+          bucketPairs(it, maxBucket)(_.id)((a, b) => BucketPair(a.id, b.id))).toDF()
     if (dedup) raw.distinct() else raw
   }
 
-  /** Internal: the guarded, pre-partitioned bucket-membership cache the
-    * pair self-joins consume — shared by [[pairsFromBuckets]] (minhash)
-    * and the fused simhash refine, which needs the SAME guard/cache
-    * discipline but carries extra columns (the fingerprint) through the
-    * self-join. Keeps every column of `memb` besides the transient
-    * window count — except under `keepOversized`, where the cache also
-    * holds the rows of the buckets the guard drops, with their count
-    * `__n`, so the caller can tell which buckets those are; it must
-    * then filter `__n <= maxBucket` itself before pairing. */
-  private[operators] def guardedBuckets(memb: DataFrame, bucketCols: Seq[String],
-      maxBucket: Int, keepOversized: Boolean = false): DataFrame = {
-    // bucket-size guard via a windowed count — one shuffle on the bucket
-    // key, reused by the self-join below (no groupBy + semi-join round
-    // trip; the window needs no ordering so no sort beyond the shuffle)
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(bucketCols.map(col): _*)
-    // EXPLICIT repartition on the bucket key, not the window's implicit
-    // ENSURE_REQUIREMENTS exchange: the explicit form's partitioning
-    // (and the window sort's ordering, which is exactly the self-join's
-    // sort key) survives persist() and propagates out of the cache, so
-    // the self-join below consumes the cache CO-LOCATED AND SORTED —
-    // zero exchanges, zero sorts — where the implicit form re-shuffled
-    // and re-sorted the full membership stream on BOTH sides (2×160M
-    // rows at 10M docs; measured same-box, r15). Skew note: bypassing
-    // the join's own exchanges also bypasses AQE skew-splitting, which
-    // is safe here because the maxBucket guard bounds every bucket.
-    // explicit N (the session's configured count): an N-less column
-    // repartition is fair game for AQE coalescing, which would shrink
-    // the cache's partition count to the advisory size and with it the
-    // parallelism of everything that consumes the cache's partitioning
-    // resolved-integer API, not conf.get().toInt: the string conf can
-    // be a non-integer spelling ("auto") on some platforms
-    val shuffleP = org.apache.spark.sql.graftbridge.Bridge
-      .numShufflePartitions(memb.sparkSession)
-    val counted = memb.repartition(shuffleP, bucketCols.map(col): _*)
-      .withColumn("__n", count(lit(1)).over(w))
-    val mf = persistBounded(
-      if (keepOversized) counted.filter(col("__n") >= 2)
-      else counted.filter(col("__n") >= 2 && col("__n") <= maxBucket).drop("__n"))
-    // materialize BEFORE the self-join is planned: an unmaterialized
-    // AQE-cached plan reports unknown partitioning and the join would
-    // re-shuffle + re-sort both sides of the full membership stream.
-    // The exchange-free self-join was the measured r15 win at every
-    // scale tried (sf0.1 bench and 10M-doc Prep10M), and the arming
-    // pass reads the just-built cache, not the input.
-    mf.count()
-    mf
+  /** The pairs `i < j` with differing ids of one bucket whose `members`
+    * arrive sorted by id, or none past `maxBucket` members; an index walk
+    * boxes nothing per pair (a 4096-member bucket streams ~8M). */
+  private def bucketPairs[M, P](members: Iterator[M], maxBucket: Int)(id: M => Long)(
+      pair: (M, M) => P): Iterator[P] = {
+    val buf = members.take(maxBucket + 1).toIndexedSeq
+    val n = if (buf.size > maxBucket) 0 else buf.size
+    val ids = buf.iterator.take(n).map(id).toArray
+    new Iterator[P] {
+      private var i = -1
+      private var j = n
+      private def settle(): Unit = while (j >= n && i < n - 1) {
+        i += 1; j = i + 1
+        while (j < n && ids(j) == ids(i)) j += 1
+      }
+      settle()
+      def hasNext: Boolean = j < n
+      def next(): P = { val p = pair(buf(i), buf(j)); j += 1; settle(); p }
+    }
   }
 
   /** One-row guard report for the MinHash-LSH banding of `df`: total
@@ -548,8 +540,8 @@ object Dedup {
     val sets = shingleCache(df, idCol, textCol, shingleN)
     val raw = pairsFromBuckets(minhashBandedHashed(sets, k, bands),
       Seq("band", "band_hash"), maxBucket = 64, dedup = false)
-    // FUSED pair dedup (r16, NearDupProfile attribution: the standalone
-    // distinct was ~18 s of the 10M-doc stage): the raw emissions are
+    // FUSED pair dedup (r16: the standalone distinct was ~18 s of the
+    // 10M-doc stage): the raw emissions are
     // repartitioned on hash(id_a) — the clustering the refine's first
     // join needs anyway — and the distinct's aggregate runs WITHOUT its
     // own exchange, because HashPartitioning(id_a) satisfies the
@@ -928,9 +920,12 @@ object Dedup {
 
   /** SimHash near-dup pairs within `maxDist` hamming distance, via
     * exhaustive hamming-band bucketing — exact (recall 1 by pigeonhole)
-    * while no bucket exceeds `maxBucket`, no cross join. Above it the
-    * guard drops the bucket, and a pair is found only through a later
-    * band whose bucket it also shares.
+    * while no bucket exceeds `maxBucket`, no cross join. Emits
+    * `(id_a, id_b, hamming)` once for every pair that shares at least
+    * one surviving bucket and is within `maxDist`: the pairs of every
+    * surviving bucket ([[pairsFromBuckets]]), hamming-filtered, then
+    * distinct. Above `maxBucket` the guard drops the bucket, and a pair
+    * is found only through another band whose bucket it also shares.
     *
     * Size `bits` and `maxDist` to the corpus: [[hammingBands]] splits
     * the fingerprint into maxDist+1 bands, and a w-bit band has at most
@@ -946,52 +941,17 @@ object Dedup {
         struct(lit(i).as("band"),
           shiftright(col("fp"), off).bitwiseAND((1L << w) - 1L).as("bval"))
     }
-    // FUSED refine (r17): the 8-byte fingerprint rides the band
-    // membership through the guarded bucket cache, so the hamming check
-    // runs INSIDE the bucket self-join's output — on the raw per-band
-    // emissions, BEFORE any dedup — instead of after a distinct over
-    // the (band-count × pair) candidate stream plus two join-backs to
-    // the fingerprint frame (the pre-r17 shape: distinct's
-    // HashAgg+Exchange+HashAgg over every raw candidate, then
-    // cand⋈fp⋈fp). Exactly-once without distinct: a pair is kept only
-    // in its FIRST SURVIVING colliding band — both fingerprints are in
-    // hand, so `first_band` recomputes each band value pair in codegen
-    // and skips a band whose shared bucket the guard dropped: that
-    // band emits no row, so a pair whose first colliding bucket is
-    // oversized must be kept in a later band or it is lost. A pair's
-    // bucket in band i is (i, its band value); it holds both ids, so
-    // it survives unless it is oversized. Guard/cache discipline
-    // identical to minhash ([[guardedBuckets]]).
+    // the fingerprint rides the bucket pass: no join back to it, and a
+    // pair has one hamming value, so the distinct emits each pair once
     val memb = fp.select(col("id"), col("fp"),
         explode(array(bandCols: _*)).as("b"))
       .select(col("id"), col("fp"),
         col("b.band").as("band"), col("b.bval").as("bval"))
-    val cached = guardedBuckets(memb, Seq("band", "bval"), maxBucket,
-      keepOversized = true)
-    // the dropped buckets: at most rows/maxBucket per band, read from
-    // the materialized cache (partitioned on the bucket, so the
-    // distinct adds no exchange) — empty on healthy data
-    val dropped: Map[Int, Seq[Long]] = cached
-      .filter(col("__n") > maxBucket).select("band", "bval").distinct()
-      .collect().toSeq.groupMap(_.getInt(0))(_.getLong(1))
-    val mf = cached.filter(col("__n") <= maxBucket).drop("__n")
-    val firstBand = coalesce(bands.zipWithIndex.map { case ((off, w), i) =>
-      val m = (1L << w) - 1L
-      val va = shiftright(col("fp_a"), off).bitwiseAND(m)
-      val collides = va === shiftright(col("fp_b"), off).bitwiseAND(m)
-      when(dropped.get(i).fold(collides)(vs => collides && !va.isin(vs: _*)),
-        lit(i))
-    }: _*)
-    mf.select(col("id").as("id_a"), col("fp").as("fp_a"),
-        col("band"), col("bval"))
-      .join(mf.select(col("id").as("id_b"), col("fp").as("fp_b"),
-        col("band"), col("bval")), Seq("band", "bval"))
-      .filter(col("id_a") < col("id_b"))
+    pairsFromBuckets(memb, Seq("band", "bval"), maxBucket, dedup = false)
       .select(col("id_a"), col("id_b"),
-        hammingDist(col("fp_a"), col("fp_b")).as("hamming"),
-        col("band"), firstBand.as("__fb"))
-      .filter(col("hamming") <= maxDist && col("band") === col("__fb"))
-      .select("id_a", "id_b", "hamming")
+        hammingDist(col("fp_a"), col("fp_b")).as("hamming"))
+      .filter(col("hamming") <= maxDist)
+      .distinct()
   }
 
   /** Cross-document REPEATED-SUBSTRING spans — the dedup step document-

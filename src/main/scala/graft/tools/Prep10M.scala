@@ -5,14 +5,14 @@ import org.apache.spark.sql.functions._
 
 import graft.operators.{Dedup, Packing, Sampling, TextAnalysis}
 
-/** End-to-end corpus prep at 10M documents — the full
-  * `pipeline_docprep` + split + decontamination + packing chain at 10×
-  * the largest ScaleBench stage, with every stage's output count
-  * REQUIRE'd against its closed-form expectation (the corpus is
+/** End-to-end corpus prep at n documents (10M by default) — the full
+  * `pipeline_docprep` + split + decontamination + packing chain, at the
+  * default 10× the largest ScaleBench stage, with every stage's output
+  * count REQUIRE'd against its closed-form expectation (the corpus is
   * constructed so each stage's result is exactly computable — a probe
   * that only prints seconds can silently measure a broken pipeline).
   *
-  * Corpus: 1M templates × 10 docs of 25 words (5000-word hashed
+  * Corpus: n/10 templates × 10 docs of 25 words (5000-word hashed
   * vocabulary). Per template: docs 0-4 share a 23-word prefix and
   * differ in the last 2 words (pairwise 3-shingle Jaccard 21/25 = 0.84
   * — near-dups above the 0.5 gate); docs 5-8 take words 13-24 from
@@ -21,24 +21,32 @@ import graft.operators.{Dedup, Packing, Sampling, TextAnalysis}
   * so the exact-Jaccard refine genuinely rejects ~21 pairs per
   * template, but never dups; a missed clique pair is (1-0.84²)^16
   * ≈ 4e-9, and the fixed hash seeds make the outcome deterministic —
-  * measured exactly 10M pairs); doc 9 is a byte-exact copy of doc 8. Cross-template 8-word grams collide only on an md5-level
+  * measured exactly 10M pairs at n = 10M); doc 9 is a byte-exact copy
+  * of doc 8. Cross-template 8-word grams collide only on an md5-level
   * accident (~0 at 5000^8), so the expectations are exact:
   *
-  *   quality pass      10,000,000 (25 tokens ≥ 20)
-  *   exact-dedup kept   9,000,000 (doc 9 drops)
-  *   near-dup pairs    10,000,000 (C(5,2) per template)
-  *   components         1,000,000 (one 5-clique per template)
-  *   kept               5,000,000 (docs 0,5,6,7,8)
-  *   cross-split pairs          0 (splits bucket the component REP)
-  *   contaminated          40,000 (kept docs 5-8 of the 10k templates
-  *                                 whose doc 0 is benchmark, 8-grams)
-  *   packed             5,000,000 rows into 2048-token shards
+  *   stage              count      at n = 10M
+  *   quality pass       n          10,000,000 (25 tokens ≥ 20)
+  *   exact-dedup kept   0.9n        9,000,000 (doc 9 drops)
+  *   near-dup pairs     n          10,000,000 (C(5,2) per template)
+  *   components         n/10        1,000,000 (one 5-clique per template)
+  *   kept               n/2         5,000,000 (docs 0,5,6,7,8)
+  *   cross-split pairs  0                   0 (splits bucket the component REP)
+  *   contaminated       n/250          40,000 (kept docs 5-8 of the n/1000
+  *                                             templates whose doc 0 is
+  *                                             benchmark, 8-grams)
+  *   packed             n/2         5,000,000 rows into 2048-token shards
   *
   * Prints one JSON line with per-stage seconds + the verified counts.
-  * Run: `sbt "runMain graft.tools.Prep10M"` (~8 GiB heap, 32 threads).
+  * Run: `sbt "runMain graft.tools.Prep10M [nDocs]"` — `nDocs` a
+  * positive multiple of 1,000, default 10,000,000 (~8 GiB heap, 32
+  * threads at the default).
   */
 object Prep10M {
   def main(args: Array[String]): Unit = {
+    val docsN = args.headOption.fold(10000000L)(_.toLong)
+    require(docsN > 0 && docsN % 1000 == 0,
+      s"nDocs must be a positive multiple of 1,000, got $docsN")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
@@ -125,7 +133,6 @@ object Prep10M {
       try f finally spark.conf.set("spark.sql.shuffle.partitions", prev)
     }
 
-    val docsN = 10000000L
     val docs = CliqueCorpus.docs(spark.range(docsN).toDF("id"))
 
     // ONE generation pass computes BOTH the quality signal and the
@@ -169,7 +176,7 @@ object Prep10M {
       meta.unpersist(false) // digest cache is dead once survivors exist
       n
     })
-    require(nExact == 9000000L, s"exact dedup kept: $nExact")
+    require(nExact == docsN / 10 * 9, s"exact dedup kept: $nExact")
 
     // the operator call sits INSIDE the heavy wrap: the eager
     // shingle-cache stage split runs at call time
@@ -179,7 +186,7 @@ object Prep10M {
         .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
       (p, p.count())
     })
-    require(nPairs == 10000000L, s"near-dup pairs: $nPairs")
+    require(nPairs == docsN, s"near-dup pairs: $nPairs")
 
     // CC's rounds materialize at call time — wrapped with its
     // action so the LOOP is inside the measurement (r12's cc_sec only
@@ -195,7 +202,7 @@ object Prep10M {
         .distinct().count()
       (l, n)
     })
-    require(nComp == 1000000L, s"non-trivial components: $nComp")
+    require(nComp == docsN / 10, s"non-trivial components: $nComp")
 
     // keep the component rep (min id — doc 0 of each clique), drop the
     // other members; singletons keep themselves
@@ -203,7 +210,7 @@ object Prep10M {
       .select(col("id"), col("cluster_rep"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     val (nKept, tKept) = timed(withP(lightP)(kept.count()))
-    require(nKept == 5000000L, s"kept after near-dedup: $nKept")
+    require(nKept == docsN / 2, s"kept after near-dedup: $nKept")
 
     // leakage-safe split: bucket the component REP, so any two docs of
     // one near-dup family can never straddle a split boundary
@@ -242,7 +249,7 @@ object Prep10M {
           col("id") % 1000 === 0, 8, expectedBenchGrams = 200000L)
         .filter(col("contaminated")).count()
     })
-    require(nContam == 40000L, s"contaminated kept docs: $nContam")
+    require(nContam == docsN / 250, s"contaminated kept docs: $nContam")
 
     val (packStats, tPack) = timed(withP(lightP) {
       Packing.packByBudget(
@@ -251,7 +258,7 @@ object Prep10M {
         .agg(count(lit(1)).as("n"), max("shard").as("maxShard"))
         .collect().map(r => (r.getLong(0), r.getLong(1))).head
     })
-    require(packStats._1 == 5000000L, s"packed rows: ${packStats._1}")
+    require(packStats._1 == docsN / 2, s"packed rows: ${packStats._1}")
 
     val sc = splitCounts.withDefaultValue(0L)
     println(s"""{"metric":"prep_10m","docs":$docsN,""" +

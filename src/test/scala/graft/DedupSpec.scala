@@ -1,6 +1,7 @@
 package graft
 
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
 import org.apache.spark.sql.execution.{SortExec, SparkPlan}
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
@@ -328,7 +329,6 @@ class DedupSpec extends SparkSpec {
     // anyway; (2) every refine-family SMJ still has an exchange-free,
     // sort-free cache side (the r15 layout contract, now across the
     // bitmap-prescreen joins too).
-    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     val abt = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
@@ -576,6 +576,73 @@ class DedupSpec extends SparkSpec {
     assert(got.toSet == expect)
   }
 
+  test("pairsFromBuckets pairs buckets of 2 to maxBucket members, as a self-join does") {
+    val maxBucket = 4
+    // (key, member ids): sizes 1, 2, maxBucket and maxBucket + 1, a
+    // bucket repeating an id, and the maxBucket + 1 bucket's ids in no
+    // other bucket, so its drop shows
+    val twoCol = Seq[(Seq[Int], Seq[Long])](
+      Seq(0, 10) -> Seq(1L),
+      Seq(0, 11) -> Seq(3L, 2L),
+      Seq(1, 10) -> Seq(203L, 200L, 202L, 201L),
+      Seq(1, 11) -> Seq(100L, 104L, 101L, 103L, 102L),
+      Seq(2, 10) -> Seq(5L, 6L, 5L))
+    // Ann's (cluster, band, bval) key: one (band, bval) in two clusters
+    val threeCol = Seq[(Seq[Int], Seq[Long])](
+      Seq(0, 0, 7) -> Seq(1L, 2L, 3L, 4L),
+      Seq(1, 0, 7) -> Seq(5L, 6L),
+      Seq(2, 0, 7) -> Seq(7L, 8L, 9L, 10L, 11L),
+      Seq(3, 0, 7) -> Seq(12L))
+    def brute(buckets: Seq[(Seq[Int], Seq[Long])]): Seq[(Long, Long)] =
+      buckets.map(_._2).filter(m => m.size >= 2 && m.size <= maxBucket)
+        .flatMap(m => for (x <- m; y <- m if x < y) yield (x, y)).sorted
+    def memb(buckets: Seq[(Seq[Int], Seq[Long])], cols: Seq[String]): DataFrame =
+      buckets.flatMap { case (k, ids) => ids.map(id => (id, k)) }
+        .toDF("id", "k")
+        .select((col("id") +: cols.indices.map(i => col("k")(i).as(cols(i)))): _*)
+    val raws = Seq(twoCol -> Seq("band", "bval"),
+        threeCol -> Seq("cluster", "band", "bval")).map { case (buckets, cols) =>
+      val m = memb(buckets, cols)
+      val raw = Dedup.pairsFromBuckets(m, cols, maxBucket, dedup = false)
+        .select("id_a", "id_b").as[(Long, Long)].collect().sorted.toSeq
+      assert(raw == brute(buckets), cols)
+      val deduped = Dedup.pairsFromBuckets(m, cols, maxBucket)
+        .select("id_a", "id_b").as[(Long, Long)].collect()
+      assert(deduped.sorted.toSeq == brute(buckets).distinct, cols)
+      // a fingerprint column rides the pass with its member
+      val fps = Dedup.pairsFromBuckets(m.withColumn("fp", col("id") * 31), cols,
+          maxBucket, dedup = false)
+        .select("id_a", "id_b", "fp_a", "fp_b").as[(Long, Long, Long, Long)]
+        .collect()
+      assert(fps.map(p => (p._1, p._2)).sorted.toSeq == brute(buckets), cols)
+      assert(fps.forall(p => p._3 == p._1 * 31 && p._4 == p._2 * 31), cols)
+      raw
+    }
+    assert(raws(0).count(_._1 >= 200) == 6, "the maxBucket bucket pairs fully")
+    assert(!raws(0).exists(p => p._1 >= 100 && p._1 < 200),
+      "the maxBucket + 1 bucket emits nothing")
+    assert(raws(0).count(_ == (5L, 6L)) == 2, "a repeated id pairs per copy")
+    assert(raws(1).size == 6 + 1, "no pair across clusters")
+  }
+
+  test("building simhashNearDups runs no Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.graftbridge.Bridge
+    val df = docs.toDF("doc_id", "text")
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    Bridge.drainListenerBus(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      val out = Dedup.simhashNearDups(df, "doc_id", "text", maxDist = 6, bits = 48)
+      out.queryExecution.executedPlan
+      Bridge.drainListenerBus(spark.sparkContext)
+      assert(jobs.get == 0)
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
   test("connectedComponents converges on a 1000-vertex path graph") {
     // worst case for plain min-label propagation (diameter 999): the
     // Large-Star/Small-Star rounds must close it within the default
@@ -701,9 +768,10 @@ class DedupSpec extends SparkSpec {
     // The cache registry must not evict an earlier handle by
     // unpersisting it: CacheManager matches by plan, so that would
     // uncache the frame the current call just persisted, and from then
-    // on every id-keyed refine join and bucket self-join would
-    // re-shuffle and re-sort its cache side. Eight calls cover the
-    // registry's six slots for the one- and two-frame callers. Same
+    // on every id-keyed refine join would re-shuffle and re-sort its
+    // cache side. Eight calls cover the registry's six slots. The
+    // bucket pairs come from one grouped pass: no sort-merge join on
+    // the bucket key, and exactly one exchange keyed on it. Same
     // AQE-off, broadcast-off contract as the layout tests above.
     val aqe = spark.conf.get("spark.sql.adaptive.enabled")
     val abt = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
@@ -713,7 +781,7 @@ class DedupSpec extends SparkSpec {
       val df = docs.toDF("doc_id", "text")
       val jaccard = naiveJaccardPairs(3, 0.5)
       val simhash = naiveSimhashPairs(maxDist = 6, bits = 48)
-      // (name, call, expected pairs, id-keyed joins, bucket self-join key)
+      // (name, call, expected pairs, id-keyed joins, bucket key)
       val callers = Seq[(String, () => DataFrame,
           Set[(Long, Long)], Int, Option[String])](
         ("minhashNearDups",
@@ -735,9 +803,18 @@ class DedupSpec extends SparkSpec {
           val plan = out.queryExecution.executedPlan
           val idJoins = joinsOn(plan, "id_a", "id_b")
           assert(idJoins.size == nIdJoins, s"$name call $i:\n$plan")
-          val bucketJoins = joinsOn(plan, bucketKey.toSeq: _*)
-          assert(bucketJoins.size == bucketKey.size, s"$name call $i:\n$plan")
-          (idJoins ++ bucketJoins).foreach { j =>
+          bucketKey.foreach { key =>
+            assert(joinsOn(plan, key).isEmpty, s"$name call $i:\n$plan")
+            val keyed = plan.collect {
+              case e: ShuffleExchangeExec if (e.outputPartitioning match {
+                case h: HashPartitioning =>
+                  h.expressions.exists(_.toString.contains(key))
+                case _ => false
+              }) => e
+            }
+            assert(keyed.size == 1, s"$name call $i:\n$plan")
+          }
+          idJoins.foreach { j =>
             assert(hasCleanCacheSide(j),
               s"$name call $i: join has no exchange-free, sort-free cache side:\n$j")
           }
@@ -758,8 +835,8 @@ class DedupSpec extends SparkSpec {
     def samePlan(a: DataFrame, b: DataFrame) =
       a.queryExecution.analyzed.sameResult(b.queryExecution.analyzed)
     spark.catalog.clearCache()
-    // seven calls on distinct inputs (ids shifted per call), two
-    // registry frames each: more than the registry may keep
+    // seven calls on distinct inputs (ids shifted per call), one
+    // registry frame each: more than the registry may keep
     def input(k: Int) = docs.map { case (id, t) => (id + 100L * k, t) }
       .toDF("doc_id", "text")
     val seen = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
@@ -770,8 +847,8 @@ class DedupSpec extends SparkSpec {
       newest = Dedup.retainedFrames(spark).filterNot(f => before.exists(_ eq f))
       seen ++= newest
     }
-    assert(newest.size == 2)
-    assert(seen.size == 14)
+    assert(newest.size == 1)
+    assert(seen.size == 7)
     val retained = Dedup.retainedFrames(spark)
     assert(retained.size <= Dedup.maxRetainedCaches)
     assert(seen.count(cached) <= Dedup.maxRetainedCaches)
