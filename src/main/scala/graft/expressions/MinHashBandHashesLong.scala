@@ -25,8 +25,8 @@ import org.apache.spark.sql.types._
   * Why it exists (r14 near-dup profile): the two-step form pays an
   * interpreted per-band lambda, a `slice` ArrayData allocation per
   * band, and a boxed k-int signature array per document — none of
-  * which survive this fusion. The banding stage of the 10M-doc
-  * pipeline is the single largest compute block left in Prep10M.
+  * which survive this fusion. The banding stage is the single largest
+  * compute block left in ScaleBench's `prep=10000000` stage.
   */
 case class MinHashBandHashesLong(child: Expression, k: Int, bands: Int)
   extends UnaryExpression with CodegenFallback {

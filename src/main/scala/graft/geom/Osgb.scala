@@ -72,77 +72,17 @@ object Osgb {
       tz - ry * x + rx * y + s1 * z)
   }
 
-  /** Meridional arc M (OS guide eq. C3), Airy, from lat0 to `lat`. */
-  private def meridionalArc(lat: Double): Double = {
-    val n = (aA - bA) / (aA + bA)
-    val n2 = n * n; val n3 = n2 * n
-    val dphi = lat - lat0; val sphi = lat + lat0
-    bA * F0 * (
-      (1.0 + n + 1.25 * n2 + 1.25 * n3) * dphi
-        - (3.0 * n + 3.0 * n2 + (21.0 / 8.0) * n3) * math.sin(dphi) * math.cos(sphi)
-        + ((15.0 / 8.0) * (n2 + n3)) * math.sin(2.0 * dphi) * math.cos(2.0 * sphi)
-        - (35.0 / 24.0) * n3 * math.sin(3.0 * dphi) * math.cos(3.0 * sphi))
-  }
+  /** The National Grid's transverse Mercator on Airy 1830 (OS guide
+    * eqs. C3-C9). */
+  private val tm = Crs.Tm(aA, bA, F0, lat0, lon0, E0, N0)
 
   /** Transverse Mercator forward: Airy 1830 geodetic (radians) → (E, N).
-    * OS guide eqs. C4-C5. Public so the worked-example test can hit the
-    * projection step in isolation. */
-  def tmForward(lat: Double, lon: Double): (Double, Double) = {
-    val sinL = math.sin(lat); val cosL = math.cos(lat); val tanL = math.tan(lat)
-    val nu = aA * F0 / math.sqrt(1.0 - e2A * sinL * sinL)
-    val rho = aA * F0 * (1.0 - e2A) * math.pow(1.0 - e2A * sinL * sinL, -1.5)
-    val eta2 = nu / rho - 1.0
-    val m = meridionalArc(lat)
-    val i1 = m + N0
-    val ii = nu / 2.0 * sinL * cosL
-    val iii = nu / 24.0 * sinL * math.pow(cosL, 3) *
-      (5.0 - tanL * tanL + 9.0 * eta2)
-    val iiia = nu / 720.0 * sinL * math.pow(cosL, 5) *
-      (61.0 - 58.0 * tanL * tanL + math.pow(tanL, 4))
-    val iv = nu * cosL
-    val v = nu / 6.0 * math.pow(cosL, 3) * (nu / rho - tanL * tanL)
-    val vi = nu / 120.0 * math.pow(cosL, 5) *
-      (5.0 - 18.0 * tanL * tanL + math.pow(tanL, 4) +
-        14.0 * eta2 - 58.0 * tanL * tanL * eta2)
-    val dl = lon - lon0
-    val nOut = i1 + ii * dl * dl + iii * math.pow(dl, 4) + iiia * math.pow(dl, 6)
-    val eOut = E0 + iv * dl + v * math.pow(dl, 3) + vi * math.pow(dl, 5)
-    (eOut, nOut)
-  }
+    * Public so the worked-example test can hit the projection step in
+    * isolation. */
+  def tmForward(lat: Double, lon: Double): (Double, Double) = tm.forward(lat, lon)
 
-  /** Transverse Mercator inverse: (E, N) → Airy 1830 geodetic (radians).
-    * OS guide eqs. C6-C9. */
-  def tmInverse(e: Double, n: Double): (Double, Double) = {
-    var latP = lat0 + (n - N0) / (aA * F0)
-    var m = meridionalArc(latP)
-    var i = 0
-    while (math.abs(n - N0 - m) >= 0.00001 && i < 30) {
-      latP += (n - N0 - m) / (aA * F0)
-      m = meridionalArc(latP)
-      i += 1
-    }
-    val sinL = math.sin(latP); val tanL = math.tan(latP)
-    val secL = 1.0 / math.cos(latP)
-    val nu = aA * F0 / math.sqrt(1.0 - e2A * sinL * sinL)
-    val rho = aA * F0 * (1.0 - e2A) * math.pow(1.0 - e2A * sinL * sinL, -1.5)
-    val eta2 = nu / rho - 1.0
-    val t2 = tanL * tanL; val t4 = t2 * t2; val t6 = t4 * t2
-    val vii = tanL / (2.0 * rho * nu)
-    val viii = tanL / (24.0 * rho * math.pow(nu, 3)) *
-      (5.0 + 3.0 * t2 + eta2 - 9.0 * t2 * eta2)
-    val ix = tanL / (720.0 * rho * math.pow(nu, 5)) *
-      (61.0 + 90.0 * t2 + 45.0 * t4)
-    val x10 = secL / nu
-    val xi = secL / (6.0 * math.pow(nu, 3)) * (nu / rho + 2.0 * t2)
-    val xii = secL / (120.0 * math.pow(nu, 5)) * (5.0 + 28.0 * t2 + 24.0 * t4)
-    val xiia = secL / (5040.0 * math.pow(nu, 7)) *
-      (61.0 + 662.0 * t2 + 1320.0 * t4 + 720.0 * t6)
-    val de = e - E0
-    val lat = latP - vii * de * de + viii * math.pow(de, 4) - ix * math.pow(de, 6)
-    val lon = lon0 + x10 * de - xi * math.pow(de, 3) +
-      xii * math.pow(de, 5) - xiia * math.pow(de, 7)
-    (lat, lon)
-  }
+  /** Transverse Mercator inverse: (E, N) → Airy 1830 geodetic (radians). */
+  def tmInverse(e: Double, n: Double): (Double, Double) = tm.inverse(e, n)
 
   /** WGS84 (lat, lon degrees) → OSGB36 National Grid (E, N metres). */
   def wgs84ToOsgb(latDeg: Double, lonDeg: Double): (Double, Double) = {

@@ -334,15 +334,16 @@ object Hdf5 {
 
   private def inflateBytes(in: Array[Byte], outLen: Int): Array[Byte] = {
     val inf = new java.util.zip.Inflater()
-    inf.setInput(in)
     val out = new Array[Byte](outLen)
     var off = 0
-    while (off < outLen && !inf.finished()) {
-      val n = inf.inflate(out, off, outLen - off)
-      require(n > 0 || inf.finished(), "truncated deflate stream")
-      off += n
-    }
-    inf.end()
+    try { // finally-end: a throwing decode must not leak native zlib state
+      inf.setInput(in)
+      while (off < outLen && !inf.finished()) {
+        val n = inf.inflate(out, off, outLen - off)
+        require(n > 0 || inf.finished(), "truncated deflate stream")
+        off += n
+      }
+    } finally inf.end()
     require(off == outLen, s"deflate chunk: got $off of $outLen bytes")
     out
   }

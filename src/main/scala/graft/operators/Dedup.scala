@@ -503,10 +503,10 @@ object Dedup {
     * in-memory sort to starve. So the extra stage (a flat ~0.1-0.15 s
     * per call at sf0.1 — measured same-JVM A/B, r12) is paid only when
     * the failure mode it prevents can exist, and big-partition
-    * pipelines like `tools/Prep10M` keep the contract automatically if
+    * pipelines like ScaleBench's `prep` stage keep the contract automatically if
     * they ever raise their partition count past the threshold.
     * The session conf `spark.graft.eagerShingleCache=true|false`
-    * overrides the gate (Prep10M sets it true: at a 4 GiB heap even
+    * overrides the gate (the `prep` stage sets it true: at a 4 GiB heap even
     * the bypass writer's map stage benefits from not sharing its
     * working set with the cache unroll); any other value throws. */
   private[graft] def eagerShingleCacheDefault(spark: SparkSession): Boolean =

@@ -346,9 +346,7 @@ private[sources] object GridFile {
     * (time, y, x) convention, dimension names from
     * `_ARRAY_DIMENSIONS`, 1-D coordinate arrays named like their
     * dimension. Slab reads gather the chunks intersecting one time
-    * row — chunks of pruned time rows are never opened — with a
-    * one-entry chunk memo so consecutive slabs of the same time-chunk
-    * inflate it once. */
+    * row — chunks of pruned time rows are never opened. */
   private final class Zr(dir: String) extends GridFile {
     private val m = Zarr.meta(dir)
     private val dataAm = m.arrays.find(_.shape.length == 3)
@@ -367,23 +365,13 @@ private[sources] object GridFile {
       axisOrDefault(coordData(yName, ny), ny),
       axisOrDefault(coordData(xName, nx), nx))
 
-    private var memoKey: Seq[Int] = null
-    private var memoChunk: Array[Double] = null
-    private def chunk(idx: Seq[Int]): Array[Double] = {
-      if (idx != memoKey) {
-        memoChunk = Zarr.readChunkDouble(dir, dataAm, idx)
-        memoKey = idx
-      }
-      memoChunk
-    }
-
     def readSlab(t: Int): Array[Double] = {
       val Seq(c0, c1, c2) = dataAm.chunks
       val Seq(_, nCy, nCx) = dataAm.nChunks
       val tin = t % c0
       val out = new Array[Double](ny * nx)
       for (cy <- 0 until nCy; cx <- 0 until nCx) {
-        val ch = chunk(Seq(t / c0, cy, cx))
+        val ch = Zarr.readChunkDouble(dir, dataAm, Seq(t / c0, cy, cx))
         val liveY = math.min(c1, ny - cy * c1)
         val liveX = math.min(c2, nx - cx * c2)
         var yy = 0

@@ -3,8 +3,8 @@ package graft.tools
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
-/** THE synthetic clique corpus shared by [[Prep10M]] and
-  * [[RetryProbe]] — one definition, because both tools'
+/** THE synthetic clique corpus shared by ScaleBench's `prep` stage and
+  * [[RetryProbe]] — one definition, because both
   * closed-form REQUIREs (pairs per template, survivor counts,
   * contamination counts) are derived from this exact construction and
   * must not drift apart.

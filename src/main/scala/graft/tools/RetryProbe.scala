@@ -45,7 +45,7 @@ object RetryProbe {
 
     val docsN = 500000L
 
-    // Prep10M's corpus shape at half scale: 50k 5-cliques of near-dups
+    // the ScaleBench prep corpus at half its 1M default: 50k 5-cliques of near-dups
     def corpus(injectSource: Boolean): DataFrame = {
       val ids0 = spark.range(docsN)
       val ids =

@@ -31,7 +31,7 @@ class SwitchGuardSpec extends AnyFunSuite {
   /** Harness variables are read only by the runnable mains. */
   private def harnessFile(rel: String): Boolean =
     Set("Bench.scala", "BenchOne.scala", "Verify.scala", "ScaleBench.scala")
-      .contains(rel) || rel.startsWith("examples/") || rel.startsWith("tools/")
+      .contains(rel) || rel.startsWith("tools/")
 
   private def harnessKey(key: String): Boolean =
     key.startsWith("SPARK_GRAFT_") || key == "SPARK_MASTER"
